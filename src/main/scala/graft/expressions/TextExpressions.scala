@@ -15,9 +15,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * with boxed indices, which dominates the shingle stage of the
   * MinHash/Jaccard dedup family the same way the HOF dot product
   * dominated vector scoring before VecDot. This generates a tight
-  * two-level loop instead. TextFns.shinglesOfTokensHof stays as the
-  * differential-testing twin (TextExpressionsSpec asserts identical
-  * output).
+  * two-level loop instead. The HOF formulation stays in
+  * TextAnalysisSpec as the differential-testing twin (the spec
+  * asserts identical output).
   *
   * Semantics (mirrors the HOF version and the DuckDB oracle):
   *  - fewer than `n` tokens → empty array;

@@ -53,25 +53,16 @@ object TextFns {
 
   /** Sliding word n-gram shingles from a PRE-PROJECTED token array
     * column — a native codegen'd expression (TokenShingles): the HOF
-    * formulation below is CodegenFallback and dominated the dedup
-    * shingle stage. Callers should still materialize the tokens into
-    * a real column first so upstream `split` runs once per row.
+    * formulation (TextAnalysisSpec's differential-testing twin) is
+    * CodegenFallback and dominated the dedup shingle stage. Callers
+    * should still materialize the tokens into a real column first so
+    * upstream `split` runs once per row.
     */
   def shinglesOfTokens(toks: Column, n: Int): Column = {
     import org.apache.spark.sql.graftshim.ColumnShim
     ColumnShim.column(
       graft.expressions.TokenShingles(ColumnShim.expression(toks), n))
   }
-
-  /** HOF twin of `shinglesOfTokens` — differential-testing reference
-    * only (TextAnalysisSpec asserts identical output).
-    */
-  def shinglesOfTokensHof(toks: Column, n: Int): Column =
-    when(size(toks) >= n,
-      transform(
-        sequence(lit(1), size(toks) - (n - 1)),
-        i => concat_ws(" ", (0 until n).map(j => element_at(toks, i + lit(j))): _*)))
-      .otherwise(array().cast("array<string>"))
 
   /** Convenience (slow-path) shingles straight from text; fine for
     * specs and small frames, use shinglesOfTokens + pre-projection in

@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions._
   * inside WholeStageCodegen. The builtin higher-order functions they
   * replace (`zip_with` + `aggregate`) are CodegenFallback — an
   * interpreted, boxing lambda per element — and were the hot-path
-  * bottleneck of every brute-force scoring query. `dotHof` keeps the
-  * HOF formulation as the differential-testing twin (see
-  * VectorFnsSpec: both must agree bit-for-bit).
+  * bottleneck of every brute-force scoring query. VectorFnsSpec keeps
+  * the HOF formulation as the differential-testing twin (both must
+  * agree bit-for-bit).
   * Capability mirror of the reference's dense similarity math
   * (reference: backend/app/core/vector_store.py:604 cosine sim,
   * backend/app/core/recommender.py:418 _cosine_similarity).
@@ -35,13 +35,6 @@ object VectorFns {
 
   def normSq(a: Column): Column =
     ColumnShim.column(VecNormSq(ColumnShim.expression(a)))
-
-  /** HOF twin of `dot` — differential-testing reference only. */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0),
-      (acc, x) => acc + x)
 
   def l2Norm(a: Column): Column = sqrt(normSq(a))
 

@@ -925,7 +925,7 @@ object Dedup {
     * with the corpus (keep n/k comfortably under `maxCell`) or the
     * size prune silently empties the result — cells past the cap
     * emit no pairs by design. Ground truth at the sf1 probe
-    * (SemProbe): k=64 over 20k vectors recovers 17,989/18,000
+    * (r12): k=64 over 20k vectors recovers 17,989/18,000
     * planted near-dups (89.95% vs the 90% ideal) in 9.7 s; the
     * misses are replicas split across cell boundaries, the
     * documented SemDeDup blocking trade.

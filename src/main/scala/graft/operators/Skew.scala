@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * keys (the classic 100 TB failure mode: one reducer gets the hot
   * key's entire partition while the rest idle).
   *
-  * Measured guidance (SkewProbe, r13 + r18 correction): AQE's
+  * Measured guidance (r13 + r18 correction, sf1 hot-key probe): AQE's
   * skew-join split is the FIRST tool for join-side hot keys — when
   * it fires, it beats explicit salting outright (no dim replication,
   * no wider shuffle; probe: unsplit 8.1 s → split 2.5-3.8 s vs

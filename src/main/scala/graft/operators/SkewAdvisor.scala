@@ -10,7 +10,7 @@ import org.apache.spark.sql.graftshim.ShuffleStatsShim
   * of guesswork — the shipped form of [[Skew]]'s r18 doctrine.
   *
   * AQE splits a skewed sort-merge partition only when BOTH
-  * preconditions hold, and both fail SILENTLY (SkewProbe, r18):
+  * preconditions hold, and both fail SILENTLY (r18 sf1 hot-key probe):
   *
   *  1. the partition's COMPRESSED map-output bytes exceed
   *     `spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes`

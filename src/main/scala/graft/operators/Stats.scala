@@ -369,9 +369,10 @@ object Stats {
       // ONE aggregate + ONE exchange per round (r22): the plurality
       // argmax with ties-to-smallest is exactly
       // mode(label, deterministic = true) — highest count, ties break
-      // to the lowest value (ModeProbe pins the semantics on this
-      // build, incl. negative labels; LpaSpec asserts equality with
-      // the two-level count→max(struct) shape on a tie-heavy graph).
+      // to the lowest value (StatsSpec's "r22 fused LPA round" case
+      // pins the semantics on this build, incl. negative labels, and
+      // asserts equality with the two-level count→max(struct) shape
+      // on a tie-heavy frame).
       // The previous count-by-(src,label) → argmax-by-(src) pair paid
       // two exchanges per round; Mode's partial buffers are per-src
       // label-count maps, so the map-side combine the first aggregate
@@ -418,7 +419,8 @@ object Stats {
     //    is splittable by AQE — the exact mitigation WindowExec
     //    cannot have. Use for dup-cluster-style graphs where one
     //    community can hold a constant fraction of the corpus
-    //    (LpaProbe measures the straggler delta).
+    //    (r19, 8 M-node star + 800 k background pairs, min-of-3:
+    //    window 25.1 s vs join 20.1 s, checksums identical).
     //  - "auto" (r20): DATA-DERIVED pick between the two. The join
     //    path's own build side — the map-side-combined
     //    groupBy(label).count — is aggregated once more to its max
@@ -427,7 +429,8 @@ object Stats {
     //    decision job is in character). A max community at or above
     //    `autoJoinThreshold` rows picks "join" (past ~1 M buffered
     //    rows the window's un-splittable straggler task dominates —
-    //    LpaProbe's 8 M-node star measures the delta); below it,
+    //    r20 on the 8 M-node star: auto picked join at 34.2 s vs
+    //    window 37.3 s / join 32.9 s); below it,
     //    "window" (one exchange, no join, right for panel-sized
     //    communities). The threshold is a row count, not bytes,
     //    because WindowExec's buffer cost is per-row.

@@ -13,7 +13,7 @@ import graft.Sessions
   * benched at the width every per-dimension constant actually scales
   * with: codebook broadcast size (×d), per-row fold cost (×d), PQ
   * subspace width d/m, SQ8 range rows (×d). NOT part of the library
-  * surface — the output is a Bench/BenchOne input, never an oracle
+  * surface — the output is a Bench/ProfileAll input, never an oracle
   * input (correctness stays bound to the driver's testdata at d=64).
   *
   * Widening = deterministic tile + per-(vec_id, tile, component)

@@ -143,8 +143,8 @@ class PlanAuditSpec extends SparkSpec {
     // window fails structurally, and every whitelisted query's
     // windows must measure under the documented bound (via the
     // executed plan's row metrics / static limit nodes — see
-    // PlanWalk.windowInputRows). Bounds were measured with
-    // WindowProbe at sf0.001 AND sf0.01 (identical values at 10× the
+    // PlanWalk.windowInputRows). Bounds were measured over every
+    // query at sf0.001 AND sf0.01 (identical values at 10× the
     // corpus — that flatness is the corpus-independence evidence);
     // each carries ~2× headroom over the measurement, far below any
     // corpus table's cardinality.

@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.window.WindowExec
 
 /** Shared AQE-aware physical-plan traversal for plan audits (used by
-  * PlanAuditSpec and the BenchOne reproducer — ONE copy so a new AQE
+  * PlanAuditSpec and the ProfileAll tool — ONE copy so a new AQE
   * node type fixed here can't desynchronize the test from the tool).
   */
 object PlanWalk {

@@ -1,14 +1,19 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions.{col, sum, xxhash64}
+import org.apache.spark.sql.graftshim.ListenerBusShim
 
-/** Dev harness (round-21 optimization): split every declared query's
-  * bench wall into ANALYSIS (plan build + optimize + physical plan)
-  * vs EXECUTION, and count jobs / stages / tasks / shuffle bytes per
-  * query, so optimization effort lands where the time actually goes.
-  * Mirrors Bench's methodology (checksum action, clearCache + GC
-  * between runs, one discarded warm-up).
+/** The one diagnostics tool: split every declared query's bench wall
+  * into ANALYSIS (plan build + optimize + physical plan) vs EXECUTION,
+  * count jobs / stages / tasks / shuffle bytes per query, and audit
+  * the AQE final plan with the shared [[PlanWalk]] rules PlanAuditSpec
+  * pins — the number of broadcast exchanges, and whether any of them
+  * builds from a RAW `lineitem` scan (the shape that inverts a join
+  * once the fact side outgrows the broadcast threshold). Mirrors
+  * Bench's methodology (checksum action, clearCache + GC between
+  * runs, one discarded warm-up).
   *
   *   sbt "Test/runMain graft.ProfileAll [query ...]"
   */
@@ -35,10 +40,14 @@ object ProfileAll {
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = tasks += 1
     }
     spark.sparkContext.addSparkListener(listener)
+    // listener events arrive asynchronously: drain the bus before a
+    // reset and before a read, so no query's events count for another
+    def flushBus(): Unit = ListenerBusShim.flush(spark.sparkContext): Unit
 
     val names = if (args.nonEmpty) args.toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    println("query,total_s,analysis_s,exec_s,jobs,stages,tasks,shuffle_kb")
+    println("query,total_s,analysis_s,exec_s,jobs,stages,tasks,shuffle_kb," +
+      "broadcasts,fact_bcast")
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       // warm-up (discarded, pays codegen/JIT)
@@ -49,6 +58,7 @@ object ProfileAll {
       spark.catalog.clearCache(); System.gc()
       // timed run, split into analysis vs execution
       try {
+        flushBus()
         jobs = 0; stages = 0; tasks = 0; shufWrite = 0L
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
@@ -57,10 +67,16 @@ object ProfileAll {
         val t1 = System.nanoTime()
         agg.collect()
         val t2 = System.nanoTime()
-        Thread.sleep(120) // let listener events drain
+        flushBus()
+        // after the action the adaptive plan is final
+        val plan = agg.queryExecution.executedPlan
+        val bcasts = PlanWalk.expand(plan)
+          .count(_.isInstanceOf[BroadcastExchangeExec])
+        val factBcast = PlanWalk.broadcastsRawScan(plan, "lineitem.parquet")
         def f(n: Long) = String.format(java.util.Locale.ROOT, "%.3f",
           Double.box(n / 1e9))
-        println(s"$name,${f(t2 - t0)},${f(t1 - t0)},${f(t2 - t1)},$jobs,$stages,$tasks,${shufWrite / 1024}")
+        println(s"$name,${f(t2 - t0)},${f(t1 - t0)},${f(t2 - t1)},$jobs," +
+          s"$stages,$tasks,${shufWrite / 1024},$bcasts,$factBcast")
       } catch { case e: Throwable => println(s"$name,FAILED,${e.getClass.getSimpleName}") }
       spark.catalog.clearCache(); System.gc()
     }

@@ -11,8 +11,8 @@ import graft.operators.SkewAdvisor
   * can reach — recommend (skewed + splittable), refuse with the
   * salting note (skewed but ONE mapper, AQE's un-splittable
   * precondition), and defaults-are-fine — plus the broadcast
-  * heap-sizing rule's anchors. SkewProbe asserts the end-to-end
-  * loop: defaults no-op → advisor recommends → skew_split fires.
+  * heap-sizing rule's anchors — and the end-to-end loop: defaults
+  * no-op → advisor recommends → AQE's skew split fires.
   */
 class SkewAdvisorSpec extends SparkSpec {
 
@@ -59,6 +59,46 @@ class SkewAdvisorSpec extends SparkSpec {
     assert(rec.advisoryBytes.get >= (1L << 20))
     assert(rec.advisoryBytes.get < p.maxBytes,
       "advisory >= hot size would split into one piece (no-op)")
+  }
+
+  test("end to end: defaults do not split the hot join partition; " +
+    "the advised threshold makes AQE's skew split fire") {
+    import org.apache.spark.sql.execution.joins.ShuffledJoin
+    // a per-key dim too large to broadcast by scenario (the 100 TB
+    // dim regime): both sides shuffle, so AQE may split the hot
+    // partition — across map-index ranges, hence 8 mappers
+    val dim = spark.range(0L, 300000L, 1L, 8)
+      .select(col("id").as("k"), (col("id") % 7).as("segment"))
+    val skewConfs = Seq(
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    // run the join to completion; true iff the final plan split it.
+    // The aggregate reads the payload, so the fact shuffle carries it
+    // (a bare count would prune it to the compressible key alone)
+    def run(): (DataFrame, Boolean) = {
+      val agg = skewedFrame(parallelism = 8).join(dim, "k")
+        .groupBy(col("segment")).agg(sum(length(col("payload"))).as("len"))
+      agg.collect()
+      (agg, PlanWalk.expand(agg.queryExecution.executedPlan).exists {
+        case j: ShuffledJoin => j.isSkewJoin
+        case _ => false
+      })
+    }
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      // the 256 MB default trigger never classifies a ~40 MB hot
+      // partition: the silent no-op the advisor exists for
+      val (observed, splitByDefault) = run()
+      assert(!splitByDefault)
+      val rec = SkewAdvisor.recommend(observed)
+      assert(rec.thresholdBytes.isDefined, rec.note)
+      spark.conf.set(skewConfs(0), rec.thresholdBytes.get.toString)
+      spark.conf.set(skewConfs(1), rec.advisoryBytes.get.toString)
+      assert(run()._2, s"advised ${rec.note} did not fire the skew split")
+    } finally {
+      (skewConfs :+ "spark.sql.autoBroadcastJoinThreshold")
+        .foreach(spark.conf.unset)
+    }
   }
 
   test("one mapper => unsplittable: the advisor refuses a threshold " +

@@ -456,8 +456,8 @@ class StatsSpec extends SparkSpec {
     // bridged cliques + a dominant star community + an isolated pair:
     // the join path must reproduce the window path exactly, including
     // on a graph where one label holds most of the nodes (the regime
-    // the join path exists for; LpaProbe measures the straggler delta
-    // at scale)
+    // the join path exists for; r19 measured the straggler delta at
+    // scale: 8 M-node star, window 25.1 s vs join 20.1 s)
     val star = (101L to 160L).map(l => (100L, l))
     val edges = (Seq((1L, 2L), (2L, 3L), (1L, 3L),
       (4L, 5L), (5L, 6L), (4L, 6L), (3L, 4L), (70L, 71L)) ++ star)

@@ -873,10 +873,10 @@ class StreamingSpec extends SparkSpec {
     "its event count is exact") {
     import org.apache.spark.sql.functions._
     // replay the real sf0.1 events through the parquet file source,
-    // one day-file per micro-batch (the StreamProbe harness shape:
-    // the watermark advances batch by batch, windows close by event
-    // time as in production) — the r13 stretch left the DAU envelope
-    // pinned batch-side only (EventsSpec); this closes it end to end
+    // one day-file per micro-batch (the watermark advances batch by
+    // batch, windows close by event time as in production) — the r13
+    // stretch left the DAU envelope pinned batch-side only
+    // (EventsSpec); this closes it end to end
     val ev = Tables.events(spark, "/root/testdata/sf0.1")
       .select(
         timestamp_micros((col("ts") / 1000L).cast("long")).as("ts"),

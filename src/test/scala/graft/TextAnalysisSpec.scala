@@ -1,9 +1,23 @@
 package graft
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{array, concat_ws, element_at, lit, sequence, size, transform, when}
+
 import graft.operators.TextAnalysis
 
 class TextAnalysisSpec extends SparkSpec {
   import spark.implicits._
+
+  /** HOF twin of `TextFns.shinglesOfTokens`: the `transform` over a
+    * `sequence` the native TokenShingles replaced, kept as its
+    * differential-testing reference.
+    */
+  private def shinglesOfTokensHof(toks: Column, n: Int): Column =
+    when(size(toks) >= n,
+      transform(
+        sequence(lit(1), size(toks) - (n - 1)),
+        i => concat_ws(" ", (0 until n).map(j => element_at(toks, i + lit(j))): _*)))
+      .otherwise(array().cast("array<string>"))
 
   test("stats computes token/char/stopword counts") {
     val docs = Seq((1L, "the cat and the dog")).toDF("doc_id", "text")
@@ -85,7 +99,7 @@ class TextAnalysisSpec extends SparkSpec {
         TextFns.shinglesOfTokens(col("tk"), n).as("sh"))
         .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
       val hof = docs.select(col("id"),
-        TextFns.shinglesOfTokensHof(col("tk"), n).as("sh"))
+        shinglesOfTokensHof(col("tk"), n).as("sh"))
         .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
       assert(native == hof, s"mismatch at n=$n")
     }
