@@ -8,7 +8,7 @@ import org.apache.spark.sql.graftshim.SessionShim
   * Several operators `cache()` an internal frame that appears on BOTH
   * sides of a self-join (every Dedup pair generator, Stats
   * correlationEdges/markerStats, VectorSearch.centroidSimilarity,
-  * Pack.packShards, Bm25's postings, Embed's long form): aliased
+  * Pack.packShards, Embed's long form): aliased
   * self-join sides of the same uncached frame defeat ReuseExchange, so
   * without the cache the upstream pipeline is computed once PER SIDE.
   * Those cached frames are part of the (lazy) plan the operator

@@ -4,8 +4,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Column-level text primitives shared by the text-analysis, BM25 and
-  * dedup operators. All are codegen'd builtins (regexp/array HOFs) —
-  * narrow per-row transforms that scale linearly and never shuffle.
+  * dedup operators: narrow per-row transforms that scale linearly and
+  * never shuffle.
   *
   * Tokenization mirrors the reference's BM25 tokenizer
   * (reference: backend/app/core/embeddings.py:175 _tokenize —
@@ -50,6 +50,17 @@ object TextFns {
     filter(
       regexp_extract_all(lower(text), lit("[a-z0-9]+"), lit(0)),
       t => length(t) > 2)
+
+  /** `[dl, tf_0, …, tf_{n-1}]` (array<double>) of `text` against the
+    * already-lowercased `terms`, over the same tokens as `bm25Tokens`
+    * — a native one-pass expression (Bm25TermCounts) that never
+    * materializes the tokens. Null text → null.
+    */
+  def bm25TermCounts(text: Column, terms: Seq[String]): Column = {
+    import org.apache.spark.sql.graftshim.ColumnShim
+    ColumnShim.column(graft.expressions.Bm25TermCounts(
+      ColumnShim.expression(lower(text)), terms))
+  }
 
   /** Sliding word n-gram shingles from a PRE-PROJECTED token array
     * column — a native codegen'd expression (TokenShingles): the HOF

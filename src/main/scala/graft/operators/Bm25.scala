@@ -11,10 +11,10 @@ import graft.functions.TextFns
   * :234 search — BM25Okapi with k1=1.5, b=0.75, and the
   * `idf = ln((N - df + 0.5)/(df + 0.5) + 1)` Okapi formula).
   *
-  * Scale design: corpus statistics (N, avgdl, per-term df for the
-  * query terms only) are tiny aggregates that get broadcast; the term
-  * filter is applied BEFORE the tf shuffle so only rows matching query
-  * terms ever move; doc length is one map-side-combinable count.
+  * Scale design: per-doc length and query-term counts are one narrow
+  * projection (no shuffle); corpus statistics (N, avgdl, per-term df
+  * for the query terms only) are one tiny aggregate that gets
+  * broadcast; only docs matching a query term reach the top-k.
   */
 object Bm25 {
   val K1 = 1.5
@@ -26,18 +26,29 @@ object Bm25 {
     * Output: (idCol, bm25 double — unrounded).
     *
     * Single-pass NARROW plan: query terms are statically known, so
-    * per-term tf and doc length are array counts over the token
-    * expression in ONE projection — no token explode, no per-doc
-    * groupBy, zero shuffle for the per-doc frame (subexpression
-    * elimination computes the tokenizer once per row). Corpus stats
-    * (N, avgdl, per-term df) are one aggregate over that frame,
-    * broadcast back as a single row.
+    * doc length and every per-term tf come from ONE native expression
+    * per row (`TextFns.bm25TermCounts`: one scan of the lowercased
+    * text's UTF-8 bytes, no token array, no per-term filter) — no
+    * token explode, no per-doc groupBy, zero shuffle for the per-doc
+    * frame. Corpus stats (N, avgdl, per-term df) are one aggregate
+    * over that frame, broadcast back as a single row.
+    *
+    * The per-doc frame feeds both the stats aggregate and the scoring
+    * scan and is NOT cached: recomputing the one-pass kernel is
+    * cheaper than materializing and reading back a cached relation.
+    * At 5,000 chunks (graftbench serve, seed 7) dropping the cache
+    * took a BM25 request from 9 tasks to 5 and serve from 3.8 jobs
+    * per request to 3.0. The plan keeps the counts array in its own
+    * projection (several columns read it, so CollapseProject does not
+    * copy it into each dl/tf column), and the match filter is
+    * a join condition against the stats (see below) — SearchSpec pins
+    * that each scan of the docs evaluates the kernel once.
     *
     * Reference parity: N and avgdl are computed over ALL documents,
     * including docs that tokenize to nothing (BM25Okapi's corpus
     * statistics include zero-length docs — deriving stats from an
     * exploded token stream silently dropped them). Query terms are
-    * lowercased to match the lowercase token stream, and pivoted
+    * lowercased to match the lowercase token stream, and per-term
     * columns are aliased by INDEX (a term containing '.' would break
     * a col("tf_<term>") reference).
     */
@@ -54,18 +65,13 @@ object Bm25 {
     def tfCol(i: Int) = s"tf_$i"
     def dfCol(i: Int) = s"df_$i"
 
-    // per-doc frame feeds BOTH the corpus-stats aggregate and the
-    // final scoring join — cache so the tokenizer runs once (one
-    // narrow row per doc; caller owns cache lifecycle, see Dedup's
-    // scaladoc note)
-    val tokens = TextFns.bm25Tokens(col(textCol))
-    val perDoc = docs.select(
-      col(idCol) +:
-        size(tokens).cast("double").as("dl") +:
-        idx.map(i =>
-          size(filter(tokens, t => t === queryTerms(i))).cast("double")
-            .as(tfCol(i))): _*)
-      .cache()
+    val perDoc = docs
+      .select(col(idCol),
+        TextFns.bm25TermCounts(col(textCol), queryTerms).as("counts"))
+      .select(
+        col(idCol) +:
+          col("counts")(0).as("dl") +:
+          idx.map(i => col("counts")(i + 1).as(tfCol(i))): _*)
 
     val stats = perDoc.agg(
       count(lit(1)).cast("double").as("n_docs"),
@@ -80,9 +86,18 @@ object Bm25 {
       (col(tfCol(i)) +
         lit(K1) * (lit(1.0 - B) + lit(B) * col("dl") / col("avgdl")))
 
+    // Keep docs holding a query term: some tf_i > 0, written as
+    // greatest(0, tf_i·df_i) > 0 over the joined stats (tf_i > 0 makes
+    // df_i >= 1). A predicate on the per-doc columns alone would be
+    // pushed below the counts projection with the kernel inlined once
+    // per term, and a null-intolerant one (a plain sum) makes the
+    // optimizer infer isnotnull(tf_i) filters that inline it again;
+    // greatest is not null-intolerant and df lives on the stats side,
+    // so the predicate stays a join condition and the kernel runs
+    // once per row.
     perDoc
-      .where(idx.map(i => col(tfCol(i))).reduce(_ + _) > 0)
-      .crossJoin(broadcast(stats))
+      .join(broadcast(stats),
+        greatest(lit(0.0) +: idx.map(i => col(tfCol(i)) * col(dfCol(i))): _*) > 0)
       .withColumn("bm25",
         idx.map(i =>
           idf(i) * tfNorm(i) * lit(weights.getOrElse(queryTerms(i), 1.0)))

@@ -45,8 +45,7 @@ object Embed {
     val toks = docs.select(col(idCol),
       explode(TextFns.bm25Tokens(col(textCol))).as("term"))
     // tf feeds BOTH the df aggregate and the weighting join — cache
-    // so the token explode + groupBy(id, term) runs once (same
-    // dual-consumer treatment as Bm25.score's perDoc frame)
+    // so the token explode + groupBy(id, term) (a shuffle) runs once
     val tf = toks.groupBy(col(idCol), col("term"))
       .agg(count(lit(1)).cast("double").as("tf"))
       .cache()

@@ -22,8 +22,18 @@ object Fusion {
     * Inputs must carry (idCol, rankCol) with 1-based ranks; ids
     * missing from one list contribute 0 from that list (mirrors
     * `fuse_results`, where absent docs simply get no increment).
-    * Both lists are top-k prunes of much larger inputs, so this is a
-    * small-side full-outer join — broadcastable at any corpus size.
+    * Both lists are top-k prunes of much larger inputs, so the join
+    * sees at most 2k rows whatever the corpus size. It is NOT a
+    * broadcast join: Spark has no broadcast hash join for FULL OUTER,
+    * so it plans a SortMergeJoin — two shuffles and two sorts of those
+    * few rows (every hybrid request's AQE final plan in graftbench
+    * serve, seed 7). A union + groupBy(id) rewrite (one shuffle, no
+    * join) was prototyped twice and measured no better, so it was not
+    * kept — graftbench serve, seed 7, traced, one run per arm: with
+    * the older HOF BM25 leg, Fusion.rrf.tasks 13 → 13,
+    * spark.stages_per_req 4.2 → 4.2, Fusion.rrf.exec_ms 372 → 374;
+    * with the Bm25TermCounts leg, tasks 9 → 9, stages_per_req
+    * 3.4 → 3.4, exec_ms 391 → 351 (inside run-to-run spread).
     */
   def rrf(
       dense: DataFrame, sparse: DataFrame,

@@ -946,13 +946,11 @@ object VectorQueries {
   /* ---------------- hybrid_rrf ---------------- */
 
   /** Hybrid search = dense + sparse legs fused with RRF. Its wall time
-    * is the SUM of its legs (the fusion join itself is two pruned
-    * top-50 lists — negligible): at sf0.1 steady-state ≈ bm25_search
-    * (~0.65 s) + vs_dense_topk (~0.27 s) + overhead ≈ 0.95–1.3 s.
-    * The r3→r4 step (0.82→1.3 s) tracks the BM25 shuffle-free rewrite
-    * (commit 2936cfd), which costs a little wall-clock at benchmark
-    * scale but removes the per-doc shuffle — the correct trade at
-    * corpus scale. Not a plan pathology.
+    * is the SUM of its legs plus the fusion: the BM25 leg is one
+    * native counts pass over the documents (Bm25.score), and
+    * Fusion.rrf's full outer join of the two pruned top-50 lists is a
+    * SortMergeJoin — few rows, but two extra shuffles and their
+    * stages (see Fusion.rrf).
     */
   private def hybridRrf(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)

@@ -14,7 +14,8 @@ class CacheLifecycleSpec extends SparkSpec {
 
   /** Every SparkEntry query whose operator caches an internal frame
     * (grep `.cache()` in operators/ + EmbedQueries): one per caching
-    * code path.
+    * code path. (Bm25.score caches nothing; SearchSpec's plan pin
+    * holds it to that, so bm25_search is not listed.)
     */
   private val cachingQueries = Seq(
     "dedup_exact", // Dedup via shared shingle cache paths: none — control
@@ -22,7 +23,7 @@ class CacheLifecycleSpec extends SparkSpec {
     "dedup_simhash", "dedup_embcos", "dedup_embcos_mb",
     "pack_shards", "vs_centroid_sim", "vs_similar_papers",
     "deg_network", "deg_hub", "sc_markers", "deg_validate",
-    "bm25_search", "emb_tfidf_topk", "ev_funnel", "decontam_ngram",
+    "emb_tfidf_topk", "ev_funnel", "decontam_ngram",
     "dedup_cluster", "rerank_fused",
     "deg_centrality", // Stats.centrality's deg cache (r10)
     "txt_lm_score", // lmScore's dbg + cg caches (r10)

@@ -1,11 +1,172 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, BoundReference, Lower}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 
+import graft.expressions.Bm25TermCounts
+import graft.functions.TextFns
 import graft.operators.{Bm25, Fusion, VectorSearch}
 
 class SearchSpec extends SparkSpec {
   import spark.implicits._
+
+  /** HOF twin of `Bm25.score`: dl and each tf counted over the
+    * `bm25Tokens` array (`size(filter(tokens, _ === term))`), the
+    * formulation the native Bm25TermCounts replaced, kept as its
+    * differential-testing reference.
+    */
+  private def bm25ScoreHof(
+      docs: DataFrame, idCol: String, textCol: String,
+      rawQueryTerms: Seq[String],
+      termWeights: Map[String, Double] = Map.empty): DataFrame = {
+    val queryTerms = rawQueryTerms.map(TextFns.lcRoot).distinct
+    val weights = termWeights.map { case (t, w) => TextFns.lcRoot(t) -> w }
+    val idx = queryTerms.indices
+    val tokens = TextFns.bm25Tokens(col(textCol))
+    val perDoc = docs.select(
+      col(idCol) +:
+        size(tokens).cast("double").as("dl") +:
+        idx.map(i =>
+          size(filter(tokens, t => t === queryTerms(i))).cast("double")
+            .as(s"tf_$i")): _*)
+    val stats = perDoc.agg(
+      count(lit(1)).cast("double").as("n_docs"),
+      (avg(col("dl")).as("avgdl") +:
+        idx.map(i =>
+          sum(when(col(s"tf_$i") > 0, 1).otherwise(0)).cast("double")
+            .as(s"df_$i"))): _*)
+    def idf(i: Int) = log((col("n_docs") - col(s"df_$i") + 0.5) /
+      (col(s"df_$i") + 0.5) + 1.0)
+    def tfNorm(i: Int) = col(s"tf_$i") * (Bm25.K1 + 1.0) /
+      (col(s"tf_$i") + lit(Bm25.K1) *
+        (lit(1.0 - Bm25.B) + lit(Bm25.B) * col("dl") / col("avgdl")))
+    perDoc
+      .where(idx.map(i => col(s"tf_$i")).reduce(_ + _) > 0)
+      .crossJoin(broadcast(stats))
+      .withColumn("bm25", idx.map(i =>
+        idf(i) * tfNorm(i) * lit(weights.getOrElse(queryTerms(i), 1.0)))
+        .reduce(_ + _))
+      .select(col(idCol), col("bm25"))
+  }
+
+  /** Tokenizer edge cases: null, empty, whitespace, only short tokens,
+    * digits, punctuation-split tokens, uppercase, non-ASCII letters
+    * (é/ß, İ U+0130, the Kelvin sign U+212A that lowercases to ASCII
+    * `k`) and 4-byte emoji.
+    */
+  private val edgeTexts: Seq[(Long, String)] = Seq(
+    1L -> null, 2L -> "", 3L -> "  \t\n  ", 4L -> "a bb cc de f",
+    5L -> "12 123 4567 p53 00000", 6L -> "co-expression of p53/MDM2 and MDM2",
+    7L -> "TP53 Gene EXPRESSION expression Expression",
+    8L -> "café straße ÉTUDE étude naïve résumé",
+    9L -> "İstanbul İİİ \u0130ndex", 10L -> "\u212Aelvin KELVIN kelvin \u212A\u212A\u212A",
+    11L -> "gene\uD83E\uDDECexpression \uD83D\uDE00\uD83D\uDE00 dna\uD83D\uDE00rna",
+    12L -> "the mdm2 gene regulates p53 expression in the cell")
+
+  /** Raw query terms: repeated, uppercase, ≤ 2 characters, and with
+    * punctuation (never a token, so they must count 0).
+    */
+  private val edgeTerms: Seq[String] = Seq(
+    "expression", "EXPRESSION", "p53", "MDM2", "co-expression", "p53/mdm2",
+    "ab", "cc", "kelvin", "caf", "stra", "stanbul", "ndex", "gene", "dna",
+    "rna", "123", "00000", "tp53", "the", "expression")
+
+  /** The edge corpus as a parquet scan: a projection over a local
+    * `toDF` frame is folded into the LocalRelation by the optimizer and
+    * evaluated interpreted, never through generated code.
+    */
+  private def edgeDocs: DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("bm25_edge").toString
+    edgeTexts.toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  test("Bm25TermCounts matches the HOF token counts on every edge text, " +
+    "codegen'd and interpreted") {
+    val terms = edgeTerms.map(TextFns.lcRoot).distinct
+    val docs = edgeDocs
+    val tokens = TextFns.bm25Tokens(col("text"))
+    val hof = docs.select(col("doc_id"),
+      when(col("text").isNotNull, array(
+        size(tokens).cast("double") +: terms.map(t =>
+          size(filter(tokens, _ === t)).cast("double")): _*)).as("c"))
+      .collect().map(r => r.getLong(0) -> Option(r.getSeq[Double](1))).toMap
+    val native = docs.select(col("doc_id"),
+      TextFns.bm25TermCounts(col("text"), terms).as("c"))
+      .collect().map(r => r.getLong(0) -> Option(r.getSeq[Double](1))).toMap
+    assert(native == hof)
+    assert(native(1L).isEmpty, "null text must give null counts")
+    assert(native(2L).contains(Seq.fill(terms.size + 1)(0.0)))
+    // the kernel really counts: spot values the HOF twin agrees on
+    val at = terms.zipWithIndex.toMap
+    assert(native(6L).get(0) == 5.0) // expression p53 mdm2 and mdm2
+    assert(native(6L).get(at("mdm2") + 1) == 2.0)
+    assert(native(7L).get(at("expression") + 1) == 3.0)
+    assert(native(10L).get(at("kelvin") + 1) == 3.0) // U+212A folds to k
+    assert(native(11L).get(at("expression") + 1) == 1.0)
+    assert(native(6L).get(at("co-expression") + 1) == 0.0)
+    // the generated code (doGenCode, compiled strictly — a compile
+    // error throws instead of falling back) and the interpreted path
+    // (nullSafeEval) each give the same arrays
+    val expr = Bm25TermCounts(Lower(BoundReference(0, StringType, nullable = true)), terms)
+    val generated = GenerateUnsafeProjection.generate(Seq(expr))
+    edgeTexts.foreach { case (id, t) =>
+      val row = InternalRow(UTF8String.fromString(t))
+      val gen = generated(row)
+      val viaCodegen = if (gen.isNullAt(0)) None else Some(gen.getArray(0).toDoubleArray().toSeq)
+      val viaEval = Option(expr.eval(row)).map(_.asInstanceOf[ArrayData].toDoubleArray().toSeq)
+      assert(viaCodegen == hof(id), s"generated counts differ on doc $id")
+      assert(viaEval == hof(id), s"interpreted counts differ on doc $id")
+    }
+  }
+
+  test("Bm25.score equals its HOF twin row for row on the edge corpus") {
+    val docs = edgeDocs
+    def rows(df: DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getDouble(1)).sortBy(_._1).toSeq
+    val native = rows(Bm25.score(docs, "doc_id", "text", edgeTerms))
+    assert(native.nonEmpty)
+    assert(native == rows(bm25ScoreHof(docs, "doc_id", "text", edgeTerms)))
+    val weights = Map("GENE" -> 0.25, "kelvin" -> 2.0)
+    assert(rows(Bm25.score(docs, "doc_id", "text", edgeTerms, weights)) ==
+      rows(bm25ScoreHof(docs, "doc_id", "text", edgeTerms, weights)))
+  }
+
+  test("bm25 corpus stats count zero-token docs in N and avgdl") {
+    // N = 3, avgdl = (0 + 0 + 3) / 3 = 1; dropping the two docs with
+    // no token longer than 2 characters would give N = 1, avgdl = 3
+    val docs = Seq((1L, ""), (2L, "a bb"), (3L, "alpha beta gamma"))
+      .toDF("doc_id", "text")
+    val s = Bm25.score(docs, "doc_id", "text", Seq("alpha"))
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val (k1, b) = (Bm25.K1, Bm25.B)
+    val expected = math.log((3 - 1 + 0.5) / (1 + 0.5) + 1) *
+      (k1 + 1) / (1 + k1 * (1 - b + b * 3 / 1.0))
+    assert(s.keySet == Set(3L))
+    assert(math.abs(s(3L) - expected) < 1e-12, s"$s vs $expected")
+  }
+
+  test("Bm25.topK plan: no cache, no HOF filter, the counts kernel once " +
+    "per scan of the docs") {
+    val top = Bm25.topK(edgeDocs, "doc_id", "text", edgeTerms, 3)
+    val plan = top.queryExecution.optimizedPlan
+    assert(plan.collect { case r: InMemoryRelation => r }.isEmpty, plan)
+    val exprs = plan.collect { case n => n.expressions }.flatten
+    assert(!exprs.exists(_.exists(_.isInstanceOf[ArrayFilter])), plan)
+    val kernels = exprs.map(_.collect { case k: Bm25TermCounts => k }.size).sum
+    val scans = plan.collectLeaves().size
+    assert(scans == 2, plan) // the stats aggregate and the scoring scan
+    assert(kernels == scans, s"Bm25TermCounts evaluated $kernels times " +
+      s"over $scans scans:\n$plan")
+    assert(top.collect().length == 3)
+  }
 
   test("denseTopK returns nearest vectors by cosine, rounded, id-tiebroken") {
     val cands = Seq(
