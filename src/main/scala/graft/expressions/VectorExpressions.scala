@@ -1,8 +1,10 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, LeafExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -55,7 +57,17 @@ object VectorExpressions {
     }
 }
 
-/** Deterministic double dot product of two numeric arrays. */
+/** Deterministic double dot product of two numeric arrays.
+  *
+  * A foldable side (a literal query vector) is evaluated once at code
+  * generation and widened into a primitive `double[]` held as a
+  * reference object, so the per-row loop reads a plain array instead
+  * of unboxing the literal's generic array data element by element.
+  * A NULL literal or a null element becomes a has-null flag (every dot
+  * product is then null) and the length check stays per row; the
+  * accumulation order is unchanged, so results are bit-identical to
+  * the column form.
+  */
 case class VecDot(left: Expression, right: Expression) extends BinaryExpression {
   import VectorExpressions._
 
@@ -89,7 +101,9 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
+    if (right.foldable) foldedGenCode(ctx, ev, left, right, foldedLeft = false)
+    else if (left.foldable) foldedGenCode(ctx, ev, right, left, foldedLeft = true)
+    else nullSafeCodeGen(ctx, ev, (a, b) => {
       val n = ctx.freshName("n")
       val i = ctx.freshName("i")
       val s = ctx.freshName("s")
@@ -107,6 +121,42 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
          |}
        """.stripMargin
     })
+
+  /** The loop against a side evaluated once: `folded` is widened into
+    * a `double[]` reference; `other` is generated per row. The product
+    * keeps the operands' left/right order.
+    */
+  private def foldedGenCode(ctx: CodegenContext, ev: ExprCode,
+      other: Expression, folded: Expression, foldedLeft: Boolean): ExprCode = {
+    val o = other.genCode(ctx)
+    val arr = folded.eval().asInstanceOf[ArrayData] // null for a NULL literal
+    val et = elemType(folded)
+    val vals = if (arr == null) Array.emptyDoubleArray else Array.tabulate(arr.numElements())(i =>
+      if (arr.isNullAt(i)) 0.0 else elemEval(arr, i, et))
+    val hasNull = arr == null || (0 until arr.numElements()).exists(arr.isNullAt)
+    val q = ctx.addReferenceObj("vecDotFolded", vals, "double[]")
+    val (fv, i, s) = (ctx.freshName("fv"), ctx.freshName("i"), ctx.freshName("s"))
+    val oElem = elemGet(o.value.toString, i, elemType(other))
+    val product = if (foldedLeft) s"$fv[$i] * $oElem" else s"$oElem * $fv[$i]"
+    ev.copy(code = code"""
+      |${o.code}
+      |boolean ${ev.isNull} = ${o.isNull} || $hasNull;
+      |double ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
+      |if (!${ev.isNull}) {
+      |  final double[] $fv = $q;
+      |  if (${o.value}.numElements() != $fv.length) {
+      |    ${ev.isNull} = true;
+      |  } else {
+      |    double $s = 0.0;
+      |    for (int $i = 0; $i < $fv.length; $i++) {
+      |      if (${o.value}.isNullAt($i)) { ${ev.isNull} = true; break; }
+      |      $s += $product;
+      |    }
+      |    if (!${ev.isNull}) ${ev.value} = $s;
+      |  }
+      |}
+    """.stripMargin)
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VecDot =
@@ -175,4 +225,25 @@ case class VecNormSq(child: Expression) extends UnaryExpression {
 object VecNormSq {
   val info: ExpressionInfo = new ExpressionInfo(
     classOf[VecNormSq].getName, "vec_norm_sq")
+}
+
+/** A driver-computed double (a query vector's norm) that generated
+  * code reads from a reference object. A `Literal` double is inlined
+  * into the Java source, so code that differs only in a per-query value
+  * would be compiled again for every query; held by reference, such
+  * queries share one compiled class. Not foldable, so the optimizer
+  * leaves it in place.
+  */
+case class RefDouble(value: Double) extends LeafExpression {
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = false
+  override def foldable: Boolean = false
+  override def prettyName: String = "ref_double"
+
+  override def eval(input: InternalRow): Any = value
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("refDouble", java.lang.Double.valueOf(value), "java.lang.Double")
+    ev.copy(code = code"final double ${ev.value} = $ref.doubleValue();", isNull = FalseLiteral)
+  }
 }

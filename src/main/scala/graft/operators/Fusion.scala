@@ -1,8 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.util.concurrent.{ExecutionException, FutureTask}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.TextFns
 
@@ -18,36 +24,100 @@ object Fusion {
   val DenseWeight = 0.6
   val SparseWeight = 0.4
 
-  /** Reciprocal Rank Fusion of two ranked lists.
-    * Inputs must carry (idCol, rankCol) with 1-based ranks; ids
+  /** Reciprocal Rank Fusion of two ranked lists, fused on the driver.
+    * Inputs must carry (idCol, rankCol) with integral 1-based ranks
+    * and an integral or string id of the same type on both sides; ids
     * missing from one list contribute 0 from that list (mirrors
     * `fuse_results`, where absent docs simply get no increment).
-    * Both lists are top-k prunes of much larger inputs, so the join
-    * sees at most 2k rows whatever the corpus size. It is NOT a
-    * broadcast join: Spark has no broadcast hash join for FULL OUTER,
-    * so it plans a SortMergeJoin — two shuffles and two sorts of those
-    * few rows (every hybrid request's AQE final plan in graftbench
-    * serve, seed 7). A union + groupBy(id) rewrite (one shuffle, no
-    * join) was prototyped twice and measured no better, so it was not
-    * kept — graftbench serve, seed 7, traced, one run per arm: with
-    * the older HOF BM25 leg, Fusion.rrf.tasks 13 → 13,
-    * spark.stages_per_req 4.2 → 4.2, Fusion.rrf.exec_ms 372 → 374;
-    * with the Bm25TermCounts leg, tasks 9 → 9, stages_per_req
-    * 3.4 → 3.4, exec_ms 391 → 351 (inside run-to-run spread).
+    *
+    * Both lists are top-k prunes of much larger inputs, so each leg is
+    * collected — the dense leg on a thread started for this call (it
+    * inherits the caller's Spark local properties, job group
+    * included), the sparse leg on the calling thread, concurrently —
+    * and fused in O(k). A leg over `maxLegRows` rows is refused rather
+    * than collected. The rows are those of a full outer join on the id
+    * (duplicate ids pair up, NULL ids never match), scored with the
+    * same arithmetic (dense term + sparse term, `round(…, 6)` HALF_UP)
+    * and ordered by score desc, id asc (NULLs first), with the ranks as
+    * the last tiebreak so a tie at k has one answer. The result is a
+    * local frame: (idCol, dense_rank, sparse_rank, rrf_score) with the
+    * inputs' id and rank types.
+    *
+    * History: this was a lazy full outer join. Spark has no broadcast
+    * hash join for FULL OUTER, so it planned a SortMergeJoin — two
+    * shuffles and two sorts of at most 2k rows per hybrid request (a
+    * union + groupBy(id) rewrite measured no better: graftbench serve
+    * seed 7, `Fusion.rrf.tasks` 9 → 9; collecting both legs in one
+    * union job was slower than concurrent collects in a prototype).
+    * Fusing on the driver, with the dense leg's literal query, took
+    * graftbench serve `hybrid_p50_ms` from 482 to 366 ms (medians of
+    * ten interleaved pairs, local[2] on 4 cores; faster in 10 of 10).
+    * The join stays as SearchSpec's oracle.
     */
   def rrf(
       dense: DataFrame, sparse: DataFrame,
-      idCol: String, rankCol: String, k: Int): DataFrame = {
-    val d = dense.select(col(idCol), col(rankCol).as("dense_rank"))
-    val s = sparse.select(col(idCol), col(rankCol).as("sparse_rank"))
-    d.join(s, Seq(idCol), "full_outer")
-      .withColumn("rrf_score", round(
-        coalesce(lit(DenseWeight) / (lit(RrfK) + col("dense_rank")), lit(0.0)) +
-          coalesce(lit(SparseWeight) / (lit(RrfK) + col("sparse_rank")), lit(0.0)), 6))
-      .orderBy(col("rrf_score").desc, col(idCol))
-      .limit(k)
-      .select(col(idCol), col("dense_rank"), col("sparse_rank"), col("rrf_score"))
+      idCol: String, rankCol: String, k: Int,
+      maxLegRows: Int = 10000): DataFrame = {
+    val idType = legType(dense, idCol)
+    require(legType(sparse, idCol) == idType,
+      s"rrf: '$idCol' is ${idType.sql} in the dense leg but " +
+        s"${legType(sparse, idCol).sql} in the sparse leg")
+    require(isIntegral(idType) || idType == StringType,
+      s"rrf: '$idCol' must be integral or string, got ${idType.sql}")
+    val (denseRank, sparseRank) = (legType(dense, rankCol), legType(sparse, rankCol))
+    require(isIntegral(denseRank) && isIntegral(sparseRank),
+      s"rrf: '$rankCol' must be integral, got ${denseRank.sql} / ${sparseRank.sql}")
+    // (id, rank) pairs, as collected: a rank is null or a boxed integral
+    def collectLeg(leg: DataFrame, name: String): Array[(Any, Any)] = {
+      val rows = leg.select(col(idCol), col(rankCol)).limit(maxLegRows + 1).collect()
+      require(rows.length <= maxLegRows,
+        s"rrf: the $name leg holds more than maxLegRows=$maxLegRows rows")
+      rows.map(r => (r.get(0), r.get(1)))
+    }
+    val denseLeg = new FutureTask[Array[(Any, Any)]](() => collectLeg(dense, "dense"))
+    val thread = new Thread(denseLeg, "graft-rrf-dense-leg")
+    thread.setDaemon(true)
+    thread.start()
+    val s = try collectLeg(sparse, "sparse") finally thread.join()
+    val d = try denseLeg.get() catch { case e: ExecutionException => throw e.getCause }
+
+    // full outer join on the id: matched pairs in dense order, then
+    // each unmatched row of either side
+    val sparseById = s.filter(_._1 != null).groupBy(_._1)
+    val denseIds = d.iterator.map(_._1).filter(_ != null).toSet
+    val joined = d.flatMap { case (id, dr) =>
+      sparseById.get(id).fold(Array[(Any, Any, Any)]((id, dr, null)))(_.map(x => (id, dr, x._2)))
+    } ++ s.collect { case (id, sr) if id == null || !denseIds(id) => (id, null, sr) }
+    def term(weight: Double, rank: Any): Double =
+      if (rank == null) 0.0 else weight / (RrfK + rank.asInstanceOf[Number].doubleValue)
+    val fused = joined.map { case (id, dr, sr) =>
+      Row(id, dr, sr, round6(term(DenseWeight, dr) + term(SparseWeight, sr))) }
+    val integral = Ordering.by((v: Any) => v.asInstanceOf[Number].longValue)
+    val idOrd: Ordering[Any] =
+      if (idType == StringType) Ordering.by((v: Any) => UTF8String.fromString(v.asInstanceOf[String]))(
+        Ordering.comparatorToOrdering(java.util.Comparator.naturalOrder[UTF8String]()))
+      else integral
+    val top = fused.sortBy(r => (-r.getDouble(3), Option(r.get(0)), Option(r.get(1)), Option(r.get(2))))(
+      Ordering.Tuple4(Ordering.Double.TotalOrdering, Ordering.Option(idOrd),
+        Ordering.Option(integral), Ordering.Option(integral))).take(k)
+    val schema = StructType(Seq(
+      StructField(idCol, idType), StructField("dense_rank", denseRank),
+      StructField("sparse_rank", sparseRank), StructField("rrf_score", DoubleType)))
+    dense.sparkSession.createDataFrame(top.toSeq.asJava, schema)
   }
+
+  private def legType(leg: DataFrame, c: String): DataType = leg.schema(c).dataType
+
+  private def isIntegral(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
+  /** Spark's `round(x, 6)` on a double: HALF_UP on the shortest
+    * decimal form of `x`.
+    */
+  private def round6(x: Double): Double =
+    java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
 
   /** Attach a deterministic 1-based rank ordered by scoreCol desc with
     * id tiebreak. Used to feed `rrf`. Single window over an already

@@ -945,12 +945,12 @@ object VectorQueries {
 
   /* ---------------- hybrid_rrf ---------------- */
 
-  /** Hybrid search = dense + sparse legs fused with RRF. Its wall time
-    * is the SUM of its legs plus the fusion: the BM25 leg is one
-    * native counts pass over the documents (Bm25.score), and
-    * Fusion.rrf's full outer join of the two pruned top-50 lists is a
-    * SortMergeJoin — few rows, but two extra shuffles and their
-    * stages (see Fusion.rrf).
+  /** Hybrid search = dense + sparse legs fused with RRF. Fusion.rrf
+    * collects the two pruned top-50 lists concurrently (the dense leg
+    * scores against the query as a literal; the BM25 leg is one
+    * native counts pass over the documents, Bm25.score) and fuses them
+    * on the driver in O(k): no join, no shuffle, and the answer is a
+    * local frame. Its wall time is the slower leg plus the fusion.
     */
   private def hybridRrf(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)

@@ -158,7 +158,6 @@ class PlanAuditSpec extends SparkSpec {
       "ev_funnel" -> (16L, "one row per funnel stage (3)"),
       "ev_user_topk" -> (32L, "top-k user take (20)"),
       "gap_matrix" -> (32L, "topic-axis panel (4)"),
-      "hybrid_rrf" -> (128L, "fused top-k shortlist (50)"),
       "integrated_driver" -> (128L, "gene panel (40)"),
       "pack_audit" -> (64L, "per-partition offset rows (32)"),
       "pack_shards" -> (64L, "per-partition offset rows (32)"),

@@ -1,16 +1,21 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, BoundReference, Lower}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.graftshim.ListenerBusShim
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.scalacheck.Gen
 
-import graft.expressions.Bm25TermCounts
+import graft.expressions.{Bm25TermCounts, VecDot}
 import graft.functions.TextFns
 import graft.operators.{Bm25, Fusion, VectorSearch}
 
@@ -215,6 +220,195 @@ class SearchSpec extends SparkSpec {
     val expected102 = BigDecimal(0.6 / 62 + 0.4 / 61)
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     assert(math.abs(out(102L) - expected102) < 1e-9)
+  }
+
+  /** The full-outer-join RRF that Fusion.rrf replaced, kept as its
+    * oracle; the ranks are the last sort keys, as in Fusion.rrf, so a
+    * tie at k has one answer.
+    */
+  private def rrfJoin(dense: DataFrame, sparse: DataFrame,
+      idCol: String, rankCol: String, k: Int): DataFrame = {
+    val d = dense.select(col(idCol), col(rankCol).as("dense_rank"))
+    val s = sparse.select(col(idCol), col(rankCol).as("sparse_rank"))
+    d.join(s, Seq(idCol), "full_outer")
+      .withColumn("rrf_score", round(
+        coalesce(lit(Fusion.DenseWeight) / (lit(Fusion.RrfK) + col("dense_rank")), lit(0.0)) +
+          coalesce(lit(Fusion.SparseWeight) / (lit(Fusion.RrfK) + col("sparse_rank")), lit(0.0)), 6))
+      .orderBy(col("rrf_score").desc, col(idCol), col("dense_rank"), col("sparse_rank"))
+      .limit(k)
+      .select(col(idCol), col("dense_rank"), col("sparse_rank"), col("rrf_score"))
+  }
+
+  /** One RRF input list: ids drawn from `ids` (duplicates and NULLs
+    * included), 1-based ranks that are either positions or drawn with
+    * repeats (rank ties).
+    */
+  private def genLeg(ids: Gen[Option[Long]]): Gen[List[(Option[Long], Long)]] =
+    for {
+      n <- Gen.frequency(1 -> Gen.const(0), 6 -> Gen.chooseNum(1, 25))
+      xs <- Gen.listOfN(n, ids)
+      tied <- Gen.oneOf(false, true)
+      rs <- Gen.listOfN(n, Gen.chooseNum(1L, math.max(1L, n / 2L)))
+    } yield xs.zip(if (tied) rs.sorted else (1L to n.toLong).toList)
+
+  private val genRrfCase = {
+    def ids(lo: Long, hi: Long) = Gen.frequency(
+      12 -> Gen.chooseNum(lo, hi).map(Option(_)), 1 -> Gen.const(None))
+    for {
+      overlap <- Gen.oneOf(true, false)
+      d <- genLeg(ids(0L, 30L))
+      s <- genLeg(if (overlap) ids(0L, 30L) else ids(100L, 130L))
+      k <- Gen.chooseNum(1, 30)
+      stringIds <- Gen.oneOf(false, true)
+      intRanks <- Gen.oneOf(false, true)
+    } yield (d, s, k, stringIds, intRanks)
+  }
+
+  test("driver rrf equals the full outer join oracle row for row and " +
+    "schema for schema (ScalaCheck: overlap, disjoint, empty, duplicate " +
+    "and NULL ids, ties at k)") {
+    // fixed seeds, as in PropertySpec: a failure must reproduce
+    (1L to 40L).foreach { seed =>
+      val (d, s, k, stringIds, intRanks) =
+        genRrfCase.pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(seed))
+      val (idType, rankType) = (if (stringIds) StringType else LongType,
+        if (intRanks) IntegerType else LongType)
+      def frame(leg: List[(Option[Long], Long)], rt: DataType) = spark.createDataFrame(
+        java.util.Arrays.asList(leg.map { case (id, r) =>
+          Row(id.map(x => if (stringIds) s"x$x" else x).orNull,
+            if (rt == IntegerType) Int.box(r.toInt) else Long.box(r)) }: _*),
+        StructType(Seq(StructField("doc_id", idType), StructField("rank", rt))))
+      // the rank types may differ between the legs
+      val (df, sf) = (frame(d, rankType), frame(s, LongType))
+      val got = Fusion.rrf(df, sf, "doc_id", "rank", k)
+      val want = rrfJoin(df, sf, "doc_id", "rank", k)
+      assert(got.schema == want.schema, s"seed $seed")
+      assert(got.collect().toSeq == want.collect().toSeq,
+        s"seed $seed: dense $d, sparse $s, k $k")
+    }
+  }
+
+  test("rrf refuses a leg over maxLegRows, rethrows a leg's failure, " +
+    "and runs the dense leg under the caller's job group") {
+    val big = (1L to 11L).map(i => (i, i)).toDF("doc_id", "rank")
+    val small = Seq((1L, 1L)).toDF("doc_id", "rank")
+    intercept[IllegalArgumentException](Fusion.rrf(big, small, "doc_id", "rank", 5, maxLegRows = 10))
+    intercept[IllegalArgumentException](Fusion.rrf(small, big, "doc_id", "rank", 5, maxLegRows = 10))
+    assert(Fusion.rrf(big, small, "doc_id", "rank", 5, maxLegRows = 11).count() == 5)
+    val failing = small.withColumn("rank",
+      when(col("rank") > 0, raise_error(lit("dense leg failed"))).cast("long"))
+    val e = intercept[Exception](Fusion.rrf(failing, small, "doc_id", "rank", 5))
+    assert(e.getMessage.contains("dense leg failed"), e)
+    // parquet-backed top-k legs: each collect runs one job, and both
+    // must carry the group set on the calling thread
+    val dir = java.nio.file.Files.createTempDirectory("rrf_legs").toString
+    big.write.mode("overwrite").parquet(dir)
+    val leg = spark.read.parquet(dir).orderBy(col("rank")).limit(8)
+    val group = s"rrf-legs-${System.nanoTime}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "rrf legs")
+      val out = Fusion.rrf(leg, leg.where(col("doc_id") > 5), "doc_id", "rank", 3)
+      spark.sparkContext.clearJobGroup()
+      assert(out.collect().map(_.getLong(0)).toSeq == Seq(6L, 7L, 8L))
+      ListenerBusShim.flush(spark.sparkContext)
+      assert(jobs.get == 2, s"${jobs.get} jobs in the caller's group")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def vecDots(plan: LogicalPlan): Int =
+    plan.collect { case n => n.expressions }.flatten
+      .map(_.collect { case v: VecDot => v }.size).sum
+
+  /** A 3-file parquet candidate table, so the scan has 3 partitions. */
+  private def vecTable(n: Int): DataFrame = {
+    val rng = new scala.util.Random(11)
+    val dir = java.nio.file.Files.createTempDirectory("dense_cands").toString
+    (0 until n).map(i => (i.toLong, Array.fill(8)(rng.nextFloat() * 2 - 1)))
+      .toDF("vec_id", "embedding").repartition(3).write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  test("denseTopK plan: one vec_dot, no join, no broadcast; a local query " +
+    "runs in one single-stage job over a multi-partition scan") {
+    val cands = vecTable(300)
+    val q = Seq(Tuple1(Array(0.3f, -0.2f, 0.9f, 0.1f, 0.0f, 0.5f, -0.4f, 0.2f))).toDF("qe")
+    val top = VectorSearch.denseTopK(cands, q, "vec_id", "embedding", "qe", 5)
+    val plan = top.queryExecution.optimizedPlan
+    assert(vecDots(plan) == 1, plan)
+    assert(plan.collect { case j: Join => j }.isEmpty, plan)
+    assert(top.queryExecution.executedPlan.collect { case b: BroadcastExchangeExec => b }.isEmpty)
+    val group = s"dense-jobs-${System.nanoTime}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val stages = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet()
+          stages.addAndGet(j.stageInfos.size): Unit
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "denseTopK")
+      val rows = VectorSearch.denseTopK(cands, q, "vec_id", "embedding", "qe", 5).collect()
+      spark.sparkContext.clearJobGroup()
+      assert(rows.length == 5)
+      ListenerBusShim.flush(spark.sparkContext)
+      assert(jobs.get == 1 && stages.get == 1, s"${jobs.get} jobs, ${stages.get} stages")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("knnJoin plan: one vec_dot; undefined cosines never surface and " +
+    "never shift a kept rank") {
+    val cands = Seq(
+      (1L, Array(1.0f, 0.0f)), (2L, Array(0.9f, 0.1f)), (3L, Array(0.0f, 0.0f)),
+      (4L, Array(Float.NaN, 1.0f)), (5L, Array(1.0f, 0.0f, 0.0f)), (6L, null)
+    ).toDF("cid", "ce")
+    val qs = Seq((7L, Array(1.0f, 0.0f)), (8L, Array(0.0f, 0.0f))).toDF("qid", "qe")
+    val knn = VectorSearch.knnJoin(cands, qs, "cid", "ce", "qid", "qe", 4)
+    assert(vecDots(knn.queryExecution.optimizedPlan) == 1, knn.queryExecution.optimizedPlan)
+    // query 8 is zero-norm: no row; query 7 keeps its two defined
+    // cosines at ranks 1 and 2
+    assert(knn.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSeq ==
+      Seq((7L, 1L, 1L), (7L, 2L, 2L)))
+  }
+
+  test("single-query search: a multi-row query frame is refused; an empty " +
+    "frame or a null, zero-norm, NaN or wrong-length vector answers nothing") {
+    val vecs = (0 until 40).map { i =>
+      val angle = (i % 4) * math.Pi / 2 + (i / 40.0) * 0.1
+      (i.toLong, Array(math.cos(angle).toFloat, math.sin(angle).toFloat), i % 4)
+    }.toDF("vec_id", "embedding", "label")
+    val cents = VectorSearch.centroidArrays(vecs, "label", "embedding")
+    val assigned = VectorSearch.assignCells(vecs.select(col("vec_id"), col("embedding")),
+      cents, "vec_id", "embedding", "label")
+    val searches: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "denseTopK" -> (q => VectorSearch.denseTopK(vecs, q, "vec_id", "embedding", "qe", 5)),
+      "annIvf" -> (q => VectorSearch.annIvf(vecs, q, cents, "vec_id", "embedding", "qe",
+        "label", nprobe = 2, k = 5)),
+      "annIvfProbe" -> (q => VectorSearch.annIvfProbe(assigned, q, cents, "vec_id",
+        "embedding", "qe", "label", nprobe = 2, k = 5)))
+    val two = Seq(Tuple1(Array(1.0f, 0.0f)), Tuple1(Array(0.0f, 1.0f))).toDF("qe")
+    val degenerate = Seq(
+      "empty" -> Seq.empty[Tuple1[Array[Float]]].toDF("qe"),
+      "null" -> Seq(Tuple1(null.asInstanceOf[Array[Float]])).toDF("qe"),
+      "zero-norm" -> Seq(Tuple1(Array(0.0f, 0.0f))).toDF("qe"),
+      "NaN" -> Seq(Tuple1(Array(Float.NaN, 1.0f))).toDF("qe"),
+      "wrong-length" -> Seq(Tuple1(Array(1.0f, 0.0f, 0.0f))).toDF("qe"))
+    searches.foreach { case (name, search) =>
+      intercept[IllegalArgumentException](search(two))
+      degenerate.foreach { case (what, q) =>
+        assert(search(q).collect().isEmpty, s"$name answered a $what query")
+      }
+      assert(search(Seq(Tuple1(Array(1.0f, 0.0f))).toDF("qe")).collect().length == 5, name)
+    }
   }
 
   test("annIvf finds the same top results as brute force when probing enough cells") {
