@@ -24,6 +24,11 @@ object Fusion {
   val DenseWeight = 0.6
   val SparseWeight = 0.4
 
+  /** The most rows `rrf` collects from one leg; a larger leg is
+    * refused (both legs are meant to be top-k prunes).
+    */
+  val MaxLegRows = 10000
+
   /** Reciprocal Rank Fusion of two ranked lists, fused on the driver.
     * Inputs must carry (idCol, rankCol) with integral 1-based ranks
     * and an integral or string id of the same type on both sides; ids
@@ -34,7 +39,7 @@ object Fusion {
     * collected — the dense leg on a thread started for this call (it
     * inherits the caller's Spark local properties, job group
     * included), the sparse leg on the calling thread, concurrently —
-    * and fused in O(k). A leg over `maxLegRows` rows is refused rather
+    * and fused in O(k). A leg over `MaxLegRows` rows is refused rather
     * than collected. The rows are those of a full outer join on the id
     * (duplicate ids pair up, NULL ids never match), scored with the
     * same arithmetic (dense term + sparse term, `round(…, 6)` HALF_UP)
@@ -56,8 +61,7 @@ object Fusion {
     */
   def rrf(
       dense: DataFrame, sparse: DataFrame,
-      idCol: String, rankCol: String, k: Int,
-      maxLegRows: Int = 10000): DataFrame = {
+      idCol: String, rankCol: String, k: Int): DataFrame = {
     val idType = legType(dense, idCol)
     require(legType(sparse, idCol) == idType,
       s"rrf: '$idCol' is ${idType.sql} in the dense leg but " +
@@ -69,9 +73,9 @@ object Fusion {
       s"rrf: '$rankCol' must be integral, got ${denseRank.sql} / ${sparseRank.sql}")
     // (id, rank) pairs, as collected: a rank is null or a boxed integral
     def collectLeg(leg: DataFrame, name: String): Array[(Any, Any)] = {
-      val rows = leg.select(col(idCol), col(rankCol)).limit(maxLegRows + 1).collect()
-      require(rows.length <= maxLegRows,
-        s"rrf: the $name leg holds more than maxLegRows=$maxLegRows rows")
+      val rows = leg.select(col(idCol), col(rankCol)).limit(MaxLegRows + 1).collect()
+      require(rows.length <= MaxLegRows,
+        s"rrf: the $name leg holds more than MaxLegRows=$MaxLegRows rows")
       rows.map(r => (r.get(0), r.get(1)))
     }
     val denseLeg = new FutureTask[Array[(Any, Any)]](() => collectLeg(dense, "dense"))

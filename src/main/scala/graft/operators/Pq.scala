@@ -344,18 +344,9 @@ object Pq {
             floor(((v.cast("double") - mn) / (mx - mn)) * lit(255.0)))
             .otherwise(0L)
         }).as("codes"))
-    // probe: nprobe cells nearest the query (rounded cosine, cell
-    // tiebreak — annIvf's ranking)
-    val cents = centroids
-      .select(col(groupCol).as("cgroup"), col("centroid"))
-      .withColumn("gnrm", VectorFns.l2Norm(col("centroid")))
-    val q = query.select(col(qVec))
-      .withColumn("qnrm", VectorFns.l2Norm(col(qVec)))
-    val probed = cents.crossJoin(broadcast(q))
-      .withColumn("pcos", round(VectorFns.cosinePrenormed(
-        col("centroid"), col(qVec), col("gnrm"), col("qnrm")), 6))
-      .orderBy(col("pcos").desc_nulls_last, col("cgroup"))
-      .limit(nprobe)
+    // probe: nprobe cells nearest the query (annIvf's ranking)
+    val q = VectorSearch.queryVector(query, qVec)
+    val probed = VectorSearch.probeCells(q, centroids, groupCol, nprobe)
       .select(col("cgroup").as(groupCol))
     // probed codes only -> midpoint reconstruction -> asymmetric
     // cosine (query uncompressed, like ADC)
@@ -366,8 +357,7 @@ object Pq {
         val mx = r.getField("mx").cast("double")
         mn + (c.cast("double") + lit(0.5)) * (mx - mn) / lit(256.0)
       }))
-    VectorSearch.denseTopK(recon, query, idCol, "recon", qVec, k,
-      Seq(groupCol))
+    VectorSearch.denseTopKOf(recon, q, idCol, "recon", k, Seq(groupCol))
   }
 
   /** IVF-PQ index: coarse spherical cells (the retrieval-metric

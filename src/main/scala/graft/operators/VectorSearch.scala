@@ -43,7 +43,7 @@ object VectorSearch {
     * `vec_norm_sq`) and held by reference, so queries share compiled
     * code.
     */
-  private case class QueryVec(vec: Column, norm: Column)
+  private[operators] case class QueryVec(vec: Column, norm: Column)
 
   /** The query of a single-query frame. The frame is collected on the
     * driver, as the broadcast this replaces collected it: a local frame
@@ -52,7 +52,7 @@ object VectorSearch {
     * rows). More than one row is refused, and an empty frame gives a
     * NULL vector, so the search answers nothing.
     */
-  private def queryVector(query: DataFrame, qVec: String): QueryVec = {
+  private[operators] def queryVector(query: DataFrame, qVec: String): QueryVec = {
     val q = query.select(col(qVec))
     val rows = q.collect()
     require(rows.length <= 1,
@@ -102,11 +102,15 @@ object VectorSearch {
   def denseTopK(
       candidates: DataFrame, query: DataFrame,
       idCol: String, vecCol: String, qVec: String,
-      k: Int, extraCols: Seq[String] = Nil): DataFrame = {
-    val q = queryVector(query, qVec)
+      k: Int, extraCols: Seq[String] = Nil): DataFrame =
+    denseTopKOf(candidates, queryVector(query, qVec), idCol, vecCol, k, extraCols)
+
+  /** denseTopK against an already collected query. */
+  private[operators] def denseTopKOf(
+      candidates: DataFrame, q: QueryVec, idCol: String, vecCol: String,
+      k: Int, extraCols: Seq[String]): DataFrame =
     topKDefined(candidates, guardedCosine(col(vecCol), VectorFns.l2Norm(col(vecCol)), q),
       idCol, k, idCol +: extraCols)
-  }
 
   /** k-NN join: top-k candidates per query row by cosine.
     *
@@ -418,10 +422,10 @@ object VectorSearch {
 
   /** The nprobe coarse cells nearest to ONE literal query vector,
     * ranked: (cgroup, pcos) — a |codebook|-sized computation shared by
-    * annIvf (joined lazily) and annIvfProbe (collected for static
-    * pruning).
+    * annIvf and Pq.ivfSq8TopK (joined lazily) and annIvfProbe
+    * (collected for static pruning). An undefined cosine sorts last.
     */
-  private def probeCells(
+  private[operators] def probeCells(
       q: QueryVec, centroids: DataFrame, groupCol: String,
       nprobe: Int): DataFrame =
     centroids

@@ -1,5 +1,11 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.graftshim.ListenerBusShim
+import org.apache.spark.sql.util.QueryExecutionListener
+
 /** Physical-plan regression guards for the scale-critical properties
   * SURVEY §5 claims (pinned to the repo's Spark 4.1.2 — plan strings
   * are version-specific by design here). Runs against sf0.001 so the
@@ -151,6 +157,8 @@ class PlanAuditSpec extends SparkSpec {
     val bounded: Map[String, (Long, String)] = Map(
       "brief_predef" -> (16L, "predefined-brief panel (5)"),
       "cite_related" -> (32L, "k-bounded related-paper take (10)"),
+      "dedup_semantic" -> (16L, "Lloyd seed take (8), checkpointed at build"),
+      "deg_centrality" -> (128L, "gene panel (40), collected at build"),
       "deg_direction" -> (128L, "gene panel (40)"),
       "deg_enrich" -> (128L, "gene panel + signature rows (41)"),
       "deg_stats" -> (128L, "gene panel (40)"),
@@ -158,6 +166,7 @@ class PlanAuditSpec extends SparkSpec {
       "ev_funnel" -> (16L, "one row per funnel stage (3)"),
       "ev_user_topk" -> (32L, "top-k user take (20)"),
       "gap_matrix" -> (32L, "topic-axis panel (4)"),
+      "hybrid_rrf" -> (128L, "ranked top-k legs (50), run by Fusion.rrf"),
       "integrated_driver" -> (128L, "gene panel (40)"),
       "pack_audit" -> (64L, "per-partition offset rows (32)"),
       "pack_shards" -> (64L, "per-partition offset rows (32)"),
@@ -165,30 +174,52 @@ class PlanAuditSpec extends SparkSpec {
       "reco_enhanced" -> (64L, "k-bounded recommendation list (18)"),
       "reco_paper" -> (32L, "k-bounded recommendation take (8)"),
       "rerank_fused" -> (128L, "candidate shortlist (50)"),
+      "sc_annotate" -> (16L, "Lloyd seed take (4), checkpointed at build"),
       "sc_cellcycle" -> (256L, "cluster x phase panel (60)"),
       "sc_hvg" -> (256L, "HVG panel take (60)"),
+      "sc_markers" -> (16L, "Lloyd seed take (4), checkpointed at build"),
       "sc_pathways" -> (256L, "cluster x pathway panel (65)"),
       "sc_pseudobulk" -> (256L, "cluster x gene panel (64)"),
       "sc_tme" -> (256L, "cluster x cell-type panel (60)"),
       "sc_traj_dynamics" -> (256L, "pseudotime-bin panel (101)"),
       "sc_traj_root" -> (32L, "cluster panel (6)"),
-      "trend_topics" -> (32L, "topic panel (8)"))
+      "trend_topics" -> (32L, "topic panel (8)"),
+      "vs_ivf_pq" -> (16L, "coarse (4) and PQ (8) Lloyd seed takes, checkpointed at build"),
+      "vs_pq_adc" -> (16L, "PQ Lloyd seed takes (8), checkpointed at build"))
     val seen = scala.collection.mutable.Set[String]()
-    SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
+    // Plans a query runs while it is BUILT are audited too: Fusion.rrf
+    // collects hybrid_rrf's ranked legs on the driver, a Lloyd codebook
+    // seeds through a window under a localCheckpoint, and
+    // closenessCentrality collects its graph; those windows are absent
+    // from the returned plan.
+    val built = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        built.add(qe.executedPlan): Unit
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
+      ListenerBusShim.flush(spark.sparkContext)
+      built.clear()
       val df = SparkEntry.queries(name)(spark, d)
+      ListenerBusShim.flush(spark.sparkContext)
+      val atBuild = built.asScala.toSeq.flatMap(PlanWalk.unpartitionedWindows)
       val pre = PlanWalk.unpartitionedWindows(df.queryExecution.executedPlan)
-      if (pre.nonEmpty) {
+      if (pre.nonEmpty || atBuild.nonEmpty) {
         seen += name
         assert(bounded.contains(name),
           s"$name plans an unpartitioned WindowExec but is NOT in the " +
             "bounded-window whitelist — either partition the window or " +
             "whitelist it here with a documented corpus-independent bound")
-        df.collect() // materialize so row metrics / AQE stages finalize
         val (bound, reason) = bounded(name)
-        val wins =
-          PlanWalk.unpartitionedWindows(df.queryExecution.executedPlan)
-        assert(wins.nonEmpty, s"$name: windows vanished after execution?")
-        wins.foreach { w =>
+        val wins = if (pre.isEmpty) Nil else {
+          df.collect() // materialize so row metrics / AQE stages finalize
+          val w = PlanWalk.unpartitionedWindows(df.queryExecution.executedPlan)
+          assert(w.nonEmpty, s"$name: windows vanished after execution?")
+          w
+        }
+        (wins ++ atBuild).foreach { w =>
           val rows = PlanWalk.windowInputRows(w)
           assert(rows.isDefined,
             s"$name: cannot resolve an input-row bound for an " +
@@ -199,7 +230,7 @@ class PlanAuditSpec extends SparkSpec {
         }
       }
       spark.catalog.clearCache()
-    }
+    } finally spark.listenerManager.unregister(listener)
     // the whitelist must not rot: an entry whose query no longer plans
     // an unpartitioned window is stale documentation
     val stale = bounded.keySet -- seen

@@ -288,13 +288,16 @@ class SearchSpec extends SparkSpec {
     }
   }
 
-  test("rrf refuses a leg over maxLegRows, rethrows a leg's failure, " +
+  test("rrf refuses a leg over MaxLegRows, rethrows a leg's failure, " +
     "and runs the dense leg under the caller's job group") {
-    val big = (1L to 11L).map(i => (i, i)).toDF("doc_id", "rank")
+    def legOf(n: Long) = spark.range(1, n + 1).select(col("id").as("doc_id"), col("id").as("rank"))
+    val over = legOf(Fusion.MaxLegRows + 1L)
+    val atBound = legOf(Fusion.MaxLegRows)
     val small = Seq((1L, 1L)).toDF("doc_id", "rank")
-    intercept[IllegalArgumentException](Fusion.rrf(big, small, "doc_id", "rank", 5, maxLegRows = 10))
-    intercept[IllegalArgumentException](Fusion.rrf(small, big, "doc_id", "rank", 5, maxLegRows = 10))
-    assert(Fusion.rrf(big, small, "doc_id", "rank", 5, maxLegRows = 11).count() == 5)
+    intercept[IllegalArgumentException](Fusion.rrf(over, small, "doc_id", "rank", 5))
+    intercept[IllegalArgumentException](Fusion.rrf(small, over, "doc_id", "rank", 5))
+    assert(Fusion.rrf(atBound, small, "doc_id", "rank", 5).count() == 5)
+    val big = (1L to 11L).map(i => (i, i)).toDF("doc_id", "rank")
     val failing = small.withColumn("rank",
       when(col("rank") > 0, raise_error(lit("dense leg failed"))).cast("long"))
     val e = intercept[Exception](Fusion.rrf(failing, small, "doc_id", "rank", 5))
