@@ -61,7 +61,7 @@ object Sessions {
       // depend on which table loaded first (Tables.events also sets
       // it for sessions built elsewhere)
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // iterative operators (connectedComponents, lloydCentroids)
+      // iterative operators (connectedComponents, Pq's L2 Lloyd)
       // leave each superseded round's localCheckpoint blocks to the
       // ContextCleaner, which only reclaims after a driver GC — the
       // 30-min default would let ~25 rounds of label-scale blocks

@@ -1,11 +1,11 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, LeafExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil, TypeUtils}
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expressions for the vector hot path.
@@ -55,6 +55,52 @@ object VectorExpressions {
       case LongType    => arr.getLong(i).toDouble
       case other => throw new IllegalStateException(s"unsupported element $other")
     }
+
+  /** Spark's ascending order of `dt` over Catalyst values with NULL
+    * first — `ORDER BY cell`, and `array_sort` of structs led by the
+    * cell.
+    */
+  def cellOrdering(dt: DataType): Ordering[Any] = {
+    val ord = TypeUtils.getInterpretedOrdering(dt)
+    (a, b) =>
+      if (a != null && b != null) ord.compare(a, b)
+      else (if (a == null) 0 else 1) - (if (b == null) 0 else 1)
+  }
+
+  /** `round(x, 6)` as Spark rounds a double (HALF_UP on the decimal
+    * string; NaN and infinities unchanged).
+    */
+  def round6(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** NearestCell's fold over a widened vector `v(0 until n)`: the index
+    * of the winning centroid, or -1 when no cosine is defined. The dot
+    * product accumulates in array order, as VecDot does; `nullif(…, 0)`
+    * skips a zero denominator (-0.0 included; NaN passes), and the
+    * strict max compares as Spark's `>` (SQLOrderingUtil).
+    */
+  def nearestIndex(v: Array[Double], n: Int, cnrm: Double,
+      cents: Array[Array[Double]], norms: Array[Double]): Int = {
+    var best = -1
+    var bestCos = Double.NegativeInfinity
+    var j = 0
+    while (j < cents.length) {
+      val c = cents(j)
+      if (c != null && c.length == n) {
+        var s = 0.0
+        var i = 0
+        while (i < n) { s += v(i) * c(i); i += 1 }
+        val den = cnrm * norms(j)
+        if (den != 0.0) {
+          val cos = round6(s / den)
+          if (SQLOrderingUtil.compareDoubles(cos, bestCos) > 0) { best = j; bestCos = cos }
+        }
+      }
+      j += 1
+    }
+    best
+  }
 }
 
 /** Deterministic double dot product of two numeric arrays.
@@ -246,4 +292,129 @@ case class RefDouble(value: Double) extends LeafExpression {
     val ref = ctx.addReferenceObj("refDouble", java.lang.Double.valueOf(value), "java.lang.Double")
     ev.copy(code = code"final double ${ev.value} = $ref.doubleValue();", isNull = FalseLiteral)
   }
+}
+
+/** A codebook held on the driver for [[NearestCell]], in cell order
+  * (Spark's ascending order of the cell type, NULL first — the order
+  * `array_sort` gives the `(cell, centroid, norm)` structs). `cells`
+  * holds Catalyst values; `cents(j)` is centroid j widened to doubles,
+  * or null when it is NULL or holds a NULL element; `norms(j)` is its
+  * L2 norm (unread when `cents(j)` is null).
+  */
+final class CellBook(
+    val cellType: DataType, val cells: Array[Any],
+    val cents: Array[Array[Double]], val norms: Array[Double]) extends Serializable {
+  require(cells.length == cents.length && cents.length == norms.length,
+    "codebook columns differ in length")
+  override def toString: String = s"codebook[${cells.length}]"
+}
+
+object CellBook {
+
+  /** Builds the codebook from collected `(cell, centroid, norm)`
+    * entries in external form (a centroid is a numeric Seq or null; a
+    * norm a Double or null), sorted into cell order. Entries with an
+    * equal cell keep their input order; which of them wins a row
+    * never changes the cell it is given.
+    */
+  def apply(cellType: DataType, entries: Seq[(Any, scala.collection.Seq[Any], Any)]): CellBook = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(cellType)
+    val sorted = entries.map { case (c, v, n) => (toCatalyst(c), v, n) }
+      .sortBy(_._1)(VectorExpressions.cellOrdering(cellType))
+    def widen(v: scala.collection.Seq[Any]): Array[Double] =
+      if (v == null || v.contains(null)) null
+      else v.map {
+        case x: Float => x.toDouble
+        case x: Double => x
+        case x: Int => x.toDouble
+        case x: Long => x.toDouble
+        case x => throw new IllegalArgumentException(s"non-numeric centroid element $x")
+      }.toArray
+    val cents = sorted.map { case (_, v, _) => widen(v) }.toArray
+    new CellBook(cellType, sorted.map(_._1).toArray, cents,
+      sorted.zip(cents).map { case ((_, _, n), c) =>
+        if (c == null || n == null) Double.NaN else n.asInstanceOf[Double] }.toArray)
+  }
+}
+
+/** The nearest cell of `vec` in a driver-held codebook: per cell, in
+  * cell order, the cosine `round(vec_dot(vec, centroid) /
+  * nullif(cnrm · norm, 0), 6)` (HALF_UP, as `round`), folded by strict
+  * max with Spark's `>` on doubles — a NULL cosine is skipped, NaN
+  * beats every number, and a tie keeps the earlier (smaller) cell.
+  * `cnrm` is the L2 norm of `vec`. This is the `aggregate` fold over
+  * the sorted centroid structs, done in one primitive loop per row
+  * with no boxed struct per cell.
+  *
+  * Bad inputs: a NULL vector, a NULL element, a NULL `cnrm`, a
+  * zero-norm vector, a vector of another length than every centroid,
+  * and an empty codebook give a NULL cell (every cosine is NULL); a
+  * NULL, zero-norm or wrong-length centroid never wins. A vector with
+  * a NaN or infinite component has NaN cosines and goes to the first
+  * cell of matching length, where its own NaN score drops it from
+  * every search.
+  *
+  * The codebook is held as reference objects (`double[][]`, `double[]`,
+  * `Object[]`), so a new codebook of the same types reuses the
+  * compiled code.
+  */
+case class NearestCell(vec: Expression, cnrm: Expression, book: CellBook)
+    extends BinaryExpression {
+  import VectorExpressions._
+
+  override def left: Expression = vec
+  override def right: Expression = cnrm
+  override def dataType: DataType = book.cellType
+  override def nullable: Boolean = true
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "nearest_cell"
+
+  private def elemType: DataType = vec.dataType.asInstanceOf[ArrayType].elementType
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    checkArray(vec.dataType, "vec") match {
+      case TypeCheckResult.TypeCheckSuccess if cnrm.dataType != DoubleType =>
+        TypeCheckResult.TypeCheckFailure(s"cnrm must be double, got ${cnrm.dataType.sql}")
+      case other => other
+    }
+
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val arr = a.asInstanceOf[ArrayData]
+    val n = arr.numElements()
+    if ((0 until n).exists(arr.isNullAt)) return null
+    val v = Array.tabulate(n)(i => elemEval(arr, i, elemType))
+    val best = nearestIndex(v, n, b.asInstanceOf[Double], book.cents, book.norms)
+    if (best < 0) null else book.cells(best)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cents = ctx.addReferenceObj("ncCents", book.cents, "double[][]")
+    val norms = ctx.addReferenceObj("ncNorms", book.norms, "double[]")
+    val cells = ctx.addReferenceObj("ncCells", book.cells, "Object[]")
+    val buf = ctx.addMutableState("double[]", "ncBuf", b => s"$b = new double[0];")
+    val boxed = CodeGenerator.boxedType(dataType)
+    nullSafeCodeGen(ctx, ev, (a, nrm) => {
+      val (n, i, best, cell) =
+        (ctx.freshName("n"), ctx.freshName("i"), ctx.freshName("best"), ctx.freshName("cell"))
+      s"""
+         |final int $n = $a.numElements();
+         |if ($buf.length < $n) $buf = new double[$n];
+         |for (int $i = 0; $i < $n; $i++) {
+         |  if ($a.isNullAt($i)) { ${ev.isNull} = true; break; }
+         |  $buf[$i] = ${elemGet(a, i, elemType)};
+         |}
+         |if (!${ev.isNull}) {
+         |  final int $best = graft.expressions.VectorExpressions.nearestIndex(
+         |    $buf, $n, $nrm, $cents, $norms);
+         |  final Object $cell = $best < 0 ? null : $cells[$best];
+         |  if ($cell == null) ${ev.isNull} = true;
+         |  else ${ev.value} = ($boxed) $cell;
+         |}
+       """.stripMargin
+    })
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): NearestCell =
+    copy(vec = newLeft, cnrm = newRight)
 }

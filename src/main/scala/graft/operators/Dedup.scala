@@ -908,7 +908,7 @@ object Dedup {
     * codebook, miss only cross-cell pairs.
     *
     * Scale shape: codebook training and BOTH assignment passes are
-    * zero-exchange folds over broadcast centroids
+    * zero-exchange NearestCell passes over the driver-held codebook
     * (VectorSearch.assignCells); only (cell, id) keys shuffle for
     * the size prune, and the within-cell self-join is bounded by
     * `maxCell`² per cell — cells past the cap emit no pairs (the

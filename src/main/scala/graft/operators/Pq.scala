@@ -14,9 +14,9 @@ import graft.functions.VectorFns
   * bytes: 32× at d=64, m=8) and scores queries against codes via
   * per-subspace lookup tables without touching raw vectors.
   *
-  * Composition, not new machinery: training runs lloydCentroids'
-  * loop shape (broadcast fold assignment, zero corpus exchange,
-  * per-round localCheckpoint) once per subspace on the sliced
+  * Composition, not new machinery: training runs Lloyd's loop shape
+  * (broadcast fold assignment, zero corpus exchange, per-round
+  * localCheckpoint) once per subspace on the sliced
   * vectors — with the L2 objective PQ requires instead of the
   * spherical one (see assignL2); encoding is the same narrow fold
   * per subspace; ADC scoring is a broadcast m×k lookup-table fold +
@@ -102,17 +102,18 @@ object Pq {
 
   /** Deterministic L2 Lloyd for one subspace: id-ordered seeds, then
     * `iters` rounds of narrow fold-assignment + long-form mean —
-    * lloydCentroids' loop with the L2 objective above (incl. the
-    * per-round localCheckpoint lineage truncation).
+    * lloydCentroids' loop with the L2 objective above, over a
+    * broadcast codebook with a per-round localCheckpoint lineage
+    * truncation.
     */
   private def lloydL2(
       vectors: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.orderBy(col(idCol))
-    // lazy checkpoints — the lloydCentroids r21 rationale: plan-level
-    // truncation happens at creation, no per-round driver decision
-    // exists, so no round needs an eager materialization action
+    // lazy checkpoints (r21): plan-level truncation happens at
+    // creation, no per-round driver decision exists, so no round needs
+    // an eager materialization action
     var cents = vectors.orderBy(col(idCol)).limit(k)
       .withColumn("cell", (row_number().over(w) - 1).cast("int"))
       .select(col("cell"), VectorFns.asDouble(col(vecCol)).as("centroid"))
@@ -308,11 +309,11 @@ object Pq {
     *
     * Scale shape: the range is ONE map-side-combined per-dimension
     * min/max aggregate (d rows, broadcast back); assignment is
-    * assignCells' zero-exchange broadcast fold; codes (the stored
+    * assignCells' zero-exchange kernel pass; codes (the stored
     * index: id, cell, d bytes) are built in the same narrow pass; at
-    * query time a broadcast semi of ≤ nprobe cell keys prunes before
-    * any reconstruction — raw vectors are never read by the query
-    * path.
+    * query time a static filter on the ≤ nprobe driver-ranked cells
+    * prunes before any reconstruction — raw vectors are never read by
+    * the query path.
     */
   def ivfSq8TopK(
       candidates: DataFrame, query: DataFrame, centroids: DataFrame,
@@ -327,9 +328,11 @@ object Pq {
       array_sort(collect_list(struct(col("i"), col("mn"), col("mx")))),
       x => struct(x.getField("mn").as("mn"), x.getField("mx").as("mx")))
       .as("rng"))
-    // stored index rows: (id, cell, codes)
+    // stored index rows: (id, cell, codes); the codebook is collected
+    // once for the assignment and the probe ranking below
+    val book = VectorSearch.local(centroids.select(col(groupCol), col("centroid")))
     val assigned = VectorSearch.assignCells(
-      candidates, centroids, idCol, vecCol, groupCol)
+      candidates, book, idCol, vecCol, groupCol)
     // rng rides along with the codes so the reconstruction stage
     // below reuses it — re-joining statsArr there would recompute
     // the corpus-wide min/max aggregate a second time (two full
@@ -344,14 +347,15 @@ object Pq {
             floor(((v.cast("double") - mn) / (mx - mn)) * lit(255.0)))
             .otherwise(0L)
         }).as("codes"))
-    // probe: nprobe cells nearest the query (annIvf's ranking)
+    // probe: nprobe cells nearest the query, ranked on the driver
+    // (annIvfProbe's static filter; it stays above the assignment's
+    // generator, so the kernel runs once per row)
     val q = VectorSearch.queryVector(query, qVec)
-    val probed = VectorSearch.probeCells(q, centroids, groupCol, nprobe)
-      .select(col("cgroup").as(groupCol))
+    val cells = VectorSearch.probeCells(q, book, groupCol, nprobe)
     // probed codes only -> midpoint reconstruction -> asymmetric
     // cosine (query uncompressed, like ADC)
     val recon = codes
-      .join(broadcast(probed), Seq(groupCol))
+      .where(col(groupCol).isin(cells: _*))
       .withColumn("recon", zip_with(col("codes"), col("rng"), (c, r) => {
         val mn = r.getField("mn").cast("double")
         val mx = r.getField("mx").cast("double")

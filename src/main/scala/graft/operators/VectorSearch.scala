@@ -1,13 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.{Literal, Sqrt}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnShim
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, StructField, StructType}
 
-import graft.expressions.{RefDouble, VecNormSq}
+import graft.expressions.{CellBook, NearestCell, RefDouble, VecNormSq, VectorExpressions}
 import graft.functions.{TopKAgg, VectorFns}
 
 /** Dense vector search operators — the Spark-native re-expression of
@@ -23,6 +25,13 @@ import graft.functions.{TopKAgg, VectorFns}
   *    The candidate side is scanned once, never shuffled in full.
   *  - multi-query search (knnJoin, annIvfBatch) broadcasts the query
   *    side; the big candidate side is still scanned once.
+  *  - IVF keeps its k-row codebook on the driver, as single-query
+  *    search keeps its query: probe cells are ranked from a collect of
+  *    the codebook's (cell, cosine) pairs and scanned through a static
+  *    `cell IN (...)` filter, and assignment scores every row with one
+  *    native NearestCell pass over the collected codebook. A local
+  *    codebook costs no job, any other one job per collect; neither
+  *    path plans a broadcast or a join.
   *  - single-query top-k goes through `ORDER BY ... LIMIT k`, which
   *    Spark plans as TakeOrderedAndProject (per-partition heaps +
   *    driver merge — no global sort, no full shuffle).
@@ -259,7 +268,9 @@ object VectorSearch {
           .otherwise("stable").as("status"))
   }
 
-  /** Centroids as dense arrays (pos-sorted), for broadcasting. */
+  /** Centroids as dense arrays (pos-sorted), one row per group: a
+    * codebook for assignCells and the IVF probes.
+    */
   def centroidArrays(
       vectors: DataFrame, groupCol: String, vecCol: String): DataFrame =
     groupCentroids(vectors, groupCol, vecCol)
@@ -268,52 +279,65 @@ object VectorSearch {
         array_sort(collect_list(struct(col("pos"), col("v")))),
         x => x.getField("v")).as("centroid"))
 
-  /** Nearest-centroid assignment as a NARROW per-row fold over the
-    * broadcast centroid array — the shared building block of IVF and
-    * Lloyd/k-means training. All K centroids fold into ONE broadcast
-    * array row (sorted by cell id, so the strict-max fold resolves
-    * ties to the smallest cell); the aggregate HOF is interpreted but
-    * VecDot inside it evaluates natively — K dot products per row,
-    * ZERO exchange of the big side (a crossJoin + window would
-    * shuffle |corpus|·K rows).
+  /** Nearest-centroid assignment — the shared building block of IVF and
+    * Lloyd/k-means training. The codebook (`groupCol`, `centroid`) is
+    * collected on the driver once (no job when it is local, one
+    * otherwise, as the broadcast it replaces) and every row is scored
+    * by ONE native NearestCell pass over it: cosine rounded to 6 dp,
+    * strict max, ties to the smallest cell. The big side is a narrow
+    * projection — no join, no broadcast, no exchange (a crossJoin +
+    * window would shuffle |corpus|·K rows).
+    *
+    * Bad-input rule: an undefined vector (NULL, a NULL element, zero
+    * norm, or no centroid of its length) gets a NULL cell and is never
+    * probed (see NearestCell).
+    *
+    * The cell comes out of a generator, `explode(array(cell))`, one
+    * row per input row, so a filter on it — annIvfProbe's static cell
+    * list over an on-the-fly assignment — stays above the kernel: a
+    * filter on a projected cell would be pushed below the projection
+    * with the kernel inlined a second time (the topKDefined device).
     * Output: (idCol, vecCol, cnrm, cell).
     */
   def assignCells(
       candidates: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String, groupCol: String): DataFrame = {
-    val cents = centroids
-      .select(col(groupCol).as("cgroup"), col("centroid"))
-      .withColumn("gnrm", VectorFns.l2Norm(col("centroid")))
-    val cellType = centroids.schema(groupCol).dataType
-    val centsArr = cents.agg(
-      array_sort(collect_list(struct(col("cgroup"), col("centroid"), col("gnrm"))))
-        .as("cents"))
+    val cell = ColumnShim.column(NearestCell(ColumnShim.expression(col(vecCol)),
+      ColumnShim.expression(col("cnrm")), cellBook(centroids, groupCol)))
     candidates
       .withColumn("cnrm", VectorFns.l2Norm(col(vecCol)))
-      .crossJoin(broadcast(centsArr))
-      .withColumn("best", aggregate(
-        col("cents"),
-        struct(lit(Double.NegativeInfinity).as("acos"),
-          lit(null).cast(cellType).as("cell")),
-        (acc, c) => {
-          val acos = round(VectorFns.cosinePrenormed(
-            col(vecCol), c.getField("centroid"),
-            col("cnrm"), c.getField("gnrm")), 6)
-          when(acos > acc.getField("acos"),
-            struct(acos.as("acos"), c.getField("cgroup").as("cell")))
-            .otherwise(acc)
-        }))
-      .select(col(idCol), col(vecCol), col("cnrm"),
-        col("best").getField("cell").as("cell"))
+      .select(col(idCol), col(vecCol), col("cnrm"), explode(array(cell)).as("cell"))
   }
 
+  /** The codebook (`groupCol`, `centroid`) collected on the driver,
+    * with each centroid's norm computed by the same `l2Norm`
+    * expression as a candidate's.
+    */
+  private[graft] def cellBook(centroids: DataFrame, groupCol: String): CellBook = {
+    val rows = centroids
+      .select(col(groupCol), col("centroid"), VectorFns.l2Norm(col("centroid")))
+      .collect()
+    CellBook(centroids.schema(groupCol).dataType,
+      rows.toSeq.map(r => (r.get(0), r.getAs[scala.collection.Seq[Any]](1), r.get(2))))
+  }
+
+  /** `frame` collected into a driver-local relation (a codebook: k
+    * rows). Collecting a local frame again costs no job, so a codebook
+    * read twice — assignment and probe ranking — is computed once.
+    */
+  private[operators] def local(frame: DataFrame): DataFrame =
+    frame.sparkSession.createDataFrame(java.util.Arrays.asList(frame.collect(): _*), frame.schema)
+
+  private val CodebookSchema = StructType(Seq(
+    StructField("cell", IntegerType), StructField("centroid", ArrayType(DoubleType))))
+
   /** Deterministic spherical k-means (Lloyd) codebook trainer: init =
-    * the k lowest-id vectors, then `iters` rounds of narrow
-    * fold-assignment + long-form mean. Per iteration the corpus is
-    * scanned once with zero exchange (assignment) and only (cell,
-    * pos, sum) rows shuffle — the general codebook path when no
-    * natural cells exist. Cosine (spherical) assignment matches the
-    * retrieval metric. Deterministic: id-ordered init, tie-to-
+    * the k lowest-id vectors, numbered 0..k-1 in id order, then `iters`
+    * rounds of narrow kernel assignment + long-form mean. Per iteration
+    * the corpus is scanned once with zero exchange (assignment) and
+    * only (cell, pos, sum) rows shuffle — the general codebook path
+    * when no natural cells exist. Cosine (spherical) assignment matches
+    * the retrieval metric. Deterministic: id-ordered init, tie-to-
     * smallest-cell assignment, sequential-order means.
     *
     * The codebook can end up with FEWER than k cells: duplicate seed
@@ -324,40 +348,23 @@ object VectorSearch {
     * cell count, not the requested k — annIvf's probe fraction is
     * nprobe / |codebook|.
     *
-    * Each iteration's codebook (k tiny rows) is MATERIALIZED with an
-    * eager localCheckpoint — the iterative-lineage rule from
-    * connectedComponents: left lazy, iteration n's plan nests
-    * iteration n−1's whole assignment subtree, so a 2-iteration
-    * chain re-plans (and re-scans) the corpus ~2ⁿ times downstream
-    * (observed: 16 corpus scans in one sc_* query plan, vs ~3 after
-    * truncation). Materializing k×d doubles per round costs nothing
-    * at any scale.
+    * The codebook stays on the driver: the k seed rows are collected
+    * (one top-k job) and numbered there, and each round's k×d codebook
+    * is collected (one job) into a local relation that the next round's
+    * assignment reads without a job. The returned frame is local, so
+    * iteration n's plan never nests iteration n−1's (no lineage to
+    * truncate), and callers collect it for free.
     */
   def lloydCentroids(
       vectors: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int): DataFrame = {
-    val w = Window.orderBy(col(idCol))
-    // k rows — driver-scale window; the WindowExec single-partition
-    // warning is expected and harmless here.
-    // Checkpoints are LAZY (r21): localCheckpoint(false) truncates the
-    // LOGICAL plan immediately (each round plans over a LogicalRDD, so
-    // no 2ⁿ nesting), while execution defers to the caller's terminal
-    // action — Lloyd has no per-round driver decision (fixed iters, no
-    // convergence read), so nothing needs eager materialization and
-    // the iters+1 driver actions disappear; each round's codebook RDD
-    // still persists at first compute and each round is referenced
-    // exactly once (the next round's broadcast centsArr build).
-    // Wall at sf0.1 measured a wash (the per-round broadcast builds
-    // dominate either way) — kept for the action-count reduction.
-    var cents = vectors.orderBy(col(idCol)).limit(k)
-      .withColumn("cell", (row_number().over(w) - 1).cast("int"))
-      .select(col("cell"), VectorFns.asDouble(col(vecCol)).as("centroid"))
-      .localCheckpoint(false)
+    val seeds = vectors.orderBy(col(idCol)).limit(k)
+      .select(VectorFns.asDouble(col(vecCol))).collect()
+    var cents = vectors.sparkSession.createDataFrame(java.util.Arrays.asList(
+      seeds.indices.map(i => Row(i, seeds(i).get(0))): _*), CodebookSchema)
     for (_ <- 1 to iters) {
       val assigned = assignCells(vectors, cents, idCol, vecCol, "cell")
-      cents = centroidArrays(assigned, "cell", vecCol)
-        .select(col("cell"), col("centroid"))
-        .localCheckpoint(false)
+      cents = local(centroidArrays(assigned, "cell", vecCol).select(col("cell"), col("centroid")))
     }
     cents
   }
@@ -401,39 +408,62 @@ object VectorSearch {
     topKPerQuery(scored, qId, idCol, k)
   }
 
-  /** IVF-style ANN: assign every vector to its nearest coarse centroid
-    * (broadcast), probe the `nprobe` cells nearest to the query, exact
-    * cosine inside the probed cells only. This is the 100 TB path: the
-    * big side is scanned ONCE for assignment with zero exchange (see
-    * assignCells) and queries touch only `nprobe/K` of the data.
-    * `query` follows denseTopK's single-query rules.
+  /** IVF-style ANN with assignment on the fly: annIvfProbe over
+    * assignCells. Every vector is assigned to its nearest coarse
+    * centroid (one native pass, zero exchange), the `nprobe` cells
+    * nearest to the query are ranked on the driver, and exact cosine
+    * runs inside the probed cells only. The codebook is collected once
+    * into a local relation that both steps read. `query` follows
+    * denseTopK's single-query rules.
     */
   def annIvf(
       candidates: DataFrame, query: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String, qVec: String, groupCol: String,
       nprobe: Int, k: Int): DataFrame = {
-    val q = queryVector(query, qVec)
-    val assigned = assignCells(candidates, centroids, idCol, vecCol, groupCol)
-    val probed = probeCells(q, centroids, groupCol, nprobe)
-      .select(col("cgroup").as("cell"))
-    scoreProbedTopK(assigned.join(broadcast(probed), Seq("cell")),
-      q, idCol, vecCol, k)
+    val book = local(centroids.select(col(groupCol), col("centroid")))
+    annIvfProbe(assignCells(candidates, book, idCol, vecCol, groupCol), query, book,
+      idCol, vecCol, qVec, groupCol, nprobe, k)
   }
 
   /** The nprobe coarse cells nearest to ONE literal query vector,
-    * ranked: (cgroup, pcos) — a |codebook|-sized computation shared by
-    * annIvf and Pq.ivfSq8TopK (joined lazily) and annIvfProbe
-    * (collected for static pruning). An undefined cosine sorts last.
+    * ranked on the driver (rankCells) from the codebook's collected
+    * (cell, pcos) pairs. The score is a Catalyst projection over the
+    * codebook, which Spark evaluates without a job when the codebook
+    * is a local relation (ConvertToLocalRelation); any other codebook
+    * costs one job. Shared by annIvfProbe and Pq.ivfSq8TopK, which
+    * scan the probed cells through a static `IN` filter.
     */
   private[operators] def probeCells(
       q: QueryVec, centroids: DataFrame, groupCol: String,
-      nprobe: Int): DataFrame =
-    centroids
-      .select(col(groupCol).as("cgroup"), col("centroid"))
-      .withColumn("pcos", round(VectorFns.cosinePrenormed(col("centroid"), q.vec,
+      nprobe: Int): Seq[Any] = {
+    val pairs = centroids
+      .select(col(groupCol), round(VectorFns.cosinePrenormed(col("centroid"), q.vec,
         VectorFns.l2Norm(col("centroid")), q.norm), 6))
-      .orderBy(col("pcos").desc, col("cgroup"))
-      .limit(nprobe)
+      .collect()
+    rankCells(centroids.schema(groupCol).dataType, pairs.toSeq.map(r => (r.get(0), r.get(1))),
+      nprobe)
+  }
+
+  /** The first `nprobe` cells of (cell, pcos) pairs in the order of
+    * `orderBy(pcos.desc, cell).limit(nprobe)`: pcos descending with a
+    * NULL last, compared as Spark compares doubles (NaN ranks highest,
+    * -0.0 ties 0.0), then the cell ascending with a NULL first. Cells
+    * are external values of `cellType`.
+    */
+  private[graft] def rankCells(cellType: DataType, pairs: Seq[(Any, Any)],
+      nprobe: Int): Seq[Any] = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(cellType)
+    val byCell = VectorExpressions.cellOrdering(cellType)
+    // (Catalyst cell, pcos)
+    val rank: Ordering[(Any, Any)] = (a, b) => (a._2, b._2) match {
+      case (x: Double, y: Double) if SQLOrderingUtil.compareDoubles(x, y) != 0 =>
+        SQLOrderingUtil.compareDoubles(y, x)
+      case (null, y) if y != null => 1
+      case (x, null) if x != null => -1
+      case _ => byCell.compare(a._1, b._1)
+    }
+    pairs.map { case (c, s) => (c, (toCatalyst(c), s)) }.sortBy(_._2)(rank).take(nprobe).map(_._1)
+  }
 
   /** Exact-cosine top-k over an already-cell-pruned candidate frame
     * (idCol, vecCol, cnrm, cell) against a literal query vector — the
@@ -445,24 +475,20 @@ object VectorSearch {
       k: Int): DataFrame =
     topKDefined(pruned, guardedCosine(col(vecCol), col("cnrm"), q), idCol, k, Seq(idCol, "cell"))
 
-  /** Probe an ALREADY-ASSIGNED IVF index — the persisted-index twin
-    * of annIvf for the production regime where assignment ran at
-    * ingest (assignCells / an append batch) and the (id, vec, cnrm,
-    * cell) rows live in a table PARTITIONED by `cell`
-    * (Corpus.writePartitioned). Two-phase, like every on-disk IVF
-    * engine: first the nprobe nearest cells are ranked and COLLECTED
-    * (a |codebook|-sized job ending in nprobe ints — the same
-    * driver-bounded cost class as the probe-list broadcast), then the
-    * index is scanned with a STATIC `cell IN (...)` predicate. The
-    * literal predicate is what turns cell pruning from a row filter
-    * into partition pruning — un-probed cells' FILES are skipped at
-    * listing time (`PartitionFilters: [cell IN ...]`), which a lazy
-    * runtime join cannot do (dynamic partition pruning does not see
-    * through a limit-based build side). The probe plan is exchange-
-    * free: scan → literal-query score → TakeOrderedAndProject. The index
-    * never re-assigns and its vectors never shuffle. Spec-pinned in
-    * SearchSpec. Returns identical rows to annIvf on the same inputs
-    * (same rounded probe ranking, same scoring tail).
+  /** Probe an ALREADY-ASSIGNED IVF index — the persisted-index regime
+    * where assignment ran at ingest (assignCells / an append batch)
+    * and the (id, vec, cnrm, cell) rows live in a table PARTITIONED by
+    * `cell` (Corpus.writePartitioned). Two-phase, like every on-disk
+    * IVF engine: first the nprobe nearest cells are ranked on the
+    * driver (probeCells: no job for a local codebook, one for any
+    * other), then the index is scanned with a STATIC `cell IN (...)`
+    * predicate. The literal predicate is what turns cell pruning from
+    * a row filter into partition pruning — un-probed cells' FILES are
+    * skipped at listing time (`PartitionFilters: [cell IN ...]`). The
+    * probe plan is exchange-free: scan → literal-query score →
+    * TakeOrderedAndProject, one job. The index never re-assigns and its
+    * vectors never shuffle. Spec-pinned in SearchSpec and IvfSpec.
+    * annIvf is this probe over an on-the-fly assignment.
     *
     * `assigned` must carry assignCells' output columns: idCol,
     * vecCol, `cnrm` (vector L2 norm) and `cell`.
@@ -473,7 +499,6 @@ object VectorSearch {
       nprobe: Int, k: Int): DataFrame = {
     val q = queryVector(query, qVec)
     val cells = probeCells(q, centroids, groupCol, nprobe)
-      .select(col("cgroup")).collect().map(_.get(0))
     scoreProbedTopK(assigned.where(col("cell").isin(cells: _*)),
       q, idCol, vecCol, k)
   }

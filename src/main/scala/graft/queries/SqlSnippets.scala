@@ -21,9 +21,11 @@ object SqlSnippets {
   /** One-round spherical-Lloyd training + final-assignment CTE chain
     * over the embeddings table — the oracle twin of
     * `VectorSearch.lloydCentroids(k, iters = 1)` followed by
-    * `assignCells` (id-ordered seeds, cosine argmax on 6dp-rounded
-    * scores with ties to the smallest cell, member means, re-assign
-    * to the trained codebook). ONE shared definition (the
+    * `assignCells` (id-ordered seeds — `sd` numbers them with a
+    * window where Spark numbers the collected seed rows on the driver —
+    * cosine argmax on 6dp-rounded scores with ties to the smallest
+    * cell — NearestCell's fold — member means, re-assign to the
+    * trained codebook). ONE shared definition (the
     * hexPrefixDecode rule): dedup_semantic and vs_ivf_pq replay the
     * identical protocol and must stay in lockstep.
     *

@@ -115,8 +115,8 @@ class PlanAuditSpec extends SparkSpec {
     // regime — the audited plan is the plan a 100 TB run would
     // produce. Queries that never scan a fact are skipped by plan
     // inspection (cheap), not by a hand-kept list that could rot.
-    // ONE DataFrame per query: sc_* bindings run eager localCheckpoint
-    // jobs at construction time, so building the frame twice (once for
+    // ONE DataFrame per query: sc_* bindings collect their Lloyd
+    // codebooks at construction time, so building the frame twice (once for
     // the touches-fact probe, once for the broadcast audit) doubles
     // real Spark work across ~100 queries
     val atScale = spark.newSession()
@@ -157,7 +157,6 @@ class PlanAuditSpec extends SparkSpec {
     val bounded: Map[String, (Long, String)] = Map(
       "brief_predef" -> (16L, "predefined-brief panel (5)"),
       "cite_related" -> (32L, "k-bounded related-paper take (10)"),
-      "dedup_semantic" -> (16L, "Lloyd seed take (8), checkpointed at build"),
       "deg_centrality" -> (128L, "gene panel (40), collected at build"),
       "deg_direction" -> (128L, "gene panel (40)"),
       "deg_enrich" -> (128L, "gene panel + signature rows (41)"),
@@ -174,22 +173,20 @@ class PlanAuditSpec extends SparkSpec {
       "reco_enhanced" -> (64L, "k-bounded recommendation list (18)"),
       "reco_paper" -> (32L, "k-bounded recommendation take (8)"),
       "rerank_fused" -> (128L, "candidate shortlist (50)"),
-      "sc_annotate" -> (16L, "Lloyd seed take (4), checkpointed at build"),
       "sc_cellcycle" -> (256L, "cluster x phase panel (60)"),
       "sc_hvg" -> (256L, "HVG panel take (60)"),
-      "sc_markers" -> (16L, "Lloyd seed take (4), checkpointed at build"),
       "sc_pathways" -> (256L, "cluster x pathway panel (65)"),
       "sc_pseudobulk" -> (256L, "cluster x gene panel (64)"),
       "sc_tme" -> (256L, "cluster x cell-type panel (60)"),
       "sc_traj_dynamics" -> (256L, "pseudotime-bin panel (101)"),
       "sc_traj_root" -> (32L, "cluster panel (6)"),
       "trend_topics" -> (32L, "topic panel (8)"),
-      "vs_ivf_pq" -> (16L, "coarse (4) and PQ (8) Lloyd seed takes, checkpointed at build"),
+      "vs_ivf_pq" -> (16L, "PQ Lloyd seed takes (8), checkpointed at build"),
       "vs_pq_adc" -> (16L, "PQ Lloyd seed takes (8), checkpointed at build"))
     val seen = scala.collection.mutable.Set[String]()
     // Plans a query runs while it is BUILT are audited too: Fusion.rrf
-    // collects hybrid_rrf's ranked legs on the driver, a Lloyd codebook
-    // seeds through a window under a localCheckpoint, and
+    // collects hybrid_rrf's ranked legs on the driver, a PQ Lloyd
+    // codebook seeds through a window under a localCheckpoint, and
     // closenessCentrality collects its graph; those windows are absent
     // from the returned plan.
     val built = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()

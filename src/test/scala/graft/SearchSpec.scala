@@ -510,9 +510,9 @@ class SearchSpec extends SparkSpec {
     // side; top-k is TakeOrderedAndProject) ...
     assert(!plan.contains("ShuffleExchange") &&
       !plan.contains("Exchange hashpartitioning"), plan)
-    // ... nor re-assign (the fold over the broadcast centroid array
-    // is the INGEST step, absent from the probe plan)
-    assert(!plan.contains("aggregate("), plan)
+    // ... nor re-assign (the NearestCell pass is the INGEST step,
+    // absent from the probe plan)
+    assert(!plan.contains("nearest_cell"), plan)
     // the two-phase probe's static cell list is a PARTITION filter:
     // un-probed cells' files are skipped at listing time — a query
     // reads nprobe/K of the lake, not all of it
