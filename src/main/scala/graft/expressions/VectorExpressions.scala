@@ -101,6 +101,28 @@ object VectorExpressions {
     }
     best
   }
+
+  /** nearestIndex under the L2 objective: the score is
+    * `round(s − halfNormSq(j), 6)`, whose argmax is argmin ‖v − c‖².
+    */
+  def nearestIndexL2(v: Array[Double], n: Int,
+      cents: Array[Array[Double]], halfNormSq: Array[Double]): Int = {
+    var best = -1
+    var bestScore = Double.NegativeInfinity
+    var j = 0
+    while (j < cents.length) {
+      val c = cents(j)
+      if (c != null && c.length == n) {
+        var s = 0.0
+        var i = 0
+        while (i < n) { s += v(i) * c(i); i += 1 }
+        val score = round6(s - halfNormSq(j))
+        if (SQLOrderingUtil.compareDoubles(score, bestScore) > 0) { best = j; bestScore = score }
+      }
+      j += 1
+    }
+    best
+  }
 }
 
 /** Deterministic double dot product of two numeric arrays.
@@ -296,30 +318,41 @@ case class RefDouble(value: Double) extends LeafExpression {
 
 /** A codebook held on the driver for [[NearestCell]], in cell order
   * (Spark's ascending order of the cell type, NULL first — the order
-  * `array_sort` gives the `(cell, centroid, norm)` structs). `cells`
+  * `array_sort` gives the `(cell, centroid, term)` structs). `cells`
   * holds Catalyst values; `cents(j)` is centroid j widened to doubles,
-  * or null when it is NULL or holds a NULL element; `norms(j)` is its
-  * L2 norm (unread when `cents(j)` is null).
+  * or null when it is NULL or holds a NULL element. `terms(j)` is the
+  * per-cell term of the book's objective, fixed when the book is
+  * built: the centroid's L2 norm for [[CellBook.Cosine]], its
+  * `normSq / 2` for [[CellBook.L2]] (unread when `cents(j)` is null).
   */
 final class CellBook(
     val cellType: DataType, val cells: Array[Any],
-    val cents: Array[Array[Double]], val norms: Array[Double]) extends Serializable {
-  require(cells.length == cents.length && cents.length == norms.length,
+    val cents: Array[Array[Double]], val terms: Array[Double],
+    val objective: CellBook.Objective) extends Serializable {
+  require(cells.length == cents.length && cents.length == terms.length,
     "codebook columns differ in length")
-  override def toString: String = s"codebook[${cells.length}]"
+  override def toString: String = s"codebook[${cells.length}, $objective]"
 }
 
 object CellBook {
 
-  /** Builds the codebook from collected `(cell, centroid, norm)`
+  /** What NearestCell maximizes over a book's cells. */
+  sealed trait Objective
+  /** The rounded cosine; terms are centroid norms. */
+  case object Cosine extends Objective
+  /** The rounded `dot − ‖c‖²/2`; terms are centroid `normSq / 2`. */
+  case object L2 extends Objective
+
+  /** Builds the codebook from collected `(cell, centroid, term)`
     * entries in external form (a centroid is a numeric Seq or null; a
-    * norm a Double or null), sorted into cell order. Entries with an
+    * term a Double or null), sorted into cell order. Entries with an
     * equal cell keep their input order; which of them wins a row
     * never changes the cell it is given.
     */
-  def apply(cellType: DataType, entries: Seq[(Any, scala.collection.Seq[Any], Any)]): CellBook = {
+  def apply(cellType: DataType, entries: Seq[(Any, scala.collection.Seq[Any], Any)],
+      objective: Objective): CellBook = {
     val toCatalyst = CatalystTypeConverters.createToCatalystConverter(cellType)
-    val sorted = entries.map { case (c, v, n) => (toCatalyst(c), v, n) }
+    val sorted = entries.map { case (c, v, t) => (toCatalyst(c), v, t) }
       .sortBy(_._1)(VectorExpressions.cellOrdering(cellType))
     def widen(v: scala.collection.Seq[Any]): Array[Double] =
       if (v == null || v.contains(null)) null
@@ -332,31 +365,36 @@ object CellBook {
       }.toArray
     val cents = sorted.map { case (_, v, _) => widen(v) }.toArray
     new CellBook(cellType, sorted.map(_._1).toArray, cents,
-      sorted.zip(cents).map { case ((_, _, n), c) =>
-        if (c == null || n == null) Double.NaN else n.asInstanceOf[Double] }.toArray)
+      sorted.zip(cents).map { case ((_, _, t), c) =>
+        if (c == null || t == null) Double.NaN else t.asInstanceOf[Double] }.toArray,
+      objective)
   }
 }
 
 /** The nearest cell of `vec` in a driver-held codebook: per cell, in
-  * cell order, the cosine `round(vec_dot(vec, centroid) /
-  * nullif(cnrm · norm, 0), 6)` (HALF_UP, as `round`), folded by strict
-  * max with Spark's `>` on doubles — a NULL cosine is skipped, NaN
-  * beats every number, and a tie keeps the earlier (smaller) cell.
-  * `cnrm` is the L2 norm of `vec`. This is the `aggregate` fold over
-  * the sorted centroid structs, done in one primitive loop per row
-  * with no boxed struct per cell.
+  * cell order, the score of the book's objective — `round(vec_dot(vec,
+  * centroid) / nullif(cnrm · norm, 0), 6)` under cosine, `cnrm` the
+  * L2 norm of `vec`; `round(vec_dot(vec, centroid) − normSq / 2, 6)`
+  * under L2, which reads no `cnrm` (callers pass a literal) — folded
+  * by strict max with Spark's `>` on doubles: a NULL score is skipped,
+  * NaN beats every number, and a tie keeps the earlier (smaller) cell.
+  * This is the `aggregate` fold over the sorted centroid structs, done
+  * in one primitive loop per row with no boxed struct per cell; code
+  * generation picks the objective's loop once per book.
   *
-  * Bad inputs: a NULL vector, a NULL element, a NULL `cnrm`, a
-  * zero-norm vector, a vector of another length than every centroid,
-  * and an empty codebook give a NULL cell (every cosine is NULL); a
-  * NULL, zero-norm or wrong-length centroid never wins. A vector with
-  * a NaN or infinite component has NaN cosines and goes to the first
-  * cell of matching length, where its own NaN score drops it from
-  * every search.
+  * Bad inputs: a NULL vector, a NULL element, a NULL `cnrm`, a vector
+  * of another length than every centroid, and an empty codebook give
+  * a NULL cell; a NULL or wrong-length centroid never wins. Under
+  * cosine a zero-norm vector also gets a NULL cell and a zero-norm
+  * centroid never wins; under L2 both are ordinary (a zero vector goes
+  * to the centroid of least norm). A NaN or infinite component gives
+  * NaN cosines, so the vector goes to the first cell of matching
+  * length, where its own NaN score drops it from every search; under
+  * L2 its scores are NaN or infinite and the same strict max applies.
   *
   * The codebook is held as reference objects (`double[][]`, `double[]`,
-  * `Object[]`), so a new codebook of the same types reuses the
-  * compiled code.
+  * `Object[]`), so a new codebook of the same types and objective
+  * reuses the compiled code.
   */
 case class NearestCell(vec: Expression, cnrm: Expression, book: CellBook)
     extends BinaryExpression {
@@ -383,19 +421,26 @@ case class NearestCell(vec: Expression, cnrm: Expression, book: CellBook)
     val n = arr.numElements()
     if ((0 until n).exists(arr.isNullAt)) return null
     val v = Array.tabulate(n)(i => elemEval(arr, i, elemType))
-    val best = nearestIndex(v, n, b.asInstanceOf[Double], book.cents, book.norms)
+    val best = book.objective match {
+      case CellBook.Cosine => nearestIndex(v, n, b.asInstanceOf[Double], book.cents, book.terms)
+      case CellBook.L2 => nearestIndexL2(v, n, book.cents, book.terms)
+    }
     if (best < 0) null else book.cells(best)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val cents = ctx.addReferenceObj("ncCents", book.cents, "double[][]")
-    val norms = ctx.addReferenceObj("ncNorms", book.norms, "double[]")
+    val terms = ctx.addReferenceObj("ncTerms", book.terms, "double[]")
     val cells = ctx.addReferenceObj("ncCells", book.cells, "Object[]")
     val buf = ctx.addMutableState("double[]", "ncBuf", b => s"$b = new double[0];")
     val boxed = CodeGenerator.boxedType(dataType)
     nullSafeCodeGen(ctx, ev, (a, nrm) => {
       val (n, i, best, cell) =
         (ctx.freshName("n"), ctx.freshName("i"), ctx.freshName("best"), ctx.freshName("cell"))
+      val fold = book.objective match {
+        case CellBook.Cosine => s"nearestIndex($buf, $n, $nrm, $cents, $terms)"
+        case CellBook.L2 => s"nearestIndexL2($buf, $n, $cents, $terms)"
+      }
       s"""
          |final int $n = $a.numElements();
          |if ($buf.length < $n) $buf = new double[$n];
@@ -404,8 +449,7 @@ case class NearestCell(vec: Expression, cnrm: Expression, book: CellBook)
          |  $buf[$i] = ${elemGet(a, i, elemType)};
          |}
          |if (!${ev.isNull}) {
-         |  final int $best = graft.expressions.VectorExpressions.nearestIndex(
-         |    $buf, $n, $nrm, $cents, $norms);
+         |  final int $best = graft.expressions.VectorExpressions.$fold;
          |  final Object $cell = $best < 0 ? null : $cells[$best];
          |  if ($cell == null) ${ev.isNull} = true;
          |  else ${ev.value} = ($boxed) $cell;

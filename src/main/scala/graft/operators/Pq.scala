@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 
+import graft.expressions.CellBook
 import graft.functions.VectorFns
 
 /** Product quantization — the canonical billion-vector compression
@@ -14,212 +16,118 @@ import graft.functions.VectorFns
   * bytes: 32× at d=64, m=8) and scores queries against codes via
   * per-subspace lookup tables without touching raw vectors.
   *
-  * Composition, not new machinery: training runs Lloyd's loop shape
-  * (broadcast fold assignment, zero corpus exchange, per-round
-  * localCheckpoint) once per subspace on the sliced
-  * vectors — with the L2 objective PQ requires instead of the
-  * spherical one (see assignL2); encoding is the same narrow fold
-  * per subspace; ADC scoring is a broadcast m×k lookup-table fold +
-  * the standard TakeOrdered top-k. Spec-only like lloydCentroids
-  * (model weights aren't oracle-friendly); PqSpec measures recall
-  * against the exact scan — the AnnRecallSpec device.
+  * PQ is IVF with another objective, and runs on IVF's machinery:
+  * training is lloydCentroids' driver-side Lloyd loop once per
+  * subspace on the sliced vectors, and encoding is one native
+  * NearestCell pass per row over the m collected sub-codebooks, both
+  * with the L2 objective PQ requires instead of the spherical one
+  * (CellBook.L2: argmax of `round(v·c − ‖c‖²/2, 6)`). Cosine
+  * assignment ignores sub-vector magnitude, which is exactly what the
+  * ADC dot contributions need preserved (measured: cosine assignment
+  * cost ~20 recall points at m=8,k=64). ADC scoring is a broadcast
+  * m×k lookup-table fold + the standard TakeOrdered top-k. PqSpec
+  * measures recall against the exact scan — the AnnRecallSpec
+  * device; vs_pq_adc and vs_ivf_pq replay the whole chain at one
+  * Lloyd round against the oracle.
   *
   * Scale notes: train on a SAMPLE at production (the codebook needs
   * thousands of vectors per cell, not the corpus); encoding is the
-  * only full-corpus pass and shuffles just (id, m codes) rows to
-  * assemble code arrays; queries never shuffle the code table.
+  * only full-corpus pass, narrow and exchange-free; queries never
+  * shuffle the code table.
   */
 object Pq {
 
-  /** L2 nearest-centroid assignment as the same narrow broadcast
-    * fold as VectorSearch.assignCells, but with the EUCLIDEAN
-    * objective PQ requires: argmin ‖v−c‖² = argmax (v·c − ‖c‖²/2)
-    * (‖v‖² is constant per row). Cosine assignment — right for the
-    * retrieval-metric codebooks of IVF — is the wrong quantizer
-    * here: it ignores sub-vector magnitude, which is exactly what
-    * the ADC dot contributions need preserved (measured: cosine
-    * assignment cost ~20 recall points at m=8,k=64).
-    */
-  private def assignL2(
-      candidates: DataFrame, centroids: DataFrame,
-      idCol: String, vecCol: String): DataFrame = {
-    val cents = centroids
-      .select(col("cell"), col("centroid"),
-        VectorFns.normSq(col("centroid")).as("cnsq"))
-    val centsArr = cents.agg(
-      array_sort(collect_list(struct(col("cell"), col("centroid"),
-        col("cnsq")))).as("cents"))
-    candidates
-      .crossJoin(broadcast(centsArr))
-      .withColumn("best", aggregate(
-        col("cents"),
-        struct(lit(Double.NegativeInfinity).as("score"),
-          lit(null).cast("int").as("cell")),
-        (acc, c) => {
-          val score = round(VectorFns.dot(col(vecCol), c.getField("centroid"))
-            - c.getField("cnsq") / 2.0, 6)
-          when(score > acc.getField("score"),
-            struct(score.as("score"), c.getField("cell").as("cell")))
-            .otherwise(acc)
-        }))
-      .select(col(idCol), col(vecCol),
-        col("best").getField("cell").as("cell"))
-  }
+  private val BooksSchema = StructType(Seq(StructField("sub", IntegerType),
+    StructField("cell", IntegerType), StructField("centroid", ArrayType(DoubleType))))
 
-  /** All m codebooks as ONE broadcastable row: books[sub] = the
-    * sub's cells sorted ascending (cell, centroid, cnsq) — the
-    * array_sort(struct(cell, …)) order is what resolves assignment
-    * ties to the smallest cell, exactly like assignL2's centsArr.
-    * Requires every sub 0..m−1 present (true by construction: seeds
-    * exist per sub and a sub can never lose all its vectors).
-    */
-  private def booksArray(codebooks: DataFrame): DataFrame =
-    codebooks
-      .select(col("sub"), struct(col("cell"), col("centroid"),
-        VectorFns.normSq(col("centroid")).as("cnsq")).as("c"))
-      .groupBy(col("sub"))
-      .agg(array_sort(collect_list(col("c"))).as("cents"))
-      .agg(array_sort(collect_list(struct(col("sub"), col("cents"))))
-        .as("books"))
-
-  /** The L2 argmax fold of assignL2 over one sub's sorted cents
-    * array — shared by the batched trainer and the one-pass encoder
-    * so both run the byte-identical scoring expression
-    * (round(dot − ‖c‖²/2, 6), strict >, ties to smallest cell).
-    */
-  private def bestCell(subv: Column, cents: Column): Column =
-    aggregate(
-      cents,
-      struct(lit(Double.NegativeInfinity).as("score"),
-        lit(null).cast("int").as("cell")),
-      (acc, c) => {
-        val score = round(VectorFns.dot(subv, c.getField("centroid"))
-          - c.getField("cnsq") / 2.0, 6)
-        when(score > acc.getField("score"),
-          struct(score.as("score"), c.getField("cell").as("cell")))
-          .otherwise(acc)
-      }).getField("cell")
-
-  /** Deterministic L2 Lloyd for one subspace: id-ordered seeds, then
-    * `iters` rounds of narrow fold-assignment + long-form mean —
-    * lloydCentroids' loop with the L2 objective above, over a
-    * broadcast codebook with a per-round localCheckpoint lineage
-    * truncation.
-    */
-  private def lloydL2(
-      vectors: DataFrame, idCol: String, vecCol: String,
-      k: Int, iters: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.orderBy(col(idCol))
-    // lazy checkpoints (r21): plan-level truncation happens at
-    // creation, no per-round driver decision exists, so no round needs
-    // an eager materialization action
-    var cents = vectors.orderBy(col(idCol)).limit(k)
-      .withColumn("cell", (row_number().over(w) - 1).cast("int"))
-      .select(col("cell"), VectorFns.asDouble(col(vecCol)).as("centroid"))
-      .localCheckpoint(false)
-    for (_ <- 1 to iters) {
-      val assigned = assignL2(vectors, cents, idCol, vecCol)
-      cents = VectorSearch.centroidArrays(assigned, "cell", vecCol)
-        .select(col("cell"), col("centroid"))
-        .localCheckpoint(false)
-    }
-    cents
-  }
-
-  /** Per-subspace codebooks: (sub, cell, centroid) — subspace `s`
-    * covers vector positions [s·d/m, (s+1)·d/m). Deterministic
-    * (id-seeded L2 Lloyd). k ≤ 256 keeps a code one byte.
-    *
-    * The m subspace trainings are independent plan-builder chains.
-    * Since the r21 lazy-localCheckpoint switch in lloydL2 they submit
-    * NO jobs of their own — each round's truncation defers to the
-    * terminal action, where the per-sub codebook subtrees materialize
-    * inside the books broadcast build; the futures remain so the m
-    * chains' plan construction (and, on eager-checkpoint variants,
-    * their actions) never serialize, and results stay deterministic
-    * because each future touches only its own slice.
-    * NOTE (r21, measured): batching all m chains into ONE long
-    * (sub, id, subv) frame (one action + one corpus scan per round,
-    * jobs 59 → 34 on vs_ivf_pq) was measured SLOWER end to end
-    * (vs_ivf_pq min 2.5 → 3.4 s at sf0.1) — the single chain loses
-    * the futures' overlap, and training at production runs on a
-    * sample anyway, so the m-scans-per-round cost never meets the
-    * full corpus. Kept concurrent.
+  /** Per-subspace codebooks: (sub, cell, centroid) as one local
+    * relation — subspace `s` covers vector positions
+    * [s·d/m, (s+1)·d/m). Each sub runs VectorSearch's Lloyd loop with
+    * the L2 objective: the k lowest-id vectors are collected once (one
+    * job), numbered 0..k−1 in id order and sliced per sub on the
+    * driver, and each round assigns with NearestCell and collects the
+    * new k-row codebook (one job per sub and round). The m subs'
+    * loops run concurrently and touch only their own slice, so the
+    * result is deterministic. k ≤ 256 keeps a code one byte; m < 1,
+    * k < 1 and a dim that m does not divide are refused.
     */
   def train(
       vectors: DataFrame, idCol: String, vecCol: String,
       dim: Int, m: Int, k: Int, iters: Int): DataFrame = {
+    require(m >= 1, s"m=$m must be at least one subspace")
     require(dim % m == 0, s"dim $dim must divide into m=$m subspaces")
-    require(k <= 256, s"k=$k exceeds one-byte codes")
+    require(k >= 1 && k <= 256, s"k=$k must be in [1, 256] (one-byte codes)")
     val dsub = dim / m
+    val seeds = VectorSearch.seedVectors(vectors, idCol, vecCol, k)
     import scala.concurrent.{Await, Future, blocking}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val trained = Await.result(
+    val rows = Await.result(
       Future.sequence((0 until m).map { s =>
         Future {
           blocking {
-            val sub = vectors.select(col(idCol),
-              slice(col(vecCol), s * dsub + 1, dsub).as("subv"))
-            lloydL2(sub, idCol, "subv", k, iters)
-              .select(lit(s).as("sub"), col("cell"), col("centroid"))
+            val sub = vectors.select(slice(col(vecCol), s * dsub + 1, dsub).as("subv"))
+            val subSeeds = seeds.map(v => if (v == null) null else v.slice(s * dsub, (s + 1) * dsub))
+            VectorSearch.lloyd(sub, "subv", subSeeds, iters, CellBook.L2)
+              .collect().map(r => Row(s, r.get(0), r.get(1)))
           }
         }
       }), Duration.Inf)
-    trained.reduce(_ unionAll _)
+    vectors.sparkSession.createDataFrame(java.util.Arrays.asList(rows.flatten: _*), BooksSchema)
   }
 
-  /** Encode each vector to its m-code array (id, codes) in ONE
-    * narrow zero-exchange pass (r21): the m codebooks broadcast as
-    * one books array, and every row computes all m argmax folds via
-    * a transform over sub = 0..m−1 — same scoring expression as
-    * training (bestCell). The previous shape ran one assignment scan
-    * per subspace plus an (id)-keyed shuffle to assemble the code
-    * arrays; this reads the vectors once and shuffles nothing
-    * (guide §2.4 — remove shuffles outright). `extraCols` ride along
-    * so callers (ivfPqBuild) need no join to re-attach row metadata.
+  /** Encode each vector to its m-code array (id, codes) in ONE narrow
+    * zero-exchange pass: the (sub, cell, centroid) codebooks are
+    * collected once (no job for train's local relation) into m L2
+    * CellBooks, and each row emits
+    * `array(NearestCell(slice(vec, s·dsub+1, dsub), book_s) for s)` —
+    * the same kernel and objective as training. A sub absent from
+    * `codebooks` gets an empty book, so its code is NULL. `extraCols`
+    * ride along so callers (ivfPqBuild) need no join to re-attach row
+    * metadata.
     *
-    * Precondition: `idCol` is unique per row. The pre-r21 shape's
-    * groupBy(id) implicitly merged duplicate ids into one (malformed)
-    * code row; the one-pass shape emits one code row PER INPUT ROW.
-    * All callers satisfy uniqueness by construction — new callers
-    * must not rely on the old implicit dedup.
+    * Precondition: `idCol` is unique per row — the pass emits one code
+    * row PER INPUT ROW and merges nothing.
     */
   def encode(
       vectors: DataFrame, codebooks: DataFrame, idCol: String,
       vecCol: String, dim: Int, m: Int,
       extraCols: Seq[String] = Nil): DataFrame = {
     val dsub = dim / m
-    vectors
-      .crossJoin(broadcast(booksArray(codebooks)))
-      .select(col(idCol) +: extraCols.map(col) :+
-        transform(sequence(lit(0), lit(m - 1)), s =>
-          bestCell(
-            slice(VectorFns.asDouble(col(vecCol)), s * lit(dsub) + 1,
-              lit(dsub)),
-            element_at(col("books"), s + 1).getField("cents")))
-          .as("codes"): _*)
+    val entries = codebooks
+      .select(col("sub"), col("cell"), col("centroid"),
+        VectorSearch.cellTerm(col("centroid"), CellBook.L2))
+      .collect().groupBy(_.getInt(0))
+    val cellType = codebooks.schema("cell").dataType
+    val codes = (0 until m).map { s =>
+      val book = CellBook(cellType, entries.getOrElse(s, Array.empty[Row]).toSeq
+        .map(r => (r.get(1), r.getAs[scala.collection.Seq[Any]](2), r.get(3))), CellBook.L2)
+      VectorSearch.nearestCell(slice(col(vecCol), s * dsub + 1, dsub), book)
+    }
+    vectors.select(col(idCol) +: extraCols.map(col) :+ array(codes: _*).as("codes"): _*)
   }
 
   /** Asymmetric-distance top-k: score every code row against ONE
     * query via broadcast per-subspace lookup tables (dot and ‖c‖²
     * per (sub, cell)), approximating cosine(query, reconstructed):
     * Σ_s dot(q_s, c_{s,code}) / (‖q‖ · sqrt(Σ_s ‖c_{s,code}‖²)).
-    * The corpus side reads codes only — no vectors, no shuffle; the
-    * top-k terminates in TakeOrderedAndProject like denseTopK.
+    * The tables score the codebook against the literal query
+    * (denseTopK's single-query rules: no row or a NULL vector answers
+    * nothing). The corpus side reads codes only — no vectors, no
+    * shuffle; the top-k terminates in TakeOrderedAndProject like
+    * denseTopK.
     */
   def adcTopK(
       codes: DataFrame, codebooks: DataFrame, query: DataFrame,
       idCol: String, queryVecCol: String, dim: Int, m: Int,
       k: Int): DataFrame = {
     val dsub = dim / m
-    // per-(sub, cell) tables from ONE tiny cross of codebooks × query
-    val tables = codebooks.crossJoin(broadcast(
-        query.select(VectorFns.asDouble(col(queryVecCol)).as("q"))))
+    val q = VectorSearch.queryVector(query, queryVecCol)
+    // per-(sub, cell) tables: one projection of the m·k-row codebook
+    val tables = codebooks
       .select(col("sub"), col("cell"),
         VectorFns.dot(col("centroid"),
-          slice(col("q"), col("sub") * dsub + 1, lit(dsub))).as("dot"),
+          slice(q.vec, col("sub") * dsub + 1, lit(dsub))).as("dot"),
         VectorFns.normSq(col("centroid")).as("nsq"))
       .groupBy(col("sub"))
       .agg(map_from_entries(collect_list(
@@ -228,27 +136,24 @@ object Pq {
       // so an array_sort assembly fails analysis)
       .agg(map_from_entries(collect_list(
         struct(col("sub"), col("tbl")))).as("tbls"))
-    val qn = query.select(VectorFns.l2Norm(
-      VectorFns.asDouble(col(queryVecCol))).as("qnrm"))
+    val entry = (s: Int) => element_at(element_at(col("tbls"), lit(s)),
+      element_at(col("codes"), s + 1))
     codes
+      .where(lit(!q.isNull))
       .crossJoin(broadcast(tables))
-      .crossJoin(broadcast(qn))
-      .withColumn("acc", aggregate(
-        sequence(lit(0), lit(m - 1)),
-        struct(lit(0.0).as("dsum"), lit(0.0).as("nsum")),
-        (acc, s) => {
-          val e = element_at(element_at(col("tbls"), s),
-            element_at(col("codes"), s + 1))
-          struct((acc.getField("dsum") + e.getField("dot")).as("dsum"),
-            (acc.getField("nsum") + e.getField("nsq")).as("nsum"))
-        }))
       .select(col(idCol),
-        round(col("acc").getField("dsum") /
-          nullif(col("qnrm") * sqrt(col("acc").getField("nsum")), lit(0.0)),
+        round(sumOverSubs(m)(entry(_).getField("dot")) /
+          nullif(q.norm * sqrt(sumOverSubs(m)(entry(_).getField("nsq"))), lit(0.0)),
           6).as("adc_sim"))
       .orderBy(col("adc_sim").desc_nulls_last, col(idCol))
       .limit(k)
   }
+
+  /** `0.0 + term(0) + … + term(m − 1)`, added left to right: the ADC
+    * sum over a code row's m subspaces as one generated expression.
+    */
+  private def sumOverSubs(m: Int)(term: Int => Column): Column =
+    (0 until m).foldLeft(lit(0.0))((acc, s) => acc + term(s))
 
   /** Scalar quantization (FAISS SQ8): per-dimension [min, max] range
     * over the corpus, each component → one byte
@@ -271,32 +176,48 @@ object Pq {
       vectors: DataFrame, query: DataFrame, idCol: String,
       vecCol: String, qVec: String, k: Int,
       extraCols: Seq[String] = Nil): DataFrame = {
-    val stats = vectors
-      .select(posexplode(col(vecCol)).as(Seq("i", "v")))
-      .groupBy(col("i"))
-      .agg(min(col("v")).as("mn"), max(col("v")).as("mx"))
-    val statsArr = stats.agg(transform(
-      array_sort(collect_list(struct(col("i"), col("mn"), col("mx")))),
-      x => struct(x.getField("mn").as("mn"), x.getField("mx").as("mx")))
-      .as("rng"))
-    val codes = vectors.crossJoin(broadcast(statsArr))
+    val rng = broadcast(sq8Range(vectors, vecCol))
+    val codes = vectors.crossJoin(rng)
       .select(col(idCol) +: extraCols.map(col) :+
-        zip_with(col(vecCol), col("rng"), (v, r) => {
-          val mn = r.getField("mn").cast("double")
-          val mx = r.getField("mx").cast("double")
-          when(mx > mn,
-            floor(((v.cast("double") - mn) / (mx - mn)) * lit(255.0)))
-            .otherwise(0L)
-        }).as("codes"): _*)
-    val recon = codes.crossJoin(broadcast(statsArr))
-      .withColumn("recon", zip_with(col("codes"), col("rng"), (c, r) => {
-        val mn = r.getField("mn").cast("double")
-        val mx = r.getField("mx").cast("double")
-        mn + (c.cast("double") + lit(0.5)) * (mx - mn) / lit(256.0)
-      }))
+        sq8Encode(col(vecCol), col("rng")).as("codes"): _*)
+    val recon = codes.crossJoin(rng)
+      .withColumn("recon", sq8Decode(col("codes"), col("rng")))
     VectorSearch.denseTopK(recon, query, idCol, "recon", qVec, k,
       extraCols)
   }
+
+  /** SQ8's trained quantizer: the corpus-wide per-dimension [mn, mx]
+    * range as ONE row `rng`, an array of (mn, mx) structs in dimension
+    * order — one map-side-combined min/max aggregate (d rows out).
+    */
+  private def sq8Range(vectors: DataFrame, vecCol: String): DataFrame =
+    vectors
+      .select(posexplode(col(vecCol)).as(Seq("i", "v")))
+      .groupBy(col("i"))
+      .agg(min(col("v")).as("mn"), max(col("v")).as("mx"))
+      .agg(transform(
+        array_sort(collect_list(struct(col("i"), col("mn"), col("mx")))),
+        x => struct(x.getField("mn").as("mn"), x.getField("mx").as("mx")))
+        .as("rng"))
+
+  /** One byte per component: floor(((v − mn) / (mx − mn)) · 255), 0
+    * on a constant dimension.
+    */
+  private def sq8Encode(vec: Column, rng: Column): Column =
+    zip_with(vec, rng, (v, r) => {
+      val mn = r.getField("mn").cast("double")
+      val mx = r.getField("mx").cast("double")
+      when(mx > mn, floor(((v.cast("double") - mn) / (mx - mn)) * lit(255.0)))
+        .otherwise(0L)
+    })
+
+  /** Bucket-midpoint reconstruction mn + (code + 0.5)·(mx − mn)/256. */
+  private def sq8Decode(codes: Column, rng: Column): Column =
+    zip_with(codes, rng, (c, r) => {
+      val mn = r.getField("mn").cast("double")
+      val mx = r.getField("mx").cast("double")
+      mn + (c.cast("double") + lit(0.5)) * (mx - mn) / lit(256.0)
+    })
 
   /** IVF + SQ8 — the pragmatic lake-scale default at moderate dims:
     * coarse cells prune the corpus to nprobe/K (the IVF win) and the
@@ -319,34 +240,19 @@ object Pq {
       candidates: DataFrame, query: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String, qVec: String, groupCol: String,
       nprobe: Int, k: Int): DataFrame = {
-    // trained scalar quantizer: corpus-wide per-dim [mn, mx]
-    val stats = candidates
-      .select(posexplode(col(vecCol)).as(Seq("i", "v")))
-      .groupBy(col("i"))
-      .agg(min(col("v")).as("mn"), max(col("v")).as("mx"))
-    val statsArr = stats.agg(transform(
-      array_sort(collect_list(struct(col("i"), col("mn"), col("mx")))),
-      x => struct(x.getField("mn").as("mn"), x.getField("mx").as("mx")))
-      .as("rng"))
     // stored index rows: (id, cell, codes); the codebook is collected
     // once for the assignment and the probe ranking below
     val book = VectorSearch.local(centroids.select(col(groupCol), col("centroid")))
     val assigned = VectorSearch.assignCells(
       candidates, book, idCol, vecCol, groupCol)
     // rng rides along with the codes so the reconstruction stage
-    // below reuses it — re-joining statsArr there would recompute
+    // below reuses it — re-joining the range there would recompute
     // the corpus-wide min/max aggregate a second time (two full
     // candidate scans per query); all stages between are narrow, so
     // the carried column never crosses a shuffle
-    val codes = assigned.crossJoin(broadcast(statsArr))
+    val codes = assigned.crossJoin(broadcast(sq8Range(candidates, vecCol)))
       .select(col(idCol), col(groupCol), col("rng"),
-        zip_with(col(vecCol), col("rng"), (v, r) => {
-          val mn = r.getField("mn").cast("double")
-          val mx = r.getField("mx").cast("double")
-          when(mx > mn,
-            floor(((v.cast("double") - mn) / (mx - mn)) * lit(255.0)))
-            .otherwise(0L)
-        }).as("codes"))
+        sq8Encode(col(vecCol), col("rng")).as("codes"))
     // probe: nprobe cells nearest the query, ranked on the driver
     // (annIvfProbe's static filter; it stays above the assignment's
     // generator, so the kernel runs once per row)
@@ -356,11 +262,7 @@ object Pq {
     // cosine (query uncompressed, like ADC)
     val recon = codes
       .where(col(groupCol).isin(cells: _*))
-      .withColumn("recon", zip_with(col("codes"), col("rng"), (c, r) => {
-        val mn = r.getField("mn").cast("double")
-        val mx = r.getField("mx").cast("double")
-        mn + (c.cast("double") + lit(0.5)) * (mx - mn) / lit(256.0)
-      }))
+      .withColumn("recon", sq8Decode(col("codes"), col("rng")))
     VectorSearch.denseTopKOf(recon, q, idCol, "recon", k, Seq(groupCol))
   }
 
@@ -411,36 +313,50 @@ object Pq {
     * v̂ = c_cell + recon(codes), so cos(q, v̂) needs three
     * per-(cell, sub, code) terms — q·book, ‖book‖², and the cross
     * term c_cell,s·book — all broadcast as one nested map built from
-    * a probed-cells × books cross (nprobe·m·k rows, tiny). Corpus
-    * side: ONE semi-join prune on cell + the code fold; raw vectors
-    * are never read.
+    * a probed-cells × books cross (nprobe·m·k rows, tiny).
+    *
+    * The probe is ranked on the driver, as annIvfProbe ranks it: the
+    * coarse codebook's (cell, rank, q·c, ‖c‖²) rows are collected
+    * against the literal query (no job for a local codebook) and
+    * rankCells orders them by `round(q·c / nullif(‖c‖, 0), 6)` desc,
+    * ties to the smallest cell. The probed cells become a local frame
+    * for the lookup tables and a static `cell IN (…)` filter on the
+    * codes; raw vectors are never read. `query` follows denseTopK's
+    * single-query rules: no row or a NULL vector answers nothing.
     */
   def ivfPqTopK(
       codes: DataFrame, coarse: DataFrame, books: DataFrame,
       query: DataFrame, idCol: String, queryVecCol: String, dim: Int,
       m: Int, nprobe: Int, k: Int): DataFrame = {
     val dsub = dim / m
-    val q = query.select(VectorFns.asDouble(col(queryVecCol)).as("q"))
-    val pb = coarse.crossJoin(broadcast(q))
-      .select(col("cell").as("pcell"), col("centroid").as("pcent"),
-        VectorFns.dot(col("centroid"), col("q")).as("qc"),
-        VectorFns.normSq(col("centroid")).as("cnsq"),
-        // 6dp-rounded BEFORE ordering (repo cross-engine protocol:
-        // never order on unrounded doubles) — ties to smallest cell
-        round(VectorFns.dot(col("centroid"), col("q")) /
-          nullif(VectorFns.l2Norm(col("centroid")), lit(0.0)), 6)
-          .as("rank"))
-      .orderBy(col("rank").desc_nulls_last, col("pcell"))
-      .limit(nprobe)
+    val q = VectorSearch.queryVector(query, queryVecCol)
+    val ranked = coarse
+      .select(col("cell"), col("centroid"),
+        round(VectorFns.dot(col("centroid"), q.vec) /
+          nullif(VectorFns.l2Norm(col("centroid")), lit(0.0)), 6),
+        VectorFns.dot(col("centroid"), q.vec),
+        VectorFns.normSq(col("centroid")))
+      .collect()
+    val cellType = coarse.schema("cell").dataType
+    val probed = if (q.isNull) Nil
+      else VectorSearch.rankCells(cellType, ranked.toSeq.map(r => (r.get(0), r.get(2))), nprobe)
+    val byCell = ranked.map(r => r.get(0) -> r).toMap
+    // (pcell, pcent, qc, cnsq) of the probed cells
+    val pb = coarse.sparkSession.createDataFrame(
+      java.util.Arrays.asList(probed.map { c =>
+        val r = byCell(c); Row(c, r.get(1), r.get(3), r.get(4)) }: _*),
+      StructType(Seq(StructField("pcell", cellType),
+        StructField("pcent", coarse.schema("centroid").dataType),
+        StructField("qc", DoubleType), StructField("cnsq", DoubleType))))
     // per-(cell, sub, code) terms — nprobe·m·k rows, all tiny frames:
     // dotq = q_s·book, nsq = ‖book‖², crossc = c_cell,s·book
     val bk = books.select(col("sub"), col("cell").as("code"),
       col("centroid").as("bcent"))
-    val entries = pb.crossJoin(bk).crossJoin(broadcast(q))
+    val entries = pb.crossJoin(bk)
       .select(col("pcell"), col("sub"), col("code"),
         struct(
           VectorFns.dot(col("bcent"),
-            slice(col("q"), col("sub") * dsub + 1, lit(dsub))).as("dotq"),
+            slice(q.vec, col("sub") * dsub + 1, lit(dsub))).as("dotq"),
           VectorFns.normSq(col("bcent")).as("nsq"),
           VectorFns.dot(col("bcent"),
             slice(col("pcent"), col("sub") * dsub + 1, lit(dsub)))
@@ -455,33 +371,21 @@ object Pq {
       .join(pb.select(col("pcell"), col("qc"), col("cnsq")), Seq("pcell"))
       .agg(map_from_entries(collect_list(struct(col("pcell"),
         struct(col("st"), col("qc"), col("cnsq"))))).as("cells"))
-    val qn = q.select(VectorFns.l2Norm(col("q")).as("qnrm"))
+    val entry = (s: Int) => element_at(element_at(col("cm").getField("st"), lit(s)),
+      element_at(col("codes"), s + 1))
     codes
-      // probed-cell prune: a broadcast semi of ≤ nprobe keys — the
-      // IVF win; unprobed codes never reach the fold
-      .join(broadcast(pb.select(col("pcell").as("cell"))), Seq("cell"))
+      // probed-cell prune: a literal IN list of ≤ nprobe cells — the
+      // IVF win; unprobed codes never reach the lookups
+      .where(col("cell").isin(probed: _*))
       .crossJoin(broadcast(cellMeta))
-      .crossJoin(broadcast(qn))
       .withColumn("cm", element_at(col("cells"), col("cell")))
-      .withColumn("acc", aggregate(
-        sequence(lit(0), lit(m - 1)),
-        struct(lit(0.0).as("dsum"), lit(0.0).as("nsum"),
-          lit(0.0).as("csum")),
-        (acc, s) => {
-          val e = element_at(element_at(col("cm").getField("st"), s),
-            element_at(col("codes"), s + 1))
-          struct(
-            (acc.getField("dsum") + e.getField("dotq")).as("dsum"),
-            (acc.getField("nsum") + e.getField("nsq")).as("nsum"),
-            (acc.getField("csum") + e.getField("crossc")).as("csum"))
-        }))
       // cos(q, c + recon) = (q·c + Σdotq) /
       //   (‖q‖ · sqrt(‖c‖² + 2·Σcrossc + Σnsq))
       .select(col(idCol),
-        round((col("cm").getField("qc") + col("acc").getField("dsum")) /
-          nullif(col("qnrm") * sqrt(col("cm").getField("cnsq") +
-            lit(2.0) * col("acc").getField("csum") +
-            col("acc").getField("nsum")), lit(0.0)), 6).as("ivfpq_sim"))
+        round((col("cm").getField("qc") + sumOverSubs(m)(entry(_).getField("dotq"))) /
+          nullif(q.norm * sqrt(col("cm").getField("cnsq") +
+            lit(2.0) * sumOverSubs(m)(entry(_).getField("crossc")) +
+            sumOverSubs(m)(entry(_).getField("nsq"))), lit(0.0)), 6).as("ivfpq_sim"))
       .orderBy(col("ivfpq_sim").desc_nulls_last, col(idCol))
       .limit(k)
   }

@@ -52,7 +52,10 @@ object VectorSearch {
     * `vec_norm_sq`) and held by reference, so queries share compiled
     * code.
     */
-  private[operators] case class QueryVec(vec: Column, norm: Column)
+  private[operators] case class QueryVec(vec: Column, norm: Column) {
+    /** No query vector: an empty frame or a NULL vector. */
+    def isNull: Boolean = ColumnShim.expression(vec).asInstanceOf[Literal].value == null
+  }
 
   /** The query of a single-query frame. The frame is collected on the
     * driver, as the broadcast this replaces collected it: a local frame
@@ -309,16 +312,36 @@ object VectorSearch {
       .select(col(idCol), col(vecCol), col("cnrm"), explode(array(cell)).as("cell"))
   }
 
-  /** The codebook (`groupCol`, `centroid`) collected on the driver,
-    * with each centroid's norm computed by the same `l2Norm`
-    * expression as a candidate's.
+  /** The codebook (`groupCol`, `centroid`) collected on the driver
+    * for `objective`, each centroid's term computed by cellTerm.
     */
-  private[graft] def cellBook(centroids: DataFrame, groupCol: String): CellBook = {
+  private[graft] def cellBook(centroids: DataFrame, groupCol: String,
+      objective: CellBook.Objective = CellBook.Cosine): CellBook = {
     val rows = centroids
-      .select(col(groupCol), col("centroid"), VectorFns.l2Norm(col("centroid")))
+      .select(col(groupCol), col("centroid"), cellTerm(col("centroid"), objective))
       .collect()
     CellBook(centroids.schema(groupCol).dataType,
-      rows.toSeq.map(r => (r.get(0), r.getAs[scala.collection.Seq[Any]](1), r.get(2))))
+      rows.toSeq.map(r => (r.get(0), r.getAs[scala.collection.Seq[Any]](1), r.get(2))), objective)
+  }
+
+  /** A centroid's CellBook term: its `l2Norm` (the same expression as
+    * a candidate's) under cosine, its `normSq / 2` under L2.
+    */
+  private[operators] def cellTerm(centroid: Column, objective: CellBook.Objective): Column =
+    objective match {
+      case CellBook.Cosine => VectorFns.l2Norm(centroid)
+      case CellBook.L2 => VectorFns.normSq(centroid) / 2.0
+    }
+
+  /** The NearestCell of `vec` in `book`. A cosine book reads the
+    * vector's `l2Norm`; an L2 book reads no norm.
+    */
+  private[graft] def nearestCell(vec: Column, book: CellBook): Column = {
+    val cnrm = book.objective match {
+      case CellBook.Cosine => VectorFns.l2Norm(vec)
+      case CellBook.L2 => lit(0.0)
+    }
+    ColumnShim.column(NearestCell(ColumnShim.expression(vec), ColumnShim.expression(cnrm), book))
   }
 
   /** `frame` collected into a driver-local relation (a codebook: k
@@ -333,12 +356,13 @@ object VectorSearch {
 
   /** Deterministic spherical k-means (Lloyd) codebook trainer: init =
     * the k lowest-id vectors, numbered 0..k-1 in id order, then `iters`
-    * rounds of narrow kernel assignment + long-form mean. Per iteration
-    * the corpus is scanned once with zero exchange (assignment) and
-    * only (cell, pos, sum) rows shuffle — the general codebook path
-    * when no natural cells exist. Cosine (spherical) assignment matches
-    * the retrieval metric. Deterministic: id-ordered init, tie-to-
-    * smallest-cell assignment, sequential-order means.
+    * rounds of narrow kernel assignment + long-form mean (lloyd, with
+    * the cosine objective). Per iteration the corpus is scanned once
+    * with zero exchange (assignment) and only (cell, pos, sum) rows
+    * shuffle — the general codebook path when no natural cells exist.
+    * Cosine (spherical) assignment matches the retrieval metric.
+    * Deterministic: id-ordered init, tie-to-smallest-cell assignment,
+    * sequential-order means.
     *
     * The codebook can end up with FEWER than k cells: duplicate seed
     * vectors collapse under cosine assignment, and a cell that wins
@@ -348,22 +372,39 @@ object VectorSearch {
     * cell count, not the requested k — annIvf's probe fraction is
     * nprobe / |codebook|.
     *
-    * The codebook stays on the driver: the k seed rows are collected
-    * (one top-k job) and numbered there, and each round's k×d codebook
-    * is collected (one job) into a local relation that the next round's
-    * assignment reads without a job. The returned frame is local, so
-    * iteration n's plan never nests iteration n−1's (no lineage to
-    * truncate), and callers collect it for free.
+    * The returned frame is a local relation (see lloyd), so callers
+    * collect it for free.
     */
   def lloydCentroids(
       vectors: DataFrame, idCol: String, vecCol: String,
-      k: Int, iters: Int): DataFrame = {
-    val seeds = vectors.orderBy(col(idCol)).limit(k)
-      .select(VectorFns.asDouble(col(vecCol))).collect()
+      k: Int, iters: Int): DataFrame =
+    lloyd(vectors, vecCol, seedVectors(vectors, idCol, vecCol, k), iters, CellBook.Cosine)
+
+  /** The k lowest-id vectors widened to doubles, in id order (one
+    * top-k job); a NULL vector stays null.
+    */
+  private[operators] def seedVectors(vectors: DataFrame, idCol: String, vecCol: String,
+      k: Int): Seq[scala.collection.Seq[Any]] =
+    vectors.orderBy(col(idCol)).limit(k)
+      .select(VectorFns.asDouble(col(vecCol))).collect().toSeq
+      .map(_.getAs[scala.collection.Seq[Any]](0))
+
+  /** Lloyd's loop with the codebook on the driver, shared by
+    * lloydCentroids (cosine) and Pq.train (L2): `seeds(i)` is cell i's
+    * initial centroid, then each of `iters` rounds assigns every vector
+    * with one NearestCell pass under `objective` and collects the
+    * long-form means (one job) into a local relation that the next
+    * round reads without a job. Iteration n's plan never nests
+    * iteration n−1's, so there is no lineage to truncate.
+    */
+  private[operators] def lloyd(vectors: DataFrame, vecCol: String,
+      seeds: Seq[scala.collection.Seq[Any]], iters: Int,
+      objective: CellBook.Objective): DataFrame = {
     var cents = vectors.sparkSession.createDataFrame(java.util.Arrays.asList(
-      seeds.indices.map(i => Row(i, seeds(i).get(0))): _*), CodebookSchema)
+      seeds.indices.map(i => Row(i, seeds(i))): _*), CodebookSchema)
     for (_ <- 1 to iters) {
-      val assigned = assignCells(vectors, cents, idCol, vecCol, "cell")
+      val assigned = vectors.select(col(vecCol),
+        nearestCell(col(vecCol), cellBook(cents, "cell", objective)).as("cell"))
       cents = local(centroidArrays(assigned, "cell", vecCol).select(col("cell"), col("centroid")))
     }
     cents

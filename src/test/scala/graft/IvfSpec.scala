@@ -15,14 +15,16 @@ import org.apache.spark.sql.graftshim.ListenerBusShim
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 
-import graft.expressions.NearestCell
+import graft.expressions.{CellBook, NearestCell}
 import graft.functions.VectorFns
-import graft.operators.VectorSearch
+import graft.operators.{Pq, VectorSearch}
 
-/** IVF with the codebook on the driver: the NearestCell kernel against
-  * the `aggregate` fold it replaced, the driver probe ranking against
-  * Spark's `orderBy(pcos.desc, cell).limit(nprobe)`, and the jobs and
-  * plans of the probe and assignment paths.
+/** IVF and PQ with the codebook on the driver: the NearestCell kernel
+  * against the `aggregate` folds it replaced (cosine and L2), the
+  * driver-side Lloyd loop against its window-seeded twin under both
+  * objectives, the driver probe ranking against Spark's
+  * `orderBy(pcos.desc, cell).limit(nprobe)`, and the jobs and plans of
+  * the probe and assignment paths.
   */
 class IvfSpec extends SparkSpec {
 
@@ -58,6 +60,49 @@ class IvfSpec extends SparkSpec {
       .select(col(idCol), col(vecCol), col("cnrm"),
         col("best").getField("cell").as("cell"))
   }
+
+  /** HOF twin of the L2 objective — the fold Pq trained and encoded
+    * with before NearestCell took an L2 book: the codebook folds into
+    * one broadcast array of (cell, centroid, normSq) structs sorted by
+    * `array_sort`, and each row runs the interpreted `aggregate` fold
+    * (strict `>` on `round(dot − normSq / 2, 6)`, NULL skipped) over it.
+    */
+  private def assignL2Hof(candidates: DataFrame, centroids: DataFrame,
+      idCol: String, vecCol: String, groupCol: String): DataFrame = {
+    val cellType = centroids.schema(groupCol).dataType
+    val centsArr = centroids
+      .select(col(groupCol).as("cgroup"), col("centroid"),
+        VectorFns.normSq(col("centroid")).as("cnsq"))
+      .agg(array_sort(collect_list(struct(col("cgroup"), col("centroid"), col("cnsq"))))
+        .as("cents"))
+    candidates
+      .crossJoin(broadcast(centsArr))
+      .withColumn("best", aggregate(
+        col("cents"),
+        struct(lit(Double.NegativeInfinity).as("score"),
+          lit(null).cast(cellType).as("cell")),
+        (acc, c) => {
+          val score = round(VectorFns.dot(col(vecCol), c.getField("centroid"))
+            - c.getField("cnsq") / 2.0, 6)
+          when(score > acc.getField("score"),
+            struct(score.as("score"), c.getField("cgroup").as("cell")))
+            .otherwise(acc)
+        }))
+      .select(col(idCol), col(vecCol), col("best").getField("cell").as("cell"))
+  }
+
+  /** Per objective: the HOF twin, and the kernel's (id, vec, cnrm,
+    * cell) — assignCells under cosine, under L2 a NearestCell
+    * projection with the literal `cnrm` an L2 book does not read.
+    */
+  private val objectives: Seq[(CellBook.Objective, (DataFrame, DataFrame) => DataFrame,
+      (DataFrame, DataFrame) => DataFrame)] = Seq(
+    (CellBook.Cosine, assignCellsHof(_, _, "id", "vec", "cell"),
+      VectorSearch.assignCells(_, _, "id", "vec", "cell")),
+    (CellBook.L2, assignL2Hof(_, _, "id", "vec", "cell"),
+      (vecs, cents) => vecs.select(col("id"), col("vec"), lit(0.0).as("cnrm"),
+        VectorSearch.nearestCell(col("vec"), VectorSearch.cellBook(cents, "cell", CellBook.L2))
+          .as("cell"))))
 
   private val (nan, inf) = (Double.NaN, Double.PositiveInfinity)
 
@@ -120,12 +165,13 @@ class IvfSpec extends SparkSpec {
     "codebook, through whole-stage codegen, a strict projection and eval") {
     Seq(FloatType, DoubleType).foreach { elem =>
       val vecs = vecFrame(elem)
-      for ((bookName, book) <- edgeBooks; (cellType, cell) <- cellTypes) {
+      for ((objective, twin, kernel) <- objectives; (bookName, book) <- edgeBooks;
+           (cellType, cell) <- cellTypes) {
         val cents = bookFrame(book, cellType, cell)
-        val what = s"$bookName codebook, ${cellType.sql} cells, ${elem.sql} vectors"
-        val want = assignCellsHof(vecs, cents, "id", "vec", "cell")
-          .collect().map(r => r.getLong(0) -> r.get(3)).toMap
-        val assigned = VectorSearch.assignCells(vecs, cents, "id", "vec", "cell")
+        val what = s"$objective: $bookName codebook, ${cellType.sql} cells, ${elem.sql} vectors"
+        val want = twin(vecs, cents).select("id", "cell").collect()
+          .map(r => r.getLong(0) -> r.get(1)).toMap
+        val assigned = kernel(vecs, cents)
         val got = assigned.collect()
         assert(got.map(r => r.getLong(0) -> r.get(3)).toMap == want, what)
         assert(assigned.queryExecution.executedPlan.collect { case w: WholeStageCodegenExec =>
@@ -134,7 +180,8 @@ class IvfSpec extends SparkSpec {
         // the generated code compiled strictly (an error throws instead
         // of falling back) and the interpreted path, row by row
         val expr = NearestCell(BoundReference(0, ArrayType(elem), nullable = true),
-          BoundReference(1, DoubleType, nullable = true), VectorSearch.cellBook(cents, "cell"))
+          BoundReference(1, DoubleType, nullable = true),
+          VectorSearch.cellBook(cents, "cell", objective))
         val generated = GenerateUnsafeProjection.generate(Seq(expr))
         val toCatalyst = CatalystTypeConverters.createToCatalystConverter(cellType)
         got.foreach { r =>
@@ -148,11 +195,12 @@ class IvfSpec extends SparkSpec {
         }
       }
     }
-    // spot values the twin agrees on (int cells are index × 3)
+    // spot values the twins agree on (int cells are index × 3)
     val vecs = vecFrame(DoubleType)
-    def cellsOf(book: String) = VectorSearch.assignCells(vecs,
-      bookFrame(edgeBooks.toMap.apply(book), IntegerType, _ * 3), "id", "vec", "cell")
-      .collect().map(r => r.getLong(0) -> Option(r.get(3))).toMap
+    def cellsOf(book: String, objective: CellBook.Objective = CellBook.Cosine) =
+      objectives.find(_._1 == objective).get._3(vecs,
+        bookFrame(edgeBooks.toMap.apply(book), IntegerType, _ * 3))
+        .collect().map(r => r.getLong(0) -> Option(r.get(3))).toMap
     val axes = cellsOf("axes")
     assert(axes(0L).contains(0) && axes(1L).contains(3) && axes(3L).contains(6))
     assert(axes(2L).contains(0), "a tie keeps the smaller cell")
@@ -161,6 +209,14 @@ class IvfSpec extends SparkSpec {
     assert(cellsOf("ties")(0L).contains(3), "equal cosines resolve to the smallest cell")
     assert(cellsOf("orthogonal")(0L).contains(6), "0.0 cosines tie on the smaller cell")
     assert(cellsOf("empty").values.forall(_.isEmpty))
+    val l2Axes = cellsOf("axes", CellBook.L2)
+    assert(l2Axes(0L).contains(0) && l2Axes(1L).contains(3) && l2Axes(3L).contains(6))
+    assert(l2Axes(9L).contains(0), "under L2 a zero vector gets the smallest of its tied cells")
+    Seq(10L, 11L, 12L).foreach(id => assert(l2Axes(id).isEmpty, s"L2: vector $id must get no cell"))
+    assert(cellsOf("ties", CellBook.L2)(0L).contains(3), "equal L2 scores resolve to the smallest cell")
+    assert(cellsOf("ties", CellBook.L2)(17L).contains(6),
+      "L2 weighs the norm: a long vector goes to the longer of two equal directions")
+    assert(cellsOf("empty", CellBook.L2).values.forall(_.isEmpty))
   }
 
   private val specialCos: Gen[Any] = Gen.frequency(
@@ -279,6 +335,33 @@ class IvfSpec extends SparkSpec {
     Seq((4, 2), (6, 3), (1, 1)).foreach { case (k, iters) =>
       val got = VectorSearch.lloydCentroids(ivfTable, "vec_id", "embedding", k, iters)
       assert(sorted(got) == sorted(twin(ivfTable, k, iters)), s"k $k, iters $iters")
+    }
+  }
+
+  test("Pq.train's L2 Lloyd equals its window-seeded, HOF-assigned twin per subspace") {
+    // the twin is Pq's former trainer: row_number-numbered seeds over
+    // the sliced sub-vectors and the L2 aggregate fold, each round's
+    // codebook rebuilt from the same long-form mean
+    def twin(vectors: DataFrame, k: Int, iters: Int): DataFrame = {
+      var cents = vectors.orderBy(col("vec_id")).limit(k)
+        .withColumn("cell", (row_number().over(Window.orderBy(col("vec_id"))) - 1).cast("int"))
+        .select(col("cell"), VectorFns.asDouble(col("subv")).as("centroid"))
+      for (_ <- 1 to iters)
+        cents = VectorSearch.centroidArrays(assignL2Hof(vectors, cents, "vec_id", "subv", "cell"),
+          "cell", "subv").select(col("cell"), col("centroid"))
+      cents
+    }
+    def sorted(df: DataFrame) = df.collect().map(r => (r.getInt(0), r.getSeq[Double](1)))
+      .sortBy(_._1).toSeq
+    val (dim, m) = (8, 2)
+    Seq((4, 2), (6, 3), (1, 1)).foreach { case (k, iters) =>
+      val books = Pq.train(ivfTable, "vec_id", "embedding", dim, m, k, iters)
+      (0 until m).foreach { s =>
+        val sub = ivfTable.select(col("vec_id"),
+          slice(col("embedding"), s * dim / m + 1, dim / m).as("subv"))
+        assert(sorted(books.where(col("sub") === s).select(col("cell"), col("centroid"))) ==
+          sorted(twin(sub, k, iters)), s"k $k, iters $iters, sub $s")
+      }
     }
   }
 }

@@ -180,13 +180,10 @@ class PlanAuditSpec extends SparkSpec {
       "sc_tme" -> (256L, "cluster x cell-type panel (60)"),
       "sc_traj_dynamics" -> (256L, "pseudotime-bin panel (101)"),
       "sc_traj_root" -> (32L, "cluster panel (6)"),
-      "trend_topics" -> (32L, "topic panel (8)"),
-      "vs_ivf_pq" -> (16L, "PQ Lloyd seed takes (8), checkpointed at build"),
-      "vs_pq_adc" -> (16L, "PQ Lloyd seed takes (8), checkpointed at build"))
+      "trend_topics" -> (32L, "topic panel (8)"))
     val seen = scala.collection.mutable.Set[String]()
     // Plans a query runs while it is BUILT are audited too: Fusion.rrf
-    // collects hybrid_rrf's ranked legs on the driver, a PQ Lloyd
-    // codebook seeds through a window under a localCheckpoint, and
+    // collects hybrid_rrf's ranked legs on the driver, and
     // closenessCentrality collects its graph; those windows are absent
     // from the returned plan.
     val built = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()

@@ -1,7 +1,12 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, AttributeReference, In, InSet, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, Sort}
+import org.apache.spark.sql.execution.{SortExec, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions._
 
+import graft.expressions.NearestCell
 import graft.operators.{Pq, VectorSearch}
 
 /** Product-quantization invariants (the AnnRecallSpec device: exact
@@ -33,6 +38,62 @@ class PqSpec extends SparkSpec {
     } finally books.unpersist()
   }
 
+  test("train refuses m < 1, k < 1 and k > 256") {
+    val vecs = Seq((1L, Array(1.0f, 0.0f, 1.0f, 0.0f)), (2L, Array(0.0f, 1.0f, 0.0f, 1.0f)))
+      .toDF("vec_id", "embedding")
+    Seq((0, 2), (-2, 2), (2, 0), (2, -1), (2, 257)).foreach { case (m, k) =>
+      intercept[IllegalArgumentException](
+        Pq.train(vecs, "vec_id", "embedding", 4, m, k, iters = 1))
+    }
+  }
+
+  test("encode plans m NearestCell and no join, broadcast or aggregate " +
+    "fold; a sub missing from the codebooks gets NULL codes") {
+    val emb = Tables.embeddings(spark, d)
+    val m = 4
+    val books = Pq.train(emb, "vec_id", "embedding", Dim, m, 8, iters = 1)
+    val qe = Pq.encode(emb, books, "vec_id", "embedding", Dim, m).queryExecution
+    val plan = qe.optimizedPlan
+    assert(plan.collect { case j: Join => j }.isEmpty, plan)
+    assert(PlanWalk.expand(qe.executedPlan).collect { case b: BroadcastExchangeExec => b }
+      .isEmpty, qe.executedPlan)
+    val exprs = plan.collect { case n => n.expressions }.flatten
+    assert(exprs.forall(!_.exists(_.isInstanceOf[ArrayAggregate])), plan)
+    assert(exprs.map(_.collect { case e: NearestCell => e }.size).sum == m, plan)
+    val partial = Pq.encode(emb, books.where(col("sub") =!= 1), "vec_id", "embedding", Dim, m)
+      .collect().map(_.getSeq[Any](1))
+    assert(partial.nonEmpty && partial.forall(c => c.length == m && c(1) == null &&
+      Seq(0, 2, 3).forall(c(_) != null)))
+  }
+
+  test("ivfPqTopK ranks its probe cells on the driver and prunes the " +
+    "codes with a literal cell IN list") {
+    val emb = Tables.embeddings(spark, d)
+    val (coarse, books, codes) = Pq.ivfPqBuild(emb, "vec_id", "embedding", Dim,
+      nCells = 4, m = 4, k = 8, iters = 1)
+    val query = emb.where(col("vec_id") === 7L).select(col("embedding").as("qe"))
+    val top = Pq.ivfPqTopK(codes, coarse, books, query, "vec_id", "qe", Dim, 4,
+      nprobe = 2, k = 10)
+    val plan = top.queryExecution.optimizedPlan
+    // the only ordering is the final top-k over the codes' scores
+    val sorts = plan.collect { case s: Sort => s }
+    assert(sorts.size == 1 &&
+      sorts.head.order.flatMap(_.references.map(_.name)).contains("ivfpq_sim"), plan)
+    val physical = PlanWalk.expand(top.queryExecution.executedPlan)
+    assert(physical.count(_.isInstanceOf[TakeOrderedAndProjectExec]) == 1 &&
+      !physical.exists(_.isInstanceOf[SortExec]), top.queryExecution.executedPlan)
+    val inLists = plan.collect { case f: Filter => f.condition }.flatMap(_.collect {
+      case In(a: AttributeReference, list) if a.name == "cell" && list.forall(_.isInstanceOf[Literal]) =>
+        list.size
+      case InSet(a: AttributeReference, set) if a.name == "cell" => set.size
+    })
+    assert(inLists == Seq(2), plan)
+    assert(top.collect().length == 10)
+    // no query row answers nothing
+    assert(Pq.ivfPqTopK(codes, coarse, books, query.limit(0), "vec_id", "qe", Dim, 4,
+      nprobe = 2, k = 10).collect().isEmpty)
+  }
+
   test("exact reconstruction: when every sub-vector is a centroid, " +
     "ADC ranking matches the exact scan") {
     // 4 vectors built from a 2-cell codebook per subspace (dim 4,
@@ -60,6 +121,9 @@ class PqSpec extends SparkSpec {
       assert(math.abs(a.getDouble(1) - e.getDouble(e.fieldIndex("cos_sim")))
         < 1e-6)
     }
+    // no query row answers nothing
+    assert(Pq.adcTopK(codes, books, query.limit(0), "vec_id", "qe", 4, 2, 4)
+      .collect().isEmpty)
   }
 
   test("measured recall@10 vs the exact scan on the sf0.001 embeddings") {
