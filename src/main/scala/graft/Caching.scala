@@ -6,9 +6,10 @@ import org.apache.spark.sql.graftshim.SessionShim
 /** Cache lifecycle contract for graft operators.
   *
   * Several operators `cache()` an internal frame that appears on BOTH
-  * sides of a self-join (every Dedup pair generator, Stats
-  * correlationEdges/markerStats, VectorSearch.centroidSimilarity,
-  * Pack.packShards, Embed's long form): aliased
+  * sides of a self-join (Dedup's blocked self-join, which six Dedup
+  * pair generators share, Stats correlationEdges/markerStats,
+  * VectorSearch.centroidSimilarity, Pack.packShards, Embed's long
+  * form): aliased
   * self-join sides of the same uncached frame defeat ReuseExchange, so
   * without the cache the upstream pipeline is computed once PER SIDE.
   * Those cached frames are part of the (lazy) plan the operator

@@ -21,11 +21,14 @@ import graft.functions.{TextFns, VectorFns}
   * blocking cells, and hot shingles are droppable via a mirrored df
   * cap (stop-shingle suppression) to bound bucket skew.
   *
-  * Cache lifecycle: operators cache() intermediates that appear twice
-  * in their OWN plan (shingles feed both signatures and verification).
-  * The returned frame is lazy, so the operator cannot unpersist for
-  * you — callers running many operators in one session should
-  * `spark.catalog.clearCache()` after each terminal action (Bench and
+  * Cache lifecycle: the pair generators share one blocked self-join
+  * (`blockedSelfJoin`), which caches its pruned frame because both
+  * join sides read it; besides that, an operator caches a frame only
+  * where its own plan reads it more than once (shingles feed both
+  * signatures and verification; a band or block frame feeds the size
+  * count and the prune join). The returned frame is lazy, so the
+  * operator cannot unpersist for you — callers clear the caches after
+  * each terminal action, as the Caching contract requires (Bench and
   * Verify do).
   */
 object Dedup {
@@ -69,17 +72,6 @@ object Dedup {
     base.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** LSH candidate pairs: split the signature into bands of `rows`
-    * hashes; docs sharing any band key are candidates. The self-join
-    * shuffles only (band, key) — never the corpus.
-    *
-    * Skew guard: a band bucket of B members emits B² pairs, and hot
-    * buckets (boilerplate / near-empty docs hashing identically) grow
-    * with the corpus. Buckets larger than `maxBucket` are dropped
-    * BEFORE the self-join (mirrored in the oracle) — true duplicates
-    * still collide in their other, rarer bands, so recall loss is
-    * confined to pathological mega-clusters.
-    */
   /** Band postings (id, band, bkey) from a signature frame: the
     * persistable LSH index unit — what an incremental pipeline
     * writes per batch (see `incrementalLsh`) and what the batch
@@ -117,55 +109,91 @@ object Dedup {
         idCol, numHashes),
       idCol, numHashes, bandRows)
 
+  /** LSH candidate pairs: split the signature into bands of `rows`
+    * hashes; docs sharing any band key are candidates. The self-join
+    * shuffles only (band, key) — never the corpus.
+    *
+    * Skew guard (blockedSelfJoin): buckets over `maxBucket` are
+    * dropped — true duplicates still collide in their other, rarer
+    * bands, so recall loss is confined to pathological mega-clusters.
+    */
   def lshCandidates(
       sigs: DataFrame, idCol: String, numHashes: Int, rows: Int,
       maxBucket: Int): DataFrame = {
-    // the band frame feeds THREE consumers (bucket counts + both join
-    // sides); without a cache each one would recompute the signature
-    // aggregation and the shingle scan upstream. numBands rows per doc
-    // — always tiny relative to the corpus.
+    // the band frame (numBands rows per doc) feeds the bucket counts
+    // and the prune join. Measured without this cache (ProfileAll
+    // sf0.1, local[4], 3 runs): dedup_minhash_lsh shuffles 2412 →
+    // 3338 KB (dedup_cluster, dedup_select +926 KB), median wall
+    // 3.26 → 4.04 s; graftbench ingest (checkpointed shingles): no
+    // change in lshCandidates.shuffle_mb, exec_ms within noise.
     val exploded = bandPostings(sigs, idCol, numHashes, rows).cache()
-    val smallBuckets = exploded.groupBy(col("band"), col("bkey"))
-      .agg(count(lit(1)).as("bsz"))
-      .where(col("bsz") <= maxBucket)
-      .select(col("band"), col("bkey"))
-    // both self-join sides read the pruned postings; cached so the
-    // bucket-count aggregation + prune join run once, not twice.
-    // NOTE (r22, measured): dropping THIS cache (each side re-reading
-    // the exploded cache through its own prune join — the "merge 3
-    // cache fills into 2" hypothesis) shuffles posting-scale data
-    // TWICE: the duplicated prune subtrees do not canonicalize equal
-    // (differing output aliases), so exchange reuse never fires —
-    // ProfileAll dedup_select shuffle 2553 → 3944 KB, dedup_cluster
-    // 2491 → 3882 KB, wall a wash locally. One extra corpus-scale
-    // exchange per query is the wrong trade at lake scale; the three
-    // fills stay.
-    val pruned = exploded.join(smallBuckets, Seq("band", "bkey")).cache()
-    val a = pruned.select(col(idCol).as("da"), col("band"), col("bkey"))
-    val b = pruned.select(col(idCol).as("db"), col("band"), col("bkey"))
-    a.join(b, Seq("band", "bkey"))
-      .where(col("da") < col("db"))
+    blockedSelfJoin(exploded, Seq("band", "bkey"), maxBucket, idCol -> "d")
       .select(col("da"), col("db")).distinct()
+  }
+
+  /** The skew-guarded blocked self-join of the pair generators. A
+    * block of B rows emits B² pairs and hot blocks (boilerplate,
+    * near-empty docs, degenerate vectors) grow with the corpus, so
+    * blocks of `keys` with more than `maxBlock` rows are dropped BEFORE
+    * the join (each caller's oracle mirrors the cap). The pruned frame
+    * joins itself on `keys` under a.id < b.id: each pair once per
+    * shared block, never a self-pair. Each side carries `id` and the
+    * `carry` columns, (source, stem) renamed stem + "a" / stem + "b".
+    * `checkPruned` sees the pruned frame before the join.
+    *
+    * The pruned frame is cached because both sides read it. NOTE (r22,
+    * measured): without the cache the two prune subtrees do not
+    * canonicalize equal (differing output aliases), so exchange reuse
+    * never fires and the postings shuffle TWICE — ProfileAll
+    * dedup_select 2553 → 3944 KB, dedup_cluster 2491 → 3882 KB, wall a
+    * wash locally: the wrong trade at lake scale.
+    */
+  private def blockedSelfJoin(
+      rows: DataFrame, keys: Seq[String], maxBlock: Int,
+      id: (String, String), carry: Seq[(String, String)] = Nil,
+      checkPruned: DataFrame => Unit = _ => ()): DataFrame = {
+    val small = rows.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("bsz"))
+      .where(col("bsz") <= maxBlock)
+      .select(keys.map(col): _*)
+    val pruned = rows.join(small, keys).cache()
+    checkPruned(pruned)
+    def side(suffix: String): DataFrame = pruned.select(keys.map(col) ++
+      (id +: carry).map { case (src, stem) => col(src).as(stem + suffix) }: _*)
+    side("a").join(side("b"), keys)
+      .where(col(id._2 + "a") < col(id._2 + "b"))
   }
 
   /** Exact Jaccard for given candidate pairs from a shingle frame. */
   def jaccardVerify(
       cand: DataFrame, sh: DataFrame, idCol: String,
       minJaccard: Double): DataFrame = {
-    val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("nsh"))
-    val shA = sh.select(col(idCol).as("da"), col("sh"))
-    val shB = sh.select(col(idCol).as("db"), col("sh"))
-    cand
-      .join(shA, Seq("da"))
-      .join(shB, Seq("db", "sh"))
-      .groupBy(col("da"), col("db"))
+    val matches = cand
+      .join(sh.select(col(idCol).as("da"), col("sh")), Seq("da"))
+      .join(sh.select(col(idCol).as("db"), col("sh")), Seq("db", "sh"))
+    jaccardOf(matches, "da", "db", sh, sh, idCol, minJaccard)
+  }
+
+  /** Exact Jaccard of `matches` (one row per shingle pair (a, b)
+    * shares), set sizes counted from `shA` / `shB`; pairs under
+    * `minJaccard` dropped, 6 dp. Output: (a, b, jaccard).
+    */
+  private def jaccardOf(
+      matches: DataFrame, a: String, b: String,
+      shA: DataFrame, shB: DataFrame, idCol: String,
+      minJaccard: Double): DataFrame = {
+    def sizes(sh: DataFrame, side: String, n: String): DataFrame =
+      sh.groupBy(col(idCol)).agg(count(lit(1)).as("nsh"))
+        .select(col(idCol).as(side), col("nsh").as(n))
+    matches
+      .groupBy(col(a), col(b))
       .agg(count(lit(1)).cast("double").as("common"))
-      .join(sizes.select(col(idCol).as("da"), col("nsh").as("na")), Seq("da"))
-      .join(sizes.select(col(idCol).as("db"), col("nsh").as("nb")), Seq("db"))
+      .join(sizes(shA, a, "na"), Seq(a))
+      .join(sizes(shB, b, "nb"), Seq(b))
       .withColumn("raw_jac",
         col("common") / (col("na") + col("nb") - col("common")))
       .where(col("raw_jac") >= minJaccard)
-      .select(col("da"), col("db"), round(col("raw_jac"), 6).as("jaccard"))
+      .select(col(a), col(b), round(col("raw_jac"), 6).as("jaccard"))
   }
 
   /** MinHash + LSH near-dup pairs, verified by exact Jaccard. */
@@ -266,23 +294,11 @@ object Dedup {
       baseDocs.join(cand.select(col("old_id").as(idCol)),
         Seq(idCol), "left_semi"),
       idCol, textCol, shingleN).cache()
-    val sizesNew = newSh.groupBy(col(idCol)).agg(count(lit(1)).as("n_new"))
-    val sizesOld = oldSh.groupBy(col(idCol)).agg(count(lit(1)).as("n_old"))
-    cand
+    val matches = cand
       .join(newSh.select(col(idCol).as("new_id"), col("sh")), Seq("new_id"))
       .join(oldSh.select(col(idCol).as("old_id"), col("sh")),
         Seq("old_id", "sh"))
-      .groupBy(col("new_id"), col("old_id"))
-      .agg(count(lit(1)).cast("double").as("common"))
-      .join(sizesNew.select(col(idCol).as("new_id"), col("n_new")),
-        Seq("new_id"))
-      .join(sizesOld.select(col(idCol).as("old_id"), col("n_old")),
-        Seq("old_id"))
-      .withColumn("raw_jac",
-        col("common") / (col("n_new") + col("n_old") - col("common")))
-      .where(col("raw_jac") >= minJaccard)
-      .select(col("new_id"), col("old_id"),
-        round(col("raw_jac"), 6).as("jaccard"))
+    jaccardOf(matches, "new_id", "old_id", newSh, oldSh, idCol, minJaccard)
   }
 
   /** Default pairwise-verify budget for the two EXACT all-pairs
@@ -360,27 +376,13 @@ object Dedup {
       docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int, maxShingleDf: Int, minJaccard: Double,
       maxPairRows: Long = DefaultMaxPairRows): DataFrame = {
+    // the shingle frame feeds the df count, the prune join and both
+    // set sizes
     val sh = shingles(docs, idCol, textCol, shingleN).cache()
-    val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("nsh"))
-    val dfOk = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-      .where(col("df") <= maxShingleDf)
-      .select(col("sh"))
-    // both self-join sides read the pruned postings; cache so the
-    // df-filter join runs once, not twice
-    val pruned = sh.join(dfOk, Seq("sh")).cache()
-    requirePairBudget(pruned, "sh", maxPairRows, "ngramJaccard")
-    val a = pruned.select(col(idCol).as("da"), col("sh"))
-    val b = pruned.select(col(idCol).as("db"), col("sh"))
-    a.join(b, Seq("sh"))
-      .where(col("da") < col("db"))
-      .groupBy(col("da"), col("db"))
-      .agg(count(lit(1)).cast("double").as("common"))
-      .join(sizes.select(col(idCol).as("da"), col("nsh").as("na")), Seq("da"))
-      .join(sizes.select(col(idCol).as("db"), col("nsh").as("nb")), Seq("db"))
-      .withColumn("raw_jac",
-        col("common") / (col("na") + col("nb") - col("common")))
-      .where(col("raw_jac") >= minJaccard)
-      .select(col("da"), col("db"), round(col("raw_jac"), 6).as("jaccard"))
+    // a shingle's block is its posting list: the df cap is the block cap
+    val matches = blockedSelfJoin(sh, Seq("sh"), maxShingleDf, idCol -> "d",
+      checkPruned = requirePairBudget(_, "sh", maxPairRows, "ngramJaccard"))
+    jaccardOf(matches, "da", "db", sh, sh, idCol, minJaccard)
   }
 
   /** Prefix-filtered n-gram Jaccard (PPJoin-style, lossless): under a
@@ -525,12 +527,10 @@ object Dedup {
     * spread across all 4 bands are unreachable — an accepted
     * recall/scale tradeoff applied identically in the oracle.
     *
-    * Skew guard (same pattern as lshCandidates): a band bucket of B
-    * members emits B² pairs, and a pathological bucket — near-empty
-    * docs whose sparse features vote the same half-signature — grows
-    * with the corpus. Buckets larger than `maxBucket` are dropped
-    * BEFORE the self-join, mirrored in the oracle; true near-dups
-    * still collide in their other bands.
+    * Skew guard (blockedSelfJoin): buckets over `maxBucket` — e.g.
+    * near-empty docs whose sparse features vote the same
+    * half-signature — are dropped; true near-dups still collide in
+    * their other bands.
     */
   def simhashPairs(
       docs: DataFrame, idCol: String, textCol: String,
@@ -543,7 +543,7 @@ object Dedup {
       shiftright(col("sim_lo"), 16).bitwiseAND(65535),
       col("sim_hi").bitwiseAND(65535),
       shiftright(col("sim_hi"), 16).bitwiseAND(65535))
-    // three consumers (bucket counts + both join sides) — cache, like
+    // two consumers (bucket counts + the prune join) — cache, like
     // the LSH band frame
     val banded = sims.select(col(idCol), col("sim_hi"), col("sim_lo"),
       explode(array(bandCols.zipWithIndex.map { case (bv, j) =>
@@ -552,20 +552,8 @@ object Dedup {
       .select(col(idCol), col("sim_hi"), col("sim_lo"),
         col("b.bj").as("bj"), col("b.bv").as("bv"))
       .cache()
-    val smallBuckets = banded.groupBy(col("bj"), col("bv"))
-      .agg(count(lit(1)).as("bsz"))
-      .where(col("bsz") <= maxBucket)
-      .select(col("bj"), col("bv"))
-    // cached: both self-join sides read the pruned bands (aliased
-    // projections don't canonicalize equal, so ReuseExchange won't
-    // dedupe the prune join on its own)
-    val pruned = banded.join(smallBuckets, Seq("bj", "bv")).cache()
-    val a = pruned.select(col(idCol).as("da"), col("sim_hi").as("ha"),
-      col("sim_lo").as("la"), col("bj"), col("bv"))
-    val b = pruned.select(col(idCol).as("db"), col("sim_hi").as("hb"),
-      col("sim_lo").as("lb"), col("bj"), col("bv"))
-    a.join(b, Seq("bj", "bv"))
-      .where(col("da") < col("db"))
+    blockedSelfJoin(banded, Seq("bj", "bv"), maxBucket, idCol -> "d",
+      Seq("sim_hi" -> "h", "sim_lo" -> "l"))
       .select(col("da"), col("db"),
         (bit_count(col("ha").bitwiseXOR(col("hb"))) +
           bit_count(col("la").bitwiseXOR(col("lb")))).as("hamming"))
@@ -573,15 +561,6 @@ object Dedup {
       .where(col("hamming") <= maxHamming)
   }
 
-  /** Embedding near-dup: candidates blocked by a DATA-DERIVED key
-    * (default: the SRP-style sign code of the leading dims,
-    * VectorFns.signCode — at 100 TB there is no curated cluster/label
-    * column, so the blocking must come from the vectors themselves),
-    * exact double-cosine within blocks. Pair space is the sum of
-    * per-block n², never global n². Sign-agreement blocking trades
-    * recall for scale: high-cosine pairs agree on most hyperplane
-    * signs, so few true near-dups land in different blocks.
-    */
   /** Multi-band embedding near-dup: candidate pairs are the UNION of
     * per-band blocking collisions (each band an independent SRP sign
     * code over a disjoint dim slice), verified by exact cosine once.
@@ -600,57 +579,46 @@ object Dedup {
       // band keys derive from the CACHED (id, vec, norm) frame — the
       // raw source is scanned once for the whole operator, not twice
       // per band
-      val keyed = withNorm.select(bk.as("blk"), col(idCol))
-      val smallBlocks = keyed.groupBy(col("blk"))
-        .agg(count(lit(1)).as("bsz"))
-        .where(col("bsz") <= maxBlock)
-        .select(col("blk"))
-      // cached per band: both self-join sides read the pruned keys
-      val pruned = keyed.join(smallBlocks, Seq("blk")).cache()
-      val a = pruned.select(col("blk"), col(idCol).as("va"))
-      val b = pruned.select(col("blk"), col(idCol).as("vb"))
-      a.join(b, Seq("blk"))
-        .where(col("va") < col("vb"))
+      blockedSelfJoin(withNorm.select(bk.as("blk"), col(idCol)), Seq("blk"),
+        maxBlock, idCol -> "v")
         .select(col("va"), col("vb"))
     }.reduce(_ union _).distinct()
-    pairs
+    cosineOf(pairs
       .join(withNorm.select(col(idCol).as("va"), col(vecCol).as("ea"),
         col("nrm").as("nra")), Seq("va"))
       .join(withNorm.select(col(idCol).as("vb"), col(vecCol).as("eb"),
-        col("nrm").as("nrb")), Seq("vb"))
-      .withColumn("raw_cos", VectorFns.cosinePrenormed(
-        col("ea"), col("eb"), col("nra"), col("nrb")))
-      .where(col("raw_cos") >= minCos)
-      .select(col("va"), col("vb"), round(col("raw_cos"), 6).as("cos_sim"))
+        col("nrm").as("nrb")), Seq("vb")), minCos, "va", "vb")
   }
 
+  /** Embedding near-dup: candidates blocked by a DATA-DERIVED key
+    * (default: the SRP-style sign code of the leading dims,
+    * VectorFns.signCode — at 100 TB there is no curated cluster/label
+    * column, so the blocking must come from the vectors themselves),
+    * exact double-cosine within blocks. Pair space is the sum of
+    * per-block n², never global n². Sign-agreement blocking trades
+    * recall for scale: high-cosine pairs agree on most hyperplane
+    * signs, so few true near-dups land in different blocks.
+    */
   def embeddingNearDup(
       vectors: DataFrame, idCol: String, vecCol: String, blockKey: Column,
       minCos: Double, maxBlock: Int = 1000): DataFrame = {
     // norms computed once per vector, not once per pair; cached
-    // because the block-size prune plus both join sides read it
+    // because the block count and the prune join read it
     val withNorm = vectors.select(blockKey.as("blk"), col(idCol), col(vecCol),
       VectorFns.l2Norm(col(vecCol)).as("nrm")).cache()
-    // per-block pair count grows as bsz² with the corpus — blocks
-    // beyond `maxBlock` are dropped before the self-join (mirrored in
-    // the oracle), the same guard LSH/simhash banding carries
-    val smallBlocks = withNorm.groupBy(col("blk"))
-      .agg(count(lit(1)).as("bsz"))
-      .where(col("bsz") <= maxBlock)
-      .select(col("blk"))
-    // cached: both self-join sides read the pruned frame
-    val pruned = withNorm.join(smallBlocks, Seq("blk")).cache()
-    val a = pruned.select(col("blk"), col(idCol).as("va"),
-      col(vecCol).as("ea"), col("nrm").as("nra"))
-    val b = pruned.select(col("blk"), col(idCol).as("vb"),
-      col(vecCol).as("eb"), col("nrm").as("nrb"))
-    a.join(b, Seq("blk"))
-      .where(col("va") < col("vb"))
+    cosineOf(blockedSelfJoin(withNorm, Seq("blk"), maxBlock, idCol -> "v",
+      Seq(vecCol -> "e", "nrm" -> "nr")), minCos, "va", "vb")
+  }
+
+  /** Exact cosine of pairs carrying (ea, nra) and (eb, nrb); pairs
+    * under `minCos` dropped, 6 dp. Output: `keep`, then cos_sim.
+    */
+  private def cosineOf(pairs: DataFrame, minCos: Double, keep: String*): DataFrame =
+    pairs
       .withColumn("raw_cos", VectorFns.cosinePrenormed(
         col("ea"), col("eb"), col("nra"), col("nrb")))
       .where(col("raw_cos") >= minCos)
-      .select(col("va"), col("vb"), round(col("raw_cos"), 6).as("cos_sim"))
-  }
+      .select(keep.map(col) :+ round(col("raw_cos"), 6).as("cos_sim"): _*)
 
   /** Connected-component duplicate clusters over any pair-generator
     * output — the canonicalization stage that turns near-dup PAIRS
@@ -935,26 +903,13 @@ object Dedup {
       k: Int, iters: Int, minCos: Double,
       maxCell: Int = 1000): DataFrame = {
     val cents = VectorSearch.lloydCentroids(vectors, idCol, vecCol, k, iters)
-    // cached: the size prune plus both self-join sides read it
+    // cached: the cell count and the prune join read it
     val assigned = VectorSearch
       .assignCells(vectors, cents, idCol, vecCol, "cell")
       .cache()
-    val smallCells = assigned.groupBy(col("cell"))
-      .agg(count(lit(1)).as("csz"))
-      .where(col("csz") <= maxCell)
-      .select(col("cell"))
-    val pruned = assigned.join(smallCells, Seq("cell")).cache()
-    val a = pruned.select(col("cell"), col(idCol).as("va"),
-      col(vecCol).as("ea"), col("cnrm").as("nra"))
-    val b = pruned.select(col("cell"), col(idCol).as("vb"),
-      col(vecCol).as("eb"), col("cnrm").as("nrb"))
-    val pairs = a.join(b, Seq("cell"))
-      .where(col("va") < col("vb"))
-      .withColumn("raw_cos", VectorFns.cosinePrenormed(
-        col("ea"), col("eb"), col("nra"), col("nrb")))
-      .where(col("raw_cos") >= minCos)
-      .select(col("cell"), col("va"), col("vb"),
-        round(col("raw_cos"), 6).as("cos_sim"))
+    val pairs = cosineOf(blockedSelfJoin(assigned, Seq("cell"), maxCell,
+      idCol -> "v", Seq(vecCol -> "e", "cnrm" -> "nr")),
+      minCos, "cell", "va", "vb")
     // keeper attribution orders on the ROUNDED score so both engines
     // break ties from the identical 6dp value
     val w = Window.partitionBy(col("vb"))

@@ -44,8 +44,10 @@ object Embed {
       docs: DataFrame, idCol: String, textCol: String, dim: Int): DataFrame = {
     val toks = docs.select(col(idCol),
       explode(TextFns.bm25Tokens(col(textCol))).as("term"))
-    // tf feeds BOTH the df aggregate and the weighting join — cache
-    // so the token explode + groupBy(id, term) (a shuffle) runs once
+    // tf feeds BOTH the df aggregate and the weighting join. Measured
+    // without this cache (the tf exchange runs twice, never reused):
+    // ProfileAll sf0.1 emb_tfidf_topk 3052 → 4079 KB shuffled, median
+    // 4.17 → 4.53 s; graftbench ingest hashedTfIdf 1.74 → 2.39 MB.
     val tf = toks.groupBy(col(idCol), col("term"))
       .agg(count(lit(1)).cast("double").as("tf"))
       .cache()

@@ -49,7 +49,9 @@ object Pq {
     * new k-row codebook (one job per sub and round). The m subs'
     * loops run concurrently and touch only their own slice, so the
     * result is deterministic. k ≤ 256 keeps a code one byte; m < 1,
-    * k < 1 and a dim that m does not divide are refused.
+    * k < 1 and a dim that m does not divide are refused. Under Lloyd's
+    * L2 rule only a finite-normSq vector seeds, and only a
+    * finite-normSq sub-vector enters its subspace's means.
     */
   def train(
       vectors: DataFrame, idCol: String, vecCol: String,
@@ -58,7 +60,7 @@ object Pq {
     require(dim % m == 0, s"dim $dim must divide into m=$m subspaces")
     require(k >= 1 && k <= 256, s"k=$k must be in [1, 256] (one-byte codes)")
     val dsub = dim / m
-    val seeds = VectorSearch.seedVectors(vectors, idCol, vecCol, k)
+    val seeds = VectorSearch.seedVectors(vectors, idCol, vecCol, k, CellBook.L2)
     import scala.concurrent.{Await, Future, blocking}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global

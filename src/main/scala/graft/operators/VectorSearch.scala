@@ -372,29 +372,48 @@ object VectorSearch {
     * cell count, not the requested k — annIvf's probe fraction is
     * nprobe / |codebook|.
     *
+    * Bad-input rule (`trains`): a NULL, zero, NaN or infinite vector
+    * neither seeds a cell nor enters a mean. k < 1 is refused.
+    *
     * The returned frame is a local relation (see lloyd), so callers
     * collect it for free.
     */
   def lloydCentroids(
       vectors: DataFrame, idCol: String, vecCol: String,
-      k: Int, iters: Int): DataFrame =
-    lloyd(vectors, vecCol, seedVectors(vectors, idCol, vecCol, k), iters, CellBook.Cosine)
+      k: Int, iters: Int): DataFrame = {
+    require(k >= 1, s"k=$k must be at least one cell")
+    lloyd(vectors, vecCol, seedVectors(vectors, idCol, vecCol, k, CellBook.Cosine), iters,
+      CellBook.Cosine)
+  }
 
-  /** The k lowest-id vectors widened to doubles, in id order (one
-    * top-k job); a NULL vector stays null.
+  /** Lloyd's training rule: normSq finite (Spark orders NaN above +∞;
+    * NULL fails) and, under cosine, positive.
+    */
+  private def trains(vec: Column, objective: CellBook.Objective): Column = {
+    val n2 = VectorFns.normSq(vec)
+    objective match {
+      case CellBook.Cosine => n2 > 0.0 && n2 < Double.PositiveInfinity
+      case CellBook.L2 => n2 < Double.PositiveInfinity
+    }
+  }
+
+  /** The k lowest-id training vectors (see `trains`) widened to
+    * doubles, in id order (one top-k job).
     */
   private[operators] def seedVectors(vectors: DataFrame, idCol: String, vecCol: String,
-      k: Int): Seq[scala.collection.Seq[Any]] =
-    vectors.orderBy(col(idCol)).limit(k)
+      k: Int, objective: CellBook.Objective): Seq[scala.collection.Seq[Any]] =
+    vectors.where(trains(col(vecCol), objective)).orderBy(col(idCol)).limit(k)
       .select(VectorFns.asDouble(col(vecCol))).collect().toSeq
       .map(_.getAs[scala.collection.Seq[Any]](0))
 
   /** Lloyd's loop with the codebook on the driver, shared by
     * lloydCentroids (cosine) and Pq.train (L2): `seeds(i)` is cell i's
-    * initial centroid, then each of `iters` rounds assigns every vector
-    * with one NearestCell pass under `objective` and collects the
-    * long-form means (one job) into a local relation that the next
-    * round reads without a job. Iteration n's plan never nests
+    * initial centroid, then each of `iters` rounds assigns every
+    * training vector (see `trains`) with one NearestCell pass under
+    * `objective` and collects the long-form means (one job) into a
+    * local relation that the next round reads without a job. A NULL
+    * cell (no centroid of its length) enters no mean; it comes out of
+    * a generator, as in assignCells. Iteration n's plan never nests
     * iteration n−1's, so there is no lineage to truncate.
     */
   private[operators] def lloyd(vectors: DataFrame, vecCol: String,
@@ -402,9 +421,11 @@ object VectorSearch {
       objective: CellBook.Objective): DataFrame = {
     var cents = vectors.sparkSession.createDataFrame(java.util.Arrays.asList(
       seeds.indices.map(i => Row(i, seeds(i))): _*), CodebookSchema)
+    val training = vectors.where(trains(col(vecCol), objective))
     for (_ <- 1 to iters) {
-      val assigned = vectors.select(col(vecCol),
-        nearestCell(col(vecCol), cellBook(cents, "cell", objective)).as("cell"))
+      val assigned = training.select(col(vecCol),
+        explode(array(nearestCell(col(vecCol), cellBook(cents, "cell", objective)))).as("cell"))
+        .where(col("cell").isNotNull)
       cents = local(centroidArrays(assigned, "cell", vecCol).select(col("cell"), col("centroid")))
     }
     cents

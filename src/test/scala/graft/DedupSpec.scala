@@ -378,6 +378,74 @@ class DedupSpec extends SparkSpec {
     assert(out.count() == 0)
   }
 
+  test("every blocked pair generator keeps a block of exactly the cap, " +
+    "drops one of cap + 1, and joins one cached pruned relation with itself") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, Project}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.functions.col
+    import graft.functions.VectorFns
+    // identical members make every block key of a group equal: group A
+    // (ids 1, 3, 5) is a block of exactly the cap, group B (ids 2, 4,
+    // 6, 8) one of cap + 1; the two groups share no block
+    val cap = 3
+    val (groupA, groupB) = (Seq(1L, 3L, 5L), Seq(2L, 4L, 6L, 8L))
+    val textDocs = (groupA.map(_ -> base) ++ groupB.map(_ -> distinct))
+      .toDF("doc_id", "text")
+    val vecs = (groupA.map(_ -> Array(1.0f, 1.0f, 1.0f, 1.0f)) ++
+      groupB.map(_ -> Array(-1.0f, -1.0f, -1.0f, -1.0f))).toDF("vec_id", "embedding")
+    val emb = col("embedding")
+    val sigs = Dedup.minhashSignatures(Dedup.shingles(textDocs, "doc_id", "text", 3),
+      "doc_id", 32)
+    def pairs(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val aPairs = Set((1L, 3L), (1L, 5L), (3L, 5L))
+    // (operator, its output as (lower id, higher id) pairs, expected,
+    // self-joins on a pruned cache: one per band)
+    val cases: Seq[(String, DataFrame, DataFrame => Set[(Long, Long)], Set[(Long, Long)], Int)] =
+      Seq(
+        ("lshCandidates", Dedup.lshCandidates(sigs, "doc_id", 32, 4, maxBucket = cap),
+          pairs, aPairs, 1),
+        ("ngramJaccard", Dedup.ngramJaccard(textDocs, "doc_id", "text", shingleN = 3,
+          maxShingleDf = cap, minJaccard = 0.5), pairs, aPairs, 1),
+        ("simhashPairs", Dedup.simhashPairs(textDocs, "doc_id", "text", maxBucket = cap),
+          pairs, aPairs, 1),
+        ("embeddingNearDupBands", Dedup.embeddingNearDupBands(vecs, "vec_id", "embedding",
+          Seq(VectorFns.signCodeAt(emb, 1, 2), VectorFns.signCodeAt(emb, 3, 2)), 0.9,
+          maxBlock = cap), pairs, aPairs, 2),
+        ("embeddingNearDup", Dedup.embeddingNearDup(vecs, "vec_id", "embedding",
+          VectorFns.signCode(emb, 4), 0.9, maxBlock = cap), pairs, aPairs, 1),
+        // one row per dropped vector: (dup_of, vec_id); 5 ties 1 and 3
+        // at 1.0 and goes to the smaller
+        ("semanticDedup", Dedup.semanticDedup(vecs, "vec_id", "embedding", k = 2, iters = 1,
+          minCos = 0.9, maxCell = cap),
+          df => df.collect().map(r => (r.getAs[Long]("dup_of"), r.getAs[Long]("vec_id"))).toSet,
+          Set((1L, 3L), (1L, 5L)), 1))
+    // the cached relation a join side reads through projections and
+    // filters only
+    def cachedLeaf(p: LogicalPlan): Option[InMemoryRelation] = p match {
+      case r: InMemoryRelation => Some(r)
+      case Project(_, c) => cachedLeaf(c)
+      case Filter(_, c) => cachedLeaf(c)
+      case _ => None
+    }
+    cases.foreach { case (op, out, read, expected, selfJoins) =>
+      assert(read(out) == expected, op)
+      // both sides of each pair join read ONE cached relation, and
+      // that relation is the pruned frame (its build holds the prune
+      // join), not a pre-prune cache
+      val onPruned = out.queryExecution.optimizedPlan.collect {
+        case j: Join => (cachedLeaf(j.left), cachedLeaf(j.right)) match {
+          case (Some(a), Some(b)) if a.cacheBuilder eq b.cacheBuilder =>
+            PlanWalk.expand(a.cacheBuilder.cachedPlan).exists(_.isInstanceOf[BaseJoinExec])
+          case _ => false
+        }
+      }.count(identity)
+      assert(onPruned == selfJoins, s"$op:\n${out.queryExecution.optimizedPlan}")
+    }
+    spark.catalog.clearCache()
+  }
+
   test("connectedComponents labels every cluster with its min id") {
     val pairs = Seq(
       (2L, 5L), (5L, 9L),   // chain {2,5,9}

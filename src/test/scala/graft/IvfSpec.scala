@@ -364,4 +364,52 @@ class IvfSpec extends SparkSpec {
       }
     }
   }
+
+  /** Six clean vectors (ids 1–6) with each of `extra` below them (ids
+    * −1, −2, …), so every extra vector sits at a seed position.
+    */
+  private def withExtras(clean: Seq[Seq[Any]], extra: Seq[Seq[Any]]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(
+      (extra.zipWithIndex.map { case (v, i) => Row(-1L - i, v) } ++
+        clean.zipWithIndex.map { case (v, i) => Row(i + 1L, v) }): _*),
+      StructType(Seq(StructField("vec_id", LongType),
+        StructField("embedding", ArrayType(DoubleType)))))
+
+  test("lloydCentroids trains on defined vectors only and refuses k < 1") {
+    val clean: Seq[Seq[Any]] = Seq(Seq(1.0, 0.1, 0.0), Seq(0.0, 1.0, 0.1), Seq(0.1, 0.0, 1.0),
+      Seq(0.9, 0.0, 0.1), Seq(0.1, 0.9, 0.0), Seq(0.0, 0.1, 0.9))
+    def train(extra: Seq[Seq[Any]], k: Int = 3) = VectorSearch.lloydCentroids(
+      withExtras(clean, extra), "vec_id", "embedding", k, iters = 2)
+    def sorted(df: DataFrame) = df.collect().map(r => (r.get(0), r.getSeq[Double](1)))
+      .sortBy(_._1.asInstanceOf[Int]).toSeq
+    val want = sorted(train(Nil))
+    assert(want.size == 3)
+    // under cosine a zero vector is undefined too; at a seed position
+    // it would seed a dead cell and add a [null, zero] row, and a NaN
+    // seed would take every vector into one NaN cell
+    val bad: Seq[(String, Seq[Any])] = Seq("zero" -> Seq(0.0, 0.0, 0.0),
+      "NaN" -> Seq(nan, 1.0, 0.0), "+inf" -> Seq(inf, 0.0, 0.0), "null" -> null,
+      "null element" -> Seq(null, 1.0, 0.0))
+    bad.foreach { case (name, v) => assert(sorted(train(Seq(v))) == want, name) }
+    assert(sorted(train(bad.map(_._2))) == want)
+    Seq(0, -1).foreach(k => intercept[IllegalArgumentException](train(Nil, k)))
+  }
+
+  test("Pq.train's L2 Lloyd trains on vectors with a finite normSq only") {
+    val clean: Seq[Seq[Any]] = Seq(Seq(1.0, 0.0, 2.0, 0.0), Seq(0.0, 1.0, 0.0, 2.0),
+      Seq(-1.0, 0.0, -2.0, 0.0), Seq(0.9, 0.1, 2.1, 0.0), Seq(0.1, 0.9, 0.0, 1.9),
+      Seq(-0.9, 0.0, -1.9, 0.1))
+    def train(extra: Seq[Seq[Any]]) = Pq.train(withExtras(clean, extra), "vec_id",
+      "embedding", dim = 4, m = 2, k = 3, iters = 2)
+    def sorted(df: DataFrame) = df.collect()
+      .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2))).sortBy(_._1).toSeq
+    val want = sorted(train(Nil))
+    assert(want.size == 6)
+    // every bad vector is bad in both subspaces (m = 2)
+    val bad: Seq[(String, Seq[Any])] = Seq("NaN" -> Seq(nan, 1.0, 1.0, nan),
+      "inf" -> Seq(inf, 0.0, 0.0, -inf), "null" -> null,
+      "null element" -> Seq(null, 1.0, 1.0, null))
+    bad.foreach { case (name, v) => assert(sorted(train(Seq(v))) == want, name) }
+    assert(sorted(train(bad.map(_._2))) == want)
+  }
 }
