@@ -75,13 +75,6 @@ object TextFns {
       graft.expressions.TokenShingles(ColumnShim.expression(toks), n))
   }
 
-  /** Convenience (slow-path) shingles straight from text; fine for
-    * specs and small frames, use shinglesOfTokens + pre-projection in
-    * operators.
-    */
-  def wordShingles(text: Column, n: Int): Column =
-    shinglesOfTokens(wsTokens(text), n)
-
   def countInList(tokens: Column, words: Seq[String]): Column =
     size(filter(tokens, t => t.isInCollection(words)))
 

@@ -56,16 +56,6 @@ object VectorFns {
   def cosinePrenormed(a: Column, b: Column, normA: Column, normB: Column): Column =
     dot(a, b) / nullif(normA * normB, lit(0.0))
 
-  /** Squared L2 distance (reference uses L2 distance for Chroma). */
-  def l2DistSq(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => {
-        val d = x.cast("double") - y.cast("double")
-        d * d
-      }),
-      lit(0.0),
-      (acc, x) => acc + x)
-
   /** Element-wise mean of grouped vectors, long-form helper: callers
     * posexplode to (id, pos, v) rows, groupBy(id, pos).avg, and
     * re-assemble if needed. Kept long-form on purpose: at 100 TB the

@@ -111,6 +111,11 @@ object Bm25 {
     * synonyms + abbreviations to the lexical query,
     * reference: backend/app/core/precision_search.py:165). Single
     * pass — expanded terms just widen the pivoted tf columns.
+    *
+    * TakeOrderedAndProject — no full sort. Ranks on the ROUNDED score
+    * (6dp) with id tiebreak so the row set at the LIMIT boundary is
+    * identical to the oracle's, which orders by round(s, 6) — ranking
+    * on raw doubles could disagree when two scores round equal.
     */
   def topKExpanded(
       docs: DataFrame, idCol: String, textCol: String,
@@ -130,18 +135,9 @@ object Bm25 {
       .select(col(idCol), col("bm25"))
   }
 
-  /** Top-k BM25 search (TakeOrderedAndProject — no full sort).
-    * Ranks on the ROUNDED score (6dp) with id tiebreak so the row set
-    * at the LIMIT boundary is identical to the oracle's, which orders
-    * by round(s, 6) — ranking on raw doubles could disagree when two
-    * scores round equal.
-    */
+  /** Top-k BM25 search: `topKExpanded` with no expansions. */
   def topK(
       docs: DataFrame, idCol: String, textCol: String,
       queryTerms: Seq[String], k: Int): DataFrame =
-    score(docs, idCol, textCol, queryTerms)
-      .withColumn("bm25", round(col("bm25"), 6))
-      .orderBy(col("bm25").desc, col(idCol))
-      .limit(k)
-      .select(col(idCol), col("bm25"))
+    topKExpanded(docs, idCol, textCol, queryTerms, Nil, 1.0, k)
 }

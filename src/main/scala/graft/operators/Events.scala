@@ -280,10 +280,9 @@ object Events {
     *
     * EXACT countDistinct for oracle parity: a two-phase aggregate
     * (per-partition distinct then merge), whose shuffle carries the
-    * per-day distinct user sets. The documented lake-scale
-    * substitution is `approx_count_distinct` (HLL++ sketches merge
-    * in constant space per day) at the marked spot — EventsSpec pins
-    * the swap's relative-error envelope so it stays a config change.
+    * per-day distinct user sets. `approx_count_distinct` (HLL++)
+    * would shrink that exchange to a constant-size sketch per day, at
+    * the price of exact parity.
     */
   def dailyActiveUsers(events: DataFrame): DataFrame =
     events
@@ -291,29 +290,7 @@ object Events {
       .groupBy(col("day"))
       .agg(
         count(lit(1)).cast("long").as("n_events"),
-        // lake-scale swap point: approx_count_distinct(user_id, rsd)
         countDistinct(col("user_id")).cast("long").as("dau"))
-      .withColumn("events_per_user",
-        round(col("n_events").cast("double") / col("dau") + lit(1e-9), 4))
-
-  /** The lake-scale twin of `dailyActiveUsers` AS RUNNABLE CODE (not
-    * just the marked swap point): HLL++ `approx_count_distinct` at
-    * the given relative standard deviation. The sketch merges in
-    * CONSTANT space per day — the shuffle carries one ~1.5/rsd²-byte
-    * sketch per (partition, day) instead of the per-day distinct
-    * user sets, which is the difference between a bounded and an
-    * O(users) exchange at 100 TB. Same output schema as the exact
-    * op; EventsSpec pins the per-day error envelope against the
-    * exact row set on the sf0.1 testdata.
-    */
-  def dailyActiveUsersApprox(
-      events: DataFrame, rsd: Double = 0.02): DataFrame =
-    events
-      .withColumn("day", to_date(timestamp_seconds(tsSecs("ts"))))
-      .groupBy(col("day"))
-      .agg(
-        count(lit(1)).cast("long").as("n_events"),
-        approx_count_distinct(col("user_id"), rsd).as("dau"))
       .withColumn("events_per_user",
         round(col("n_events").cast("double") / col("dau") + lit(1e-9), 4))
 
@@ -324,10 +301,8 @@ object Events {
     * EXACT percentiles for oracle parity (Spark `percentile` and
     * DuckDB `quantile_cont` share the interpolation rule — the
     * sc_ploidy precedent). Scale contract: exact per-group
-    * percentiles buffer a group's values; at lake scale substitute
-    * `percentile_approx` at the marked spot — EventsSpec pins the
-    * swap's error envelope so the substitution is a config change,
-    * not a semantics change.
+    * percentiles buffer a group's values; `percentile_approx` would
+    * bound the buffer, at the price of exact parity.
     */
   def valuePercentiles(
       events: DataFrame, typeCol: String, valCol: String): DataFrame = {
@@ -336,31 +311,9 @@ object Events {
       .agg(
         count(lit(1)).cast("long").as("n_events"),
         r6(avg(col(valCol))).as("mean_value"),
-        // atlas-scale swap point: percentile_approx(value, p, acc)
         r6(expr(s"percentile($valCol, 0.5)")).as("p50"),
         r6(expr(s"percentile($valCol, 0.9)")).as("p90"),
         r6(expr(s"percentile($valCol, 0.99)")).as("p99"))
-  }
-
-  /** The atlas-scale twin of `valuePercentiles` AS RUNNABLE CODE:
-    * Greenwald-Khanna `percentile_approx` at the given accuracy.
-    * The GK sketch is bounded-size and mergeable, so a group's
-    * values are never buffered — rank error ≤ 1/accuracy of the
-    * group size by the sketch's contract. Same output schema as the
-    * exact op; EventsSpec pins the per-type envelope against the
-    * exact row set on the sf0.1 testdata.
-    */
-  def valuePercentilesApprox(
-      events: DataFrame, typeCol: String, valCol: String,
-      accuracy: Int = 10000): DataFrame = {
-    def r6(c: org.apache.spark.sql.Column) = round(c + lit(1e-9), 6)
-    events.groupBy(col(typeCol))
-      .agg(
-        count(lit(1)).cast("long").as("n_events"),
-        r6(avg(col(valCol))).as("mean_value"),
-        r6(expr(s"percentile_approx($valCol, 0.5, $accuracy)")).as("p50"),
-        r6(expr(s"percentile_approx($valCol, 0.9, $accuracy)")).as("p90"),
-        r6(expr(s"percentile_approx($valCol, 0.99, $accuracy)")).as("p99"))
   }
 
   /** Cohort retention: cohort = a user's first active period (day,

@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing: image/audio/video payloads ride as
   * opaque BINARY columns with typed metadata; decode/feature-extract
@@ -30,14 +29,6 @@ object Multimodal {
   case class MediaFeatures(
       media_id: Long, kind: String, n_bytes: Long,
       features: Array[Float])
-
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false),
-    StructField("payload", BinaryType, nullable = false),
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("sample_rate", IntegerType, nullable = false)))
 
   /** STUB decoder: where a production pipeline calls the image/audio
     * codec, we emit a deterministic 8-dim feature from byte content
@@ -137,32 +128,6 @@ object Multimodal {
     }
   }
 
-  /** Resize plumbing: deterministic nearest-neighbor subsample of a
-    * frame byte-grid to targetW×targetH (a real pipeline calls the
-    * image library; the index arithmetic and output shape are the
-    * production contract). Pure function used inside batch decode.
-    */
-  def resizeGrid(
-      frame: Array[Byte], srcW: Int, srcH: Int,
-      targetW: Int, targetH: Int): Array[Byte] = {
-    require(srcW > 0 && srcH > 0 && targetW > 0 && targetH > 0)
-    val out = new Array[Byte](targetW * targetH)
-    var y = 0
-    while (y < targetH) {
-      val sy = math.min(srcH - 1, y * srcH / targetH)
-      var x = 0
-      while (x < targetW) {
-        val sx = math.min(srcW - 1, x * srcW / targetW)
-        val idx = sy * srcW + sx
-        out(y * targetW + x) =
-          if (idx < frame.length) frame(idx) else 0.toByte
-        x += 1
-      }
-      y += 1
-    }
-    out
-  }
-
   /** Route each modality toward its own partitions before decode —
     * at cluster scale this pins codecs (image vs audio vs video) to
     * executor pools. Kinds can still share a partition (hash
@@ -174,17 +139,4 @@ object Multimodal {
   def partitionByKind(media: DataFrame, partitions: Int): DataFrame =
     media.repartition(partitions, col("kind"))
       .sortWithinPartitions(col("kind"))
-
-  /** Deterministic synthetic media table for tests/demo: payload
-    * bytes derived from media_id.
-    */
-  def syntheticMedia(spark: SparkSession, n: Int): Dataset[MediaRow] = {
-    import spark.implicits._
-    spark.range(n.toLong).map { i =>
-      val kind = if (i % 3 == 0) "image" else if (i % 3 == 1) "audio" else "video"
-      val payload = Array.tabulate[Byte](64 + (i % 64).toInt)(j =>
-        ((i * 31 + j * 7) % 256).toByte)
-      MediaRow(i, kind, payload, 64, 48, 16000)
-    }
-  }
 }

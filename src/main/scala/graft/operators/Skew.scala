@@ -52,26 +52,4 @@ object Skew {
       explode(sequence(lit(0L), lit(saltBuckets - 1L))))
     salted.join(replicated, Seq(key, "_salt")).drop("_salt")
   }
-
-  /** Two-phase (partial → final) aggregation for hot GROUP BY keys:
-    * count/sum first over (key, salt), then re-aggregate over key.
-    * NOTE (r18, probe-measured): for algebraic aggregates this is a
-    * pure LOSS (0.64-0.74× vs plain groupBy) — Spark's map-side
-    * partial aggregation already reduces a hot key to one row per
-    * mapper, so the salt only adds a shuffle. Keep this as the
-    * pattern for HOLISTIC per-key aggregations (exact distincts,
-    * collect_list) where map-side combine cannot shrink the hot
-    * key's state and one reducer would otherwise hold it all.
-    */
-  def saltedCountSum(
-      df: DataFrame, key: String, valueCol: String,
-      saltCol: Column, saltBuckets: Int): DataFrame = {
-    require(saltBuckets > 0, "saltBuckets must be positive")
-    df.withColumn("_salt",
-      pmod(coalesce(saltCol.cast("long"), lit(0L)), lit(saltBuckets.toLong)))
-      .groupBy(col(key), col("_salt"))
-      .agg(count(lit(1)).as("_c"), sum(col(valueCol)).as("_s"))
-      .groupBy(col(key))
-      .agg(sum(col("_c")).as("cnt"), sum(col("_s")).as("sum_value"))
-  }
 }

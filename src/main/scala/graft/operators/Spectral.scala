@@ -4,12 +4,13 @@ import breeze.linalg.{eigSym, DenseMatrix}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Graph-Laplacian spectral features over a thresholded co-expression
-  * edge list (reference: rnaseq_pipeline/ml/network_enhancer.py:184
+/** Graph-Laplacian spectrum of a thresholded co-expression edge list
+  * (reference: rnaseq_pipeline/ml/network_enhancer.py:184
   * calculate_graph_laplacian — L = I − D^(−1/2) W D^(−1/2), the GCNN
-  * normalized Laplacian — and :405 calculate_spectral_features:
-  * spectral gap, algebraic connectivity, zero-eigenvalue component
-  * count, spectral radius, k smallest eigenvalues).
+  * normalized Laplacian). The reference's :405
+  * calculate_spectral_features (spectral gap, algebraic
+  * connectivity, zero-eigenvalue component count, spectral radius)
+  * are one-line reads of the ascending spectrum returned here.
   *
   * Scale design — the pca2d driver-eigen device: the edge list is
   * panel-bounded upstream (correlationEdges caps the node set at
@@ -67,26 +68,5 @@ object Spectral {
       (if (i == j) 1.0 else 0.0) - dInvSqrt(i) * a(i, j) * dInvSqrt(j)
     }
     eigSym(l).eigenvalues.toArray.sorted
-  }
-
-  /** One-row spectral summary frame (network_enhancer.py:405):
-    * spectral_gap = λ₂−λ₁, algebraic_connectivity = λ₂,
-    * num_components = #{|λ| < 1e-10}, spectral_radius = λ_max,
-    * top_eigenvalues = k smallest (ascending, like the reference's
-    * `eigenvalues[:k]` over the ascending sort).
-    */
-  def spectralFeatures(
-      edges: DataFrame, aCol: String, bCol: String, wCol: String,
-      k: Int = 10): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val ev = laplacianEigenvalues(edges, aCol, bCol, wCol)
-    val gap = if (ev.length > 1) ev(1) - ev(0) else 0.0
-    val conn = if (ev.length > 1) ev(1) else 0.0
-    val comps = ev.count(e => math.abs(e) < 1e-10).toLong
-    val radius = if (ev.nonEmpty) ev.last else 0.0
-    Seq((ev.length.toLong, gap, conn, comps, radius, ev.take(k).toSeq))
-      .toDF("n_nodes", "spectral_gap", "algebraic_connectivity",
-        "num_components", "spectral_radius", "top_eigenvalues")
   }
 }

@@ -600,7 +600,7 @@ object Stats {
     * and var_samp then differ by ulps, orders below the suite's
     * round(+1e-9, 6) protocol.
     */
-  def diffStatsFromMoments(
+  private[graft] def diffStatsFromMoments(
       moments: DataFrame, featureCol: String, cohortCol: String,
       cohortA: String, cohortB: String): DataFrame = {
     def arm(c: String, v: Column) = sum(when(col(cohortCol) === c, v))

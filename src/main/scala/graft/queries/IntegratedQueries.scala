@@ -80,19 +80,19 @@ object IntegratedQueries {
     * the aggregate onto the moment frame and re-derive the diff/hub
     * arithmetic per predicate (the driver_db/var_summary defect
     * class). The cached frames are 40/10 rows.
+    *
+    * Precondition of the deg probe: `moments`' value sums must be
+    * exact in double. diffStatsFromMoments derives the variance as
+    * (ss − s²/n)/(n−1), which cancels catastrophically on large-mean,
+    * low-variance floats; degMoments sums integral l_quantity values,
+    * so here the sums are exact and the result matches degStats.
     */
-  private[queries] def probeDeg(s: SparkSession, d: String): DataFrame =
-    probeDegFrom(degMoments(s, d))
-
   private[queries] def probeDegFrom(moments: DataFrame): DataFrame =
     Stats.diffStatsFromMoments(moments, "gene", "cohort", "A", "R")
       .cache().select(
         pickSym(col("gene")).as("gene_symbol"),
         round(col("log2_fc") * 20.0 + lit(1e-9), 6).as("log2fc"),
         round(col("p_value") * col("p_value") + lit(1e-9), 6).as("padj"))
-
-  private[queries] def probeHub(s: SparkSession, d: String): DataFrame =
-    probeHubFrom(degMoments(s, d))
 
   private[queries] def probeHubFrom(moments: DataFrame): DataFrame =
     StatsQueries.degHubFromCounts(

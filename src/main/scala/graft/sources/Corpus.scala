@@ -30,12 +30,6 @@ object Corpus {
     StructField("source", StringType),
     StructField("n_chars", LongType)))
 
-  /** The embeddings-table schema (vector as array<float>). */
-  val embeddingsSchema: StructType = StructType(Seq(
-    StructField("vec_id", LongType),
-    StructField("embedding", ArrayType(FloatType)),
-    StructField("label", IntegerType)))
-
   /** JSON-lines corpus reader with a declared schema; malformed rows
     * land in `_corrupt_record` (add it to the schema to quarantine).
     */
@@ -44,14 +38,6 @@ object Corpus {
       .schema(schema)
       .option("mode", "PERMISSIVE")
       .json(path)
-
-  /** CSV corpus reader with a declared schema (header expected). */
-  def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read
-      .schema(schema)
-      .option("header", "true")
-      .option("mode", "PERMISSIVE")
-      .csv(path)
 
   /** Parquet writer partitioned by low-cardinality columns: reads
     * filtered on those columns prune whole directories

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One raw event for stateful streaming sessionization. */
@@ -16,181 +15,15 @@ case class ClosedSession(
     user_id: Long, session_start: Long, n_events: Long,
     sum_value: Double, duration_secs: Long)
 
-/** One keyed corpus update flowing on the stream. */
-case class UpsertEvent(
-    key: Long, version: Long, payload: String, deleted: Boolean)
-
-/** Per-key winning version kept in the state store. */
-case class KeyLatest(version: Long, payload: String, deleted: Boolean)
-
-/** The current resolved view row for a key (tombstones included so
-  * downstream sinks can delete).
-  */
-case class CurrentRow(
-    key: Long, version: Long, payload: String, deleted: Boolean)
-
-/** One typed event for streaming transition tracking. `event_id`
-  * carries the batch twin's tiebreak: Events.transitionMatrix chains
-  * same-second events by (ts, event_id), and the stream must chain
-  * identically or same-second multi-event users diverge between the
-  * batch and streaming matrices (r14 advice).
-  */
-case class TypedEvent(
-    user_id: Long, ts: java.sql.Timestamp, event_type: String,
-    event_id: Long)
-
-/** Per-user last-seen event kept in the state store. */
-case class LastEvent(secs: Long, event_type: String)
-
-/** One observed prev→next transition emitted downstream. */
-case class TransitionPair(prev_type: String, next_type: String)
-
-/** Structured Streaming twins of the batch event operators
-  * (graft.operators.Events). Same logical shapes — tumbling windows,
-  * sessionization-ready keyed state — expressed on an unbounded
-  * source with watermarks. The batch variants are the
-  * oracle-checkable versions; these run the identical aggregation
-  * plan incrementally.
+/** Stateful Structured Streaming sessionization: the incremental form
+  * of the batch Events.sessionize, run end to end (file source → state
+  * store → checkpointed sink) by graft.tools.StreamSmoke.
   *
-  * At cluster scale: state store is keyed by (window, event_type) /
-  * (user_id) — partition count = shuffle partitions; watermark bounds
-  * state size so 100 TB/day of events holds only the open windows.
+  * At cluster scale: the state store is keyed by user_id — partition
+  * count = shuffle partitions; the watermark bounds state size so
+  * 100 TB/day of events holds only the open sessions.
   */
 object StreamingAggs {
-
-  /** Tumbling-window count/sum per event type over a streaming frame
-    * with a `ts` TimestampType column. Late data beyond the watermark
-    * is dropped (correct-by-watermark, same result as the batch
-    * dailyAgg once all on-time data arrives).
-    */
-  def windowedAgg(
-      events: DataFrame, windowDur: String, watermarkDelay: String): DataFrame =
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), windowDur), col("event_type"))
-      .agg(
-        count(lit(1)).as("cnt"),
-        round(sum(col("value")), 2).as("sum_value"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("cnt"), col("sum_value"))
-
-  /** Streaming top-event-type rates: running counts per type (complete
-    * mode aggregation for dashboards).
-    */
-  def runningCounts(events: DataFrame): DataFrame =
-    events.groupBy(col("event_type")).agg(count(lit(1)).as("cnt"))
-
-  /** Streaming DAU: per-tumbling-window user reach via the HLL++
-    * sketch. EXACT distinct aggregation is UNSUPPORTED on streams —
-    * its state would be each open window's entire user set, and
-    * Spark rejects the plan at query start (spec-pinned) — so the
-    * rsd-tunable sketch is not a perf swap here but the only
-    * streaming-legal form: constant state per open window, sketches
-    * merge across micro-batches, and the error envelope is the one
-    * the batch twin (Events.dailyActiveUsersApprox) pins against
-    * exact DAU at sf0.1. The watermark closes windows and bounds the
-    * number of live sketches.
-    */
-  def windowedDau(
-      events: DataFrame, windowDur: String, watermarkDelay: String,
-      rsd: Double = 0.02): DataFrame =
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), windowDur))
-      .agg(
-        count(lit(1)).cast("long").as("n_events"),
-        approx_count_distinct(col("user_id"), rsd).as("dau"))
-      .select(col("window.start").as("window_start"),
-        col("n_events"), col("dau"))
-
-  /** Streaming twin of Events.propsAgg: typed JSON extraction from
-    * the schemaless props payload inside a windowed aggregation —
-    * from_json is a pure codegen'd projection, so it composes with
-    * watermarked incremental aggregation exactly like any column
-    * (the point the spec pins: impose schema at read time on an
-    * unbounded source, malformed rows null out, state stays bounded
-    * by the watermark).
-    */
-  def windowedPropsAgg(
-      events: DataFrame, windowDur: String, watermarkDelay: String,
-      bucketWidth: Long = 25L): DataFrame =
-    events
-      .withWatermark("ts", watermarkDelay)
-      .withColumn("k",
-        from_json(col("props"),
-          org.apache.spark.sql.types.StructType.fromDDL("k BIGINT"))
-          .getField("k"))
-      .withColumn("k_bucket", expr(s"k div $bucketWidth"))
-      .groupBy(window(col("ts"), windowDur), col("event_type"),
-        col("k_bucket"))
-      .agg(count(lit(1)).as("n_events"), sum(col("k")).as("sum_k"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("k_bucket"), col("n_events"), col("sum_k"))
-
-  /** Stream-stream interval join: pair each click with the
-    * impressions the same user saw in the `window` before it. Both
-    * sides carry watermarks and the join condition bounds event-time
-    * distance, so Spark can EXPIRE buffered rows — state holds only
-    * `window`+watermark worth of each stream, regardless of total
-    * volume (the unbounded-state stream join is the other classic
-    * 100 TB/day failure mode next to hot keys).
-    */
-  def impressionClickJoin(
-      impressions: DataFrame, clicks: DataFrame, window: String): DataFrame =
-    impressions.withWatermark("imp_ts", window)
-      .join(
-        clicks.withWatermark("click_ts", window),
-        expr(
-          s"""imp_user = click_user
-             |AND click_ts >= imp_ts
-             |AND click_ts <= imp_ts + interval $window""".stripMargin))
-
-  /** Streaming exact dedup on ingest — the incremental twin of the
-    * batch `Dedup.exact` (an LLM-data pipeline dedups the feed, not
-    * just the resting corpus). Keyed by content hash;
-    * dropDuplicatesWithinWatermark holds each hash only until the
-    * watermark passes it, so state is bounded by `watermarkDelay` of
-    * arrivals — the unbounded-state dedup (plain dropDuplicates on a
-    * stream) is the classic slow-death failure mode this avoids.
-    * Contract: duplicates ARRIVING within the watermark window are
-    * dropped; a re-crawl months later re-emits (and the batch dedup
-    * sweep catches it downstream).
-    */
-  def dedupStream(
-      docs: DataFrame, textCol: String, tsCol: String,
-      watermarkDelay: String): DataFrame =
-    docs
-      .withColumn("text_hash", md5(col(textCol)))
-      .withWatermark(tsCol, watermarkDelay)
-      .dropDuplicatesWithinWatermark("text_hash")
-
-  /** Streaming latest-wins corpus upsert — the incremental twin of
-    * the batch `Corpus.mergeLatest` (reference: vector_store.py:136
-    * add_chunks / :482 delete_paper arriving as a live feed instead
-    * of a batch). Keyed state holds ONE KeyLatest per key (the
-    * winning version only — state size is the live key set, never the
-    * update history); each micro-batch folds its updates into the
-    * state and emits the key's new current row, tombstones included.
-    *
-    * Same resolution rule as the batch view: higher version wins;
-    * ties resolve by (payload, deleted) ordering — deterministic, and
-    * writers should make versions unique per key.
-    */
-  def latestWinsStream(
-      updates: Dataset[UpsertEvent]): Dataset[CurrentRow] = {
-    import updates.sparkSession.implicits._
-    implicit val ord: Ordering[KeyLatest] =
-      Ordering.by(s => (s.version, s.payload, s.deleted))
-    updates
-      .groupByKey(_.key)
-      .mapGroupsWithState[KeyLatest, CurrentRow](GroupStateTimeout.NoTimeout) {
-        (key: Long, it: Iterator[UpsertEvent], state: GroupState[KeyLatest]) =>
-          val incoming = it.map(e => KeyLatest(e.version, e.payload, e.deleted))
-          val best = (incoming ++ state.getOption.iterator).max
-          state.update(best)
-          CurrentRow(key, best.version, best.payload, best.deleted)
-      }
-  }
 
   /** Stateful streaming sessionization: gap-based sessions per user
     * via flatMapGroupsWithState — the streaming twin of the batch
@@ -204,79 +37,6 @@ object StreamingAggs {
     *    is what bounds state size at 100 TB/day: open sessions only,
     *    keyed by user, expired by watermark, never a full history).
     */
-  /** Streaming twin of Events.transitionMatrix: per-user last-event
-    * state chains each arriving event to its predecessor and emits
-    * the (prev, next) pair immediately; the matrix itself is the
-    * downstream rollup (a windowed count or the sink's aggregation),
-    * because a streaming GLOBAL matrix would be an ever-growing
-    * complete-mode aggregate. State is ONE tiny row per active user;
-    * `idleSecs` evicts users idle past the watermark, so at 100
-    * TB/day of events the store holds only the active-user frontier
-    * (the sessionizeStream bound). An evicted user's chain simply
-    * restarts on return — no pair spans the idle gap, the documented
-    * trade for bounded state. Ordering parity with the batch twin is
-    * scoped to WITHIN a micro-batch: events sort by
-    * (event time, event_id) — the batch lag window's tiebreak — so
-    * same-second multi-event users chain identically whenever their
-    * same-second events land in one micro-batch. Same-second events
-    * SPLIT ACROSS micro-batches chain in arrival order: the earlier
-    * batch's pair is already emitted (Append mode cannot retract), so
-    * a later-arriving smaller event_id cannot be re-ordered ahead of
-    * the stored last event — carrying event_id in the state would not
-    * change this, which is why the state stores only (secs, type).
-    * That residual divergence folds into the same disorder caveat as
-    * sessionizeStream's disorderDelay: it is exactly a cross-batch
-    * disorder phenomenon, bounded by one pair per split.
-    *
-    * `idleSecs` must be strictly positive: a zero timeout lands the
-    * state's timeout timestamp exactly AT the last event's time,
-    * which can be <= the current watermark — Spark rejects that with
-    * an IllegalArgumentException mid-batch (r14 advice), so refuse
-    * it at plan time instead.
-    */
-  def transitionStream(
-      events: Dataset[TypedEvent], idleSecs: Long,
-      disorderDelay: String = "0 seconds"): Dataset[TransitionPair] = {
-    require(idleSecs > 0,
-      s"transitionStream: idleSecs must be > 0 (a zero timeout can " +
-        s"land at-or-before the watermark and fail mid-batch), " +
-        s"got $idleSecs")
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", disorderDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[LastEvent, TransitionPair](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, it: Iterator[TypedEvent],
-         state: GroupState[LastEvent]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            // (sec, event_id) — the batch lag window's exact ordering
-            val evs = it
-              .map(e => (e.ts.getTime / 1000L, e.event_id, e.event_type))
-              .toSeq.sortBy(e => (e._1, e._2))
-            val out = Seq.newBuilder[TransitionPair]
-            var last = state.getOption
-            evs.foreach { case (sec, _, t) =>
-              last.foreach(l => out += TransitionPair(l.event_type, t))
-              last = Some(LastEvent(sec, t))
-            }
-            last.foreach { l =>
-              state.update(l)
-              // same late-group clamp as sessionizeStream: a timeout
-              // below the watermark is an API error that kills the
-              // query, not a droppable row
-              state.setTimeoutTimestamp(math.max(
-                (l.secs + idleSecs) * 1000L,
-                state.getCurrentWatermarkMs() + 1000L))
-            }
-            out.result().iterator
-          }
-      }
-  }
-
   def sessionizeStream(
       events: Dataset[SessionEvent], gapSecs: Long,
       disorderDelay: String = "0 seconds"): Dataset[ClosedSession] = {

@@ -4,8 +4,21 @@ import graft.operators.Multimodal
 
 class MultimodalSpec extends SparkSpec {
 
+  /** Deterministic synthetic media table: payload bytes derived from
+    * media_id, kinds cycling image / audio / video.
+    */
+  private def syntheticMedia(n: Int) = {
+    import spark.implicits._
+    spark.range(n.toLong).map { i =>
+      val kind = if (i % 3 == 0) "image" else if (i % 3 == 1) "audio" else "video"
+      val payload = Array.tabulate[Byte](64 + (i % 64).toInt)(j =>
+        ((i * 31 + j * 7) % 256).toByte)
+      Multimodal.MediaRow(i, kind, payload, 64, 48, 16000)
+    }
+  }
+
   test("extractFeatures decodes batches into fixed-dim features") {
-    val media = Multimodal.syntheticMedia(spark, 100)
+    val media = syntheticMedia(100)
     val feats = Multimodal.extractFeatures(media, batchSize = 16).collect()
     assert(feats.length == 100)
     assert(feats.forall(_.features.length == Multimodal.FakeDecoder.FeatureDim))
@@ -17,7 +30,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("sampleFrames emits evenly-spaced deterministic frame slices") {
-    val media = Multimodal.syntheticMedia(spark, 30)
+    val media = syntheticMedia(30)
     val frames = Multimodal.sampleFrames(media, 4).collect()
     // only video rows produce frames
     assert(frames.map(_.media_id).distinct.forall(_ % 3 == 2))
@@ -35,18 +48,8 @@ class MultimodalSpec extends SparkSpec {
     assert(frames.forall(f => again((f.media_id, f.frame_index)) == f.frame.toSeq))
   }
 
-  test("resizeGrid subsamples to the target shape deterministically") {
-    val src = Array.tabulate[Byte](64 * 48)(i => (i % 251).toByte)
-    val out = Multimodal.resizeGrid(src, 64, 48, 8, 6)
-    assert(out.length == 8 * 6)
-    val again = Multimodal.resizeGrid(src, 64, 48, 8, 6)
-    assert(out.toSeq == again.toSeq)
-    // upscale also lands on the target shape
-    assert(Multimodal.resizeGrid(src, 64, 48, 128, 96).length == 128 * 96)
-  }
-
   test("partitionByKind co-locates modalities") {
-    val media = Multimodal.syntheticMedia(spark, 30).toDF()
+    val media = syntheticMedia(30).toDF()
     val parted = Multimodal.partitionByKind(media, 3)
     assert(parted.rdd.getNumPartitions == 3)
     import org.apache.spark.sql.functions._
@@ -86,7 +89,7 @@ class MultimodalSpec extends SparkSpec {
 
     // re-encoded copy: id 100 is id 0's payload with ONE byte nudged
     // (a re-compressed upload); id 101 is unrelated content
-    val base = MM.syntheticMedia(spark, 12).collect()
+    val base = syntheticMedia(12).collect()
     val dup = base.head.payload.clone()
     dup(5) = (dup(5) + 1).toByte
     val media = (base.toSeq :+

@@ -26,15 +26,6 @@ class SkewSpec extends SparkSpec {
     assert(plain.count(_._2 == "hot") == 82)
   }
 
-  test("saltedCountSum matches the plain aggregation") {
-    val plain = big.groupBy(col("k"))
-      .agg(count(lit(1)).as("cnt"), sum(col("v")).as("sum_value"))
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    val salted = Skew.saltedCountSum(big, "k", "v", col("row_id"), 8)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    assert(salted == plain)
-  }
-
   test("salting actually spreads the hot key across buckets") {
     val buckets = big.where(col("k") === 1L)
       .withColumn("_salt", pmod(col("row_id").cast("long"), lit(8L)))

@@ -24,14 +24,6 @@ class SourcesSpec extends SparkSpec {
     assert(back.where(col("lang") === "de").count() == 1)
   }
 
-  test("csv round-trip with declared schema") {
-    val dir = Files.createTempDirectory("graft_csv").toString
-    docs.write.mode("overwrite").option("header", "true").csv(dir)
-    val back = Corpus.readCsv(spark, dir, Corpus.documentsSchema)
-    assert(back.count() == 3)
-    assert(back.select(sum(col("n_chars"))).head.getLong(0) == 51L)
-  }
-
   test("partitioned write prunes partitions in the scan") {
     val dir = Files.createTempDirectory("graft_part").toString + "/docs"
     Corpus.writePartitioned(docs, dir, Seq("lang"))

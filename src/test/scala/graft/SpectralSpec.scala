@@ -44,31 +44,24 @@ class SpectralSpec extends SparkSpec {
   }
 
   test("two disjoint edges: two zero eigenvalues = two components") {
-    val df = Seq(("a", "b", 1.0), ("c", "d", 0.5)).toDF("ga", "gb", "w")
-    val row = Spectral.spectralFeatures(df, "ga", "gb", "w", k = 3).head()
-    assert(row.getAs[Long]("n_nodes") == 4L)
-    assert(row.getAs[Long]("num_components") == 2L)
-    // each component is a single edge -> spectrum {0, 2} twice
-    assert(math.abs(row.getAs[Double]("spectral_radius") - 2.0) < Eps)
-    assert(math.abs(row.getAs[Double]("spectral_gap")) < Eps)
-    assert(math.abs(row.getAs[Double]("algebraic_connectivity")) < Eps)
-    assert(row.getAs[scala.collection.Seq[Double]]("top_eigenvalues")
-      .length == 3)
+    val ev = eigs(Seq(("a", "b", 1.0), ("c", "d", 0.5)))
+    assert(ev.length == 4)
+    assert(ev.count(e => math.abs(e) < 1e-10) == 2)
+    // each component is a single edge -> spectrum {0, 2} twice: the
+    // radius is 2 and the gap (= algebraic connectivity) is 0
+    assert(math.abs(ev.last - 2.0) < Eps)
+    assert(math.abs(ev(1) - ev(0)) < Eps)
+    assert(math.abs(ev(1)) < Eps)
   }
 
   test("connected graph: exactly one zero eigenvalue, gap = connectivity") {
-    val df = Seq(("a", "b", 1.0), ("b", "c", 1.0)).toDF("ga", "gb", "w")
-    val row = Spectral.spectralFeatures(df, "ga", "gb", "w").head()
-    assert(row.getAs[Long]("num_components") == 1L)
-    assert(math.abs(row.getAs[Double]("algebraic_connectivity") - 1.0) < Eps)
-    assert(math.abs(row.getAs[Double]("spectral_gap") - 1.0) < Eps)
+    val ev = eigs(Seq(("a", "b", 1.0), ("b", "c", 1.0)))
+    assert(ev.count(e => math.abs(e) < 1e-10) == 1)
+    assert(math.abs(ev(1) - 1.0) < Eps)
+    assert(math.abs((ev(1) - ev(0)) - 1.0) < Eps)
   }
 
   test("empty edge list yields an empty spectrum row") {
-    val df = Seq.empty[(String, String, Double)].toDF("ga", "gb", "w")
-    val row = Spectral.spectralFeatures(df, "ga", "gb", "w").head()
-    assert(row.getAs[Long]("n_nodes") == 0L)
-    assert(row.getAs[Long]("num_components") == 0L)
-    assert(row.getAs[Double]("spectral_radius") == 0.0)
+    assert(eigs(Seq.empty).isEmpty)
   }
 }

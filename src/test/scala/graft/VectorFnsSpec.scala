@@ -172,12 +172,6 @@ class VectorFnsSpec extends SparkSpec {
     assert(r.getSeq[String](0) == Seq("a b", "b c", "c d"))
   }
 
-  test("l2DistSq computes squared euclidean distance") {
-    val df = Seq((Array(1.0f, 2.0f), Array(4.0f, 6.0f))).toDF("a", "b")
-    val d = df.select(VectorFns.l2DistSq($"a", $"b")).head().getDouble(0)
-    assert(d === 25.0)
-  }
-
   test("signCode buckets by sign pattern of leading dims") {
     val df = Seq(
       (Array(1.0f, -1.0f, 1.0f, 1.0f), "a"),
