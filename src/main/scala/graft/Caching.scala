@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftshim.SessionShim
 
 /** Cache lifecycle contract for graft operators.
@@ -8,8 +8,7 @@ import org.apache.spark.sql.graftshim.SessionShim
   * Several operators `cache()` an internal frame that appears on BOTH
   * sides of a self-join (Dedup's blocked self-join, which six Dedup
   * pair generators share, Stats correlationEdges/markerStats,
-  * VectorSearch.centroidSimilarity, Pack.packShards, Embed's long
-  * form): aliased
+  * Pack.packShards, Embed's long form): aliased
   * self-join sides of the same uncached frame defeat ReuseExchange, so
   * without the cache the upstream pipeline is computed once PER SIDE.
   * Those cached frames are part of the (lazy) plan the operator
@@ -49,16 +48,16 @@ import org.apache.spark.sql.graftshim.SessionShim
   * between.
   *
   * One deliberate exception: ITERATIVE operators
-  * (Dedup.connectedComponents) materialize per-round state via eager
-  * `localCheckpoint` instead of `cache()` — checkpointing is what
-  * truncates the otherwise exponentially-growing round lineage, and
-  * those blocks live OUTSIDE the CacheManager: `clearOperatorCaches`
-  * does not drop them; the ContextCleaner reclaims them once the
-  * superseded round's DataFrame is unreachable and a GC runs (the
-  * bench harnesses System.gc() between runs; local sessions also set
-  * spark.cleaner.periodicGC.interval=1min). The blocks are
-  * label-scale (node, component) rows — bookkeeping, not data
-  * volume.
+  * (Dedup.connectedComponents, Stats.labelPropagation) materialize
+  * per-round state via [[truncateLineage]] instead of `cache()` —
+  * checkpointing is what truncates the otherwise exponentially-growing
+  * round lineage, and those blocks live OUTSIDE the CacheManager:
+  * `clearOperatorCaches` does not drop them; the ContextCleaner
+  * reclaims them once the superseded round's DataFrame is unreachable
+  * and a GC runs (the bench harnesses System.gc() between runs; local
+  * sessions also set spark.cleaner.periodicGC.interval=1min). The
+  * blocks are label-scale (node, component) rows — bookkeeping, not
+  * data volume.
   */
 object Caching {
 
@@ -74,4 +73,21 @@ object Caching {
     */
   def noCachedPlans(spark: SparkSession): Boolean =
     SessionShim.cacheIsEmpty(spark)
+
+  /** `df` with its lineage truncated under the storage rule (r14) of
+    * the iterative operators and the in-place writers. With a
+    * checkpoint dir (`sparkContext.setCheckpointDir`) it is a RELIABLE
+    * `checkpoint()`: files that survive an executor loss, and that
+    * cost a fixed small write per round where executor-memory blocks
+    * churned under heap pressure (sf10 iteration walls jittered
+    * 75-196 s). Without one it is a `localCheckpoint`: executor-memory
+    * blocks, no files to manage. `eager = false` defers the local
+    * checkpoint to the frame's first action, so a round that acts on
+    * its frame right away pays one job, not two; the reliable
+    * checkpoint is always eager, because a lazy one recomputes the
+    * frame in a second job to write its files.
+    */
+  private[graft] def truncateLineage(df: DataFrame, eager: Boolean = true): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
+    else df.localCheckpoint(eager)
 }

@@ -56,11 +56,8 @@ object VectorFns {
   def cosinePrenormed(a: Column, b: Column, normA: Column, normB: Column): Column =
     dot(a, b) / nullif(normA * normB, lit(0.0))
 
-  /** Element-wise mean of grouped vectors, long-form helper: callers
-    * posexplode to (id, pos, v) rows, groupBy(id, pos).avg, and
-    * re-assemble if needed. Kept long-form on purpose: at 100 TB the
-    * long layout aggregates map-side and never materialises wide
-    * arrays in the shuffle.
+  /** The vector widened element-wise to array<double> (a NULL element
+    * stays NULL).
     */
   def asDouble(a: Column): Column = transform(a, x => x.cast("double"))
 

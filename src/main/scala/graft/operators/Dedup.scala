@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Caching
 import graft.functions.{TextFns, VectorFns}
 
 /** Deduplication family for LLM-training-data pipelines: exact,
@@ -639,52 +640,20 @@ object Dedup {
     * pathological chain into a loud failure rather than a silently
     * wrong clustering.
     *
-    * Lineage is TRUNCATED each round with an eager localCheckpoint
-    * (the standard iterative-algorithm pattern — GraphX/ALS do the
-    * same): without it, round n's logical plan contains round n−1's
-    * plan TWICE (once in the union, once under the join), so the
-    * analyzer re-walks 2ⁿ copies of the whole upstream pair-generator
-    * subtree by round n — tens of seconds of driver CPU on a
-    * millisecond-sized graph. After truncation every round analyzes a
-    * constant-size plan over the materialized blocks. Storage
-    * strategy (r14): when the session has a checkpoint dir
-    * (`sparkContext.setCheckpointDir`), every truncation uses a
-    * RELIABLE checkpoint — per-round label files on stable storage
-    * instead of executor-memory blocks. That buys (a) mid-algorithm
-    * fault recovery at 100 TB (an executor loss replays from files,
-    * not from scratch) and (b) memory-pressure immunity: under a
-    * heap-bound sf10 run the localCheckpoint block churn (store,
-    * evict to disk, re-fetch each round, racing the ContextCleaner)
-    * is what made iteration walls jitter 75-196 s; label-scale file
-    * writes are a fixed small cost per round instead. Without a
-    * checkpoint dir it falls back to localCheckpoint (right for
-    * interactive/local runs — no files to manage).
+    * Lineage is TRUNCATED each round (the standard iterative-algorithm
+    * pattern — GraphX/ALS do the same): without it, round n's logical
+    * plan contains round n−1's plan TWICE (once in the union, once
+    * under the join), so the analyzer re-walks 2ⁿ copies of the whole
+    * upstream pair-generator subtree by round n — tens of seconds of
+    * driver CPU on a millisecond-sized graph. After truncation every
+    * round analyzes a constant-size plan over the materialized blocks,
+    * stored by Caching.truncateLineage's rule (r14).
     * Output: (node, component, cluster_size) — component = min node
     * id reachable, engine-independent.
     */
   def connectedComponents(
       pairs: DataFrame, aCol: String, bCol: String,
       maxIters: Int = 25): DataFrame = {
-    // eager lineage truncation: reliable when a checkpoint dir is
-    // set, executor-memory blocks otherwise (see scaladoc)
-    def truncate(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint()
-      else df.localCheckpoint()
-    // LAZY lineage truncation for the per-round label frames (r21):
-    // every round's frame is materialized by its own sumOf action
-    // immediately after creation, so a non-eager localCheckpoint
-    // persists the blocks as a side effect of the certificate job —
-    // one action per round instead of two (the checkpoint job + the
-    // certificate job), halving the round-trip count of the whole
-    // iteration. The reliable-checkpoint branch stays EAGER: a lazy
-    // reliable checkpoint re-computes the frame in a second job to
-    // write the files (ReliableCheckpointRDD), which would undo the
-    // saving exactly where rounds are most expensive.
-    def truncateLazy(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint()
-      else df.localCheckpoint(false)
     // materialize the pair frame ONCE — both direction branches and
     // every round's join read it, and without a checkpoint/cache the
     // entire upstream pair generator would re-plan AND re-run per
@@ -692,7 +661,7 @@ object Dedup {
     // pairs: duplicate or mirrored edges are harmless under an
     // idempotent min, so the defensive distinct (a full shuffle per
     // round budget) buys nothing.
-    val p = truncate(pairs.select(col(aCol).as("src"), col(bCol).as("dst")))
+    val p = Caching.truncateLineage(pairs.select(col(aCol).as("src"), col(bCol).as("dst")))
     // NOTE (r21, measured): pre-partitioning edges on the per-round
     // join key (repartition("dst") before the checkpoint) does NOT
     // remove the per-round edge-side Exchange under AQE — AQE re-plans
@@ -707,20 +676,25 @@ object Dedup {
     // round 0 is folded into the seed: min(self, neighbors) comes
     // straight off the edge list in one aggregate — the identity
     // labelling plus its propagation round would cost two extra
-    // actions for a state every graph leaves immediately
-    var labels = truncateLazy(edges.groupBy(col("src").as("node"))
-      .agg(min(least(col("src"), col("dst"))).as("component")))
+    // actions for a state every graph leaves immediately.
+    // LAZY truncation for the per-round label frames (r21): every
+    // round's frame is materialized by its own sumOf action right
+    // after creation, so a non-eager localCheckpoint persists the
+    // blocks as a side effect of the certificate job — one action per
+    // round instead of two
+    var labels = Caching.truncateLineage(edges.groupBy(col("src").as("node"))
+      .agg(min(least(col("src"), col("dst"))).as("component")), eager = false)
     // materializes the seed AND computes its certificate in one job
     var cert = sumOf(labels)
     var converged = false
     var iter = 0
     while (!converged && iter < maxIters) {
-      val next = truncateLazy(labels
+      val next = Caching.truncateLineage(labels
         .unionAll(edges
           .join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
           .select(col("src").as("node"), col("component")))
         .groupBy(col("node"))
-        .agg(min(col("component")).as("component")))
+        .agg(min(col("component")).as("component")), eager = false)
       // ONE action: materializes `next` (persisting its blocks via
       // the lazy checkpoint) and computes the certificate. `labels`
       // appears twice in next's plan but is already materialized by

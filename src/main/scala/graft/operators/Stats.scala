@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Caching
+
 /** Grouped differential statistics — the Spark-native re-expression
   * of the reference's RNA-seq differential-expression subsystem
   * (reference: rnaseq_pipeline/agents/agent1_deg.py:168 _run_deseq2,
@@ -319,11 +321,7 @@ object Stats {
     */
   def labelPropagation(
       edges: DataFrame, aCol: String, bCol: String,
-      maxIters: Int = 10, sizeAttach: String = "window",
-      autoJoinThreshold: Long = 1L << 20): DataFrame = {
-    require(Set("window", "join", "auto")(sizeAttach),
-      s"labelPropagation: sizeAttach must be 'window', 'join' or " +
-        s"'auto', got '$sizeAttach'")
+      maxIters: Int = 10): DataFrame = {
     val integral = Set[org.apache.spark.sql.types.DataType](
       org.apache.spark.sql.types.ByteType,
       org.apache.spark.sql.types.ShortType,
@@ -333,26 +331,11 @@ object Stats {
       require(integral.contains(edges.schema(c).dataType),
         s"labelPropagation: $c must be integral (node ids double as " +
           s"labels), got ${edges.schema(c).dataType}") }
-    def truncate(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint()
-      else df.localCheckpoint()
-    // LAZY truncation for per-round label frames (r21, the
-    // connectedComponents device): each round's frame is materialized
-    // by the convergence-check action right after creation, so a
-    // non-eager localCheckpoint persists blocks as a side effect of
-    // that job — one action per round instead of two. The
-    // reliable-checkpoint branch stays eager (a lazy reliable
-    // checkpoint recomputes the frame to write its files).
-    def truncateLazy(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint()
-      else df.localCheckpoint(false)
     // NOTE (r21, measured): pre-partitioning und on the per-round join
     // key does NOT remove the per-round edge-side Exchange under AQE —
     // AQE re-plans from the logical plan and ignores LogicalRDD's
     // preserved outputPartitioning (probe: works only with AQE off).
-    val und = truncate(edges
+    val und = Caching.truncateLineage(edges
       .select(col(aCol).cast("long").as("src"),
         col(bCol).cast("long").as("dst"))
       .where(col("src") =!= col("dst"))
@@ -360,7 +343,7 @@ object Stats {
         col(aCol).cast("long").as("dst"))
         .where(col("src") =!= col("dst")))
       .distinct())
-    var labels = truncate(
+    var labels = Caching.truncateLineage(
       und.select(col("src").as("node")).distinct()
         .withColumn("label", col("node")))
     var iter = 0
@@ -377,11 +360,13 @@ object Stats {
       // two exchanges per round; Mode's partial buffers are per-src
       // label-count maps, so the map-side combine the first aggregate
       // provided is preserved inside the single (src)-keyed exchange.
-      val next = truncateLazy(und
+      // LAZY truncation (r21, the connectedComponents device): the
+      // convergence check below materializes the frame right away.
+      val next = Caching.truncateLineage(und
         .join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
         .groupBy(col("src"))
         .agg(mode(col("label"), deterministic = true).as("label"))
-        .select(col("src").as("node"), col("label")))
+        .select(col("src").as("node"), col("label")), eager = false)
       // ONE action per round: the convergence check materializes
       // `next` (persisting its blocks via the lazy checkpoint) while
       // it runs. The limit's early exit can leave partitions
@@ -394,64 +379,11 @@ object Stats {
       labels = next
       iter += 1
     }
-    // Community sizes, two shipped shapes (sizeAttach):
-    //
-    //  - "window" (default): ONE window count over the label key —
-    //    NOT a broadcast join: |communities| is O(|nodes|) on sparse/
-    //    fragmented graphs (many tiny communities is the TYPICAL LPA
-    //    outcome), so a hinted broadcast of the size frame is
-    //    node-scale and blows the driver at exactly the lake scale
-    //    this operator targets. One exchange of the (node, label)
-    //    frame by label — the volume a shuffled size join would
-    //    move, minus the second exchange and the join. Cost model,
-    //    honestly: WindowExec SORTS each partition by label and
-    //    buffers one label's rows at a time, so a giant community is
-    //    an un-splittable straggler task (AQE skew-splits joins, not
-    //    windows). Right for the target graphs, whose communities
-    //    are panel-/cluster-sized.
-    //  - "join" (r19, the mega-community shape): map-side-combined
-    //    groupBy(label).count (tiny exchange — one row per label per
-    //    mapper) + an UNHINTED label-keyed join back. Unhinted is
-    //    load-bearing twice over: when the size frame is genuinely
-    //    small AQE converts to broadcast from MEASURED runtime bytes
-    //    (safe, unlike a row-count guess at plan time), and when it
-    //    is node-scale the sort-merge join's skewed label partition
-    //    is splittable by AQE — the exact mitigation WindowExec
-    //    cannot have. Use for dup-cluster-style graphs where one
-    //    community can hold a constant fraction of the corpus
-    //    (r19, 8 M-node star + 800 k background pairs, min-of-3:
-    //    window 25.1 s vs join 20.1 s, checksums identical).
-    //  - "auto" (r20): DATA-DERIVED pick between the two. The join
-    //    path's own build side — the map-side-combined
-    //    groupBy(label).count — is aggregated once more to its max
-    //    (an O(|labels|) job over the already-checkpointed labels;
-    //    LPA has run a convergence-check job per iteration, one more
-    //    decision job is in character). A max community at or above
-    //    `autoJoinThreshold` rows picks "join" (past ~1 M buffered
-    //    rows the window's un-splittable straggler task dominates —
-    //    r20 on the 8 M-node star: auto picked join at 34.2 s vs
-    //    window 37.3 s / join 32.9 s); below it,
-    //    "window" (one exchange, no join, right for panel-sized
-    //    communities). The threshold is a row count, not bytes,
-    //    because WindowExec's buffer cost is per-row.
-    def labelSizes = labels.groupBy(col("label"))
-      .agg(count(lit(1)).as("community_size"))
-    val attach = sizeAttach match {
-      case "auto" =>
-        val r = labelSizes.agg(max(col("community_size"))).head()
-        val biggest = if (r.isNullAt(0)) 0L else r.getLong(0)
-        if (biggest >= autoJoinThreshold) "join" else "window"
-      case s => s
-    }
-    val sized = attach match {
-      case "window" =>
-        labels.withColumn("community_size",
-          count(lit(1)).over(Window.partitionBy(col("label"))))
-      case _ =>
-        labels.join(labelSizes, Seq("label"))
-    }
-    sized.select(col("node"), col("label").as("community"),
-      col("community_size"))
+    // Community sizes: ONE window count over the label key, not a
+    // broadcast of the size frame, which is node-scale on fragmented
+    // graphs (many tiny communities is the typical LPA outcome).
+    labels.withColumn("community_size", count(lit(1)).over(Window.partitionBy(col("label"))))
+      .select(col("node"), col("label").as("community"), col("community_size"))
   }
 
   def closenessCentrality(

@@ -388,9 +388,7 @@ object TextAnalysis {
     * Scale shape: the threshold aggregate is ONE 1-row reduction,
     * broadcast back over the scan — the corpus is read, never
     * shuffled. This EXACT form (`percentile`) buffers values per
-    * partial aggregate and exists for oracle parity; at lake scale
-    * use `percentileGateApprox` (Greenwald-Khanna sketch, bounded
-    * memory) — the spec pins the two agree at tested accuracy.
+    * partial aggregate, for oracle parity.
     *
     * Integer-valued scores make the gate robust to last-ulp
     * interpolation drift: a fractional threshold can only flip
@@ -412,28 +410,6 @@ object TextAnalysis {
         round(col("q_hi") + lit(1e-9), 4).as("q_hi"))
   }
 
-  /** The lake-scale twin of `percentileGate` AS RUNNABLE CODE:
-    * `percentile_approx` (Greenwald-Khanna, bounded state per
-    * partial) replaces the exact value-buffering percentile. Same
-    * output contract; TextSpec pins agreement at tested accuracy.
-    */
-  def percentileGateApprox(
-      scored: DataFrame, idCol: String, scoreCol: String,
-      pLow: Double, pHigh: Double, accuracy: Int = 10000): DataFrame = {
-    require(pLow >= 0 && pHigh <= 1 && pLow < pHigh,
-      s"percentileGateApprox: need 0 <= pLow < pHigh <= 1, got $pLow/$pHigh")
-    val thr = scored.agg(
-      expr(s"percentile_approx($scoreCol, $pLow, $accuracy)")
-        .cast("double").as("q_lo"),
-      expr(s"percentile_approx($scoreCol, $pHigh, $accuracy)")
-        .cast("double").as("q_hi"))
-    scored.crossJoin(broadcast(thr))
-      .where(col(scoreCol).between(col("q_lo"), col("q_hi")))
-      .select(col(idCol), col(scoreCol),
-        round(col("q_lo") + lit(1e-9), 4).as("q_lo"),
-        round(col("q_hi") + lit(1e-9), 4).as("q_hi"))
-  }
-
   /** Per-stratum percentile band gate — the form CCNet actually
     * ships (per-LANGUAGE perplexity buckets): each stratum gets its
     * own distribution-derived cuts, so a language whose scores run
@@ -442,9 +418,8 @@ object TextAnalysis {
     * `percentileGate` otherwise.
     *
     * Scale shape: the threshold frame is ONE |strata|-row aggregate
-    * (exact percentile buffers per stratum partial — swap
-    * percentile_approx at lake scale, the percentileGateApprox
-    * twin's rule), broadcast back over the scan.
+    * (exact percentile buffers per stratum partial, as in
+    * `percentileGate`), broadcast back over the scan.
     */
   def percentileGateBy(
       scored: DataFrame, idCol: String, scoreCol: String,

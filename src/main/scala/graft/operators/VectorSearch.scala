@@ -1,10 +1,11 @@
 package graft.operators
 
+import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
+import org.apache.spark.ml.stat.Summarizer
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.{Literal, Sqrt}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, StructField, StructType}
@@ -182,44 +183,25 @@ object VectorSearch {
         (col("pos") + 1).cast("long").as("rnk"))
   }
 
-  /** Element-wise mean vector per group, in long (group, pos, v) form.
-    * Long form keeps the aggregation map-side combinable and never
-    * shuffles wide arrays (reference: vector_store.py:508 averages
-    * chunk embeddings per paper).
-    */
-  def groupCentroids(
-      vectors: DataFrame, groupCol: String, vecCol: String): DataFrame =
-    vectors
-      .select(col(groupCol), posexplode(VectorFns.asDouble(col(vecCol)))
-        .as(Seq("pos", "v")))
-      .groupBy(col(groupCol), col("pos"))
-      .agg(avg("v").as("v"))
-
-  /** Pairwise cosine between group centroids (long-form join on pos —
-    * centroid count is small so this stays broadcast-sized).
+  /** Pairwise cosine between group centroids: the array centroids
+    * self-joined under `ga < gb` (|groups|² pairs, centroid-scale),
+    * each pair scored with `round(cosinePrenormed, 6)`. A pair with no
+    * defined cosine (a zero-norm centroid, or two centroids of
+    * different lengths) is dropped. The score comes out of a generator,
+    * as in topKDefined, so the NULL filter is not pushed into the join
+    * condition with a second `vec_dot` per pair. Uncached: AQE reuses
+    * the centroid aggregate's exchange for both sides (ProfileAll
+    * sf0.01: 6 jobs and 7 KB shuffled; cached, 7 jobs and 7 KB).
     */
   def centroidSimilarity(
       vectors: DataFrame, groupCol: String, vecCol: String): DataFrame = {
-    // cached: norms + both join sides read it (graft.Caching lifecycle)
-    val c = groupCentroids(vectors, groupCol, vecCol).cache()
-    val norms = c.groupBy(col(groupCol))
-      .agg(sum(col("v") * col("v")).as("ns"))
-    val a = c.select(col(groupCol).as("ga"), col("pos"), col("v").as("va"))
-    val b = c.select(col(groupCol).as("gb"), col("pos"), col("v").as("vb"))
-    a.join(b, Seq("pos"))
-      .where(col("ga") < col("gb"))
-      .groupBy(col("ga"), col("gb"))
-      .agg(sum(col("va") * col("vb")).as("dot"))
-      .join(broadcast(norms).withColumnRenamed(groupCol, "ga")
-        .withColumnRenamed("ns", "nsa"), Seq("ga"))
-      .join(broadcast(norms).withColumnRenamed(groupCol, "gb")
-        .withColumnRenamed("ns", "nsb"), Seq("gb"))
-      .select(col("ga"), col("gb"),
-        // nullif: a zero-norm centroid (all-zero group) has no
-        // defined cosine — the repo-wide guard against ANSI 0/0
-        round(col("dot") /
-          nullif(sqrt(col("nsa")) * sqrt(col("nsb")), lit(0.0)), 6)
-          .as("centroid_cos"))
+    val c = centroidArrays(vectors, groupCol, vecCol)
+      .withColumn("cnrm", VectorFns.l2Norm(col("centroid")))
+    val a = c.select(col(groupCol).as("ga"), col("centroid").as("ca"), col("cnrm").as("na"))
+    val b = c.select(col(groupCol).as("gb"), col("centroid").as("cb"), col("cnrm").as("nb"))
+    a.join(b, col("ga") < col("gb"))
+      .select(col("ga"), col("gb"), explode(array(round(VectorFns.cosinePrenormed(
+        col("ca"), col("cb"), col("na"), col("nb")), 6))).as("centroid_cos"))
       .where(col("centroid_cos").isNotNull)
   }
 
@@ -233,31 +215,25 @@ object VectorSearch {
     * degrades, and the check costs two narrow scans instead of a
     * re-index.
     *
-    * Scale shape: each side collapses to (group, pos) centroid rows
-    * via the map-side-combinable long form (groupCentroids — wide
-    * arrays never shuffle), the join/cosine runs on those bounded
-    * |groups|·d frames, and the row counts are two more partial
-    * aggregates broadcast back. Groups present in only one snapshot
-    * have no defined drift and are absent (sparse contract).
+    * Scale shape: each side collapses to one centroid row per group
+    * (centroidArrays, one map-side-combined aggregate), the two
+    * |groups|-row frames join on the group and are scored with
+    * centroidSimilarity's cosine, and the row counts are two more
+    * partial aggregates broadcast back. Groups present in only one
+    * snapshot have no defined drift and are absent (sparse contract).
     */
   def embDrift(
       oldVecs: DataFrame, newVecs: DataFrame,
       groupCol: String, vecCol: String, minCos: Double): DataFrame = {
     require(minCos >= -1.0 && minCos <= 1.0,
       s"embDrift: minCos must be in [-1, 1], got $minCos")
-    val co = groupCentroids(oldVecs, groupCol, vecCol)
-      .select(col(groupCol), col("pos"), col("v").as("vo"))
-    val cn = groupCentroids(newVecs, groupCol, vecCol)
-      .select(col(groupCol), col("pos"), col("v").as("vn"))
-    val sims = co.join(cn, Seq(groupCol, "pos"))
-      .groupBy(col(groupCol))
-      .agg(sum(col("vo") * col("vn")).as("dot"),
-        sum(col("vo") * col("vo")).as("nso"),
-        sum(col("vn") * col("vn")).as("nsn"))
+    val co = centroidArrays(oldVecs, groupCol, vecCol)
+      .select(col(groupCol), col("centroid").as("co"))
+    val cn = centroidArrays(newVecs, groupCol, vecCol)
+      .select(col(groupCol), col("centroid").as("cn"))
+    val sims = co.join(cn, Seq(groupCol))
       .select(col(groupCol),
-        round(col("dot") /
-          nullif(sqrt(col("nso")) * sqrt(col("nsn")), lit(0.0)), 6)
-          .as("centroid_cos"))
+        round(VectorFns.cosine(col("co"), col("cn")), 6).as("centroid_cos"))
     val nOld = oldVecs.groupBy(col(groupCol))
       .agg(count(lit(1)).as("n_old"))
     val nNew = newVecs.groupBy(col(groupCol))
@@ -271,16 +247,32 @@ object VectorSearch {
           .otherwise("stable").as("status"))
   }
 
-  /** Centroids as dense arrays (pos-sorted), one row per group: a
-    * codebook for assignCells and the IVF probes.
+  /** Element-wise mean vector per group, one row per group
+    * (`groupCol`, `centroid` as array<double>): the centroids of
+    * centroidSimilarity, embDrift and Lloyd, and a codebook for
+    * assignCells and the IVF probes (reference: vector_store.py:508
+    * averages chunk embeddings per paper). One aggregate, MLlib's
+    * `Summarizer.mean` over the vectors widened to doubles: its
+    * per-group buffer is combined map-side, so the exchange carries
+    * one d-wide partial per group per map partition.
+    *
+    * Bad-input rule:
+    *  - a NULL vector, an empty one, or one with a NULL element enters
+    *    no mean;
+    *  - a group left with no vector has no row;
+    *  - a group whose vectors differ in length is refused: the job
+    *    fails (Summarizer's dimension-mismatch error);
+    *  - a NaN element makes its position's mean NaN; an infinite one
+    *    makes it ±Infinity or NaN (by order of arrival), so a cosine
+    *    against that centroid is NaN (NULL against a zero vector).
     */
   def centroidArrays(
       vectors: DataFrame, groupCol: String, vecCol: String): DataFrame =
-    groupCentroids(vectors, groupCol, vecCol)
+    vectors
+      .where(size(col(vecCol)) > 0 && !exists(col(vecCol), _.isNull))
       .groupBy(col(groupCol))
-      .agg(transform(
-        array_sort(collect_list(struct(col("pos"), col("v")))),
-        x => x.getField("v")).as("centroid"))
+      .agg(vector_to_array(Summarizer.mean(array_to_vector(VectorFns.asDouble(col(vecCol)))))
+        .as("centroid"))
 
   /** Nearest-centroid assignment — the shared building block of IVF and
     * Lloyd/k-means training. The codebook (`groupCol`, `centroid`) is
@@ -356,13 +348,13 @@ object VectorSearch {
 
   /** Deterministic spherical k-means (Lloyd) codebook trainer: init =
     * the k lowest-id vectors, numbered 0..k-1 in id order, then `iters`
-    * rounds of narrow kernel assignment + long-form mean (lloyd, with
+    * rounds of narrow kernel assignment + per-cell mean (lloyd, with
     * the cosine objective). Per iteration the corpus is scanned once
-    * with zero exchange (assignment) and only (cell, pos, sum) rows
-    * shuffle — the general codebook path when no natural cells exist.
-    * Cosine (spherical) assignment matches the retrieval metric.
-    * Deterministic: id-ordered init, tie-to-smallest-cell assignment,
-    * sequential-order means.
+    * with zero exchange (assignment) and only the per-cell partial
+    * means shuffle (centroidArrays) — the general codebook path when
+    * no natural cells exist. Cosine (spherical) assignment matches the
+    * retrieval metric. Deterministic: id-ordered init,
+    * tie-to-smallest-cell assignment.
     *
     * The codebook can end up with FEWER than k cells: duplicate seed
     * vectors collapse under cosine assignment, and a cell that wins
@@ -410,9 +402,11 @@ object VectorSearch {
     * lloydCentroids (cosine) and Pq.train (L2): `seeds(i)` is cell i's
     * initial centroid, then each of `iters` rounds assigns every
     * training vector (see `trains`) with one NearestCell pass under
-    * `objective` and collects the long-form means (one job) into a
-    * local relation that the next round reads without a job. A NULL
-    * cell (no centroid of its length) enters no mean; it comes out of
+    * `objective` and collects the per-cell means (centroidArrays, one
+    * job) into a local relation that the next round reads without a
+    * job. A cell's vectors all share its centroid's length, so the mean
+    * never meets centroidArrays' mixed-length refusal. A NULL cell (no
+    * centroid of its length) enters no mean; it comes out of
     * a generator, as in assignCells. Iteration n's plan never nests
     * iteration n−1's, so there is no lineage to truncate.
     */
@@ -431,38 +425,49 @@ object VectorSearch {
     cents
   }
 
+  /** The most (query, cell) probe scores annIvfBatch collects — |Q|·K
+    * for Q queries over a K-cell codebook; a larger batch is refused
+    * (split it, or use knnJoin).
+    */
+  val MaxProbeRows = 100000
+
   /** Batch IVF ANN: top-k per query for a WHOLE query set, scoring
     * only probed cells — the bulk-retrieval scale path (knnJoin
     * scores |C|·|Q| pairs; here each candidate is scored only against
     * the queries probing its cell, ~nprobe/K of the query set).
     *
-    * Shape: one zero-exchange assignment pass over the corpus (see
-    * assignCells), a |Q|·K probe ranking (driver-scale window), then
-    * candidates join the broadcast probe list and the broadcast query
-    * vectors, reduced per query by the bounded map-side TopKAgg.
-    * Requires integral query ids (TopKAgg contract, like knnJoin).
+    * Shape: the codebook is collected once into a local relation (as
+    * in annIvf); one zero-exchange assignment pass over the corpus (see
+    * assignCells); the |Q|·K (query, cell, pcos) scores — probeCells'
+    * projection, with the query vector as a column — are collected
+    * (refused above MaxProbeRows) and each query's cells ranked on the
+    * driver by rankCells; then candidates join the local probe list
+    * and the broadcast query vectors, reduced per query by the bounded
+    * map-side TopKAgg. A NULL or zero-norm query probes its first
+    * nprobe cells by cell and answers nothing. Requires integral query
+    * ids (TopKAgg contract, like knnJoin).
     */
   def annIvfBatch(
       candidates: DataFrame, queries: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String, qId: String, qVec: String,
       groupCol: String, nprobe: Int, k: Int): DataFrame = {
-    val cents = centroids
-      .select(col(groupCol).as("cgroup"), col("centroid"))
-      .withColumn("gnrm", VectorFns.l2Norm(col("centroid")))
     val qs = queries.select(col(qId), col(qVec))
       .withColumn("qnrm", VectorFns.l2Norm(col(qVec)))
-    val assigned = assignCells(candidates, centroids, idCol, vecCol, groupCol)
-    // nprobe cells per query — |Q|·K rows, pruned per query by a
-    // window (driver-scale: query batch × codebook, never the corpus)
-    val probes = cents
-      .crossJoin(broadcast(qs.select(col(qId), col(qVec), col("qnrm"))))
-      .withColumn("pcos", round(VectorFns.cosinePrenormed(
-        col("centroid"), col(qVec), col("gnrm"), col("qnrm")), 6))
-      .withColumn("prn", row_number().over(
-        Window.partitionBy(col(qId))
-          .orderBy(col("pcos").desc, col("cgroup"))))
-      .where(col("prn") <= nprobe)
-      .select(col(qId).as("pq"), col("cgroup").as("cell"))
+    val book = local(centroids.select(col(groupCol).as("cgroup"), col("centroid")))
+    val assigned = assignCells(candidates, book, idCol, vecCol, "cgroup")
+    val scores = book
+      .crossJoin(qs.select(col(qId), col(qVec), col("qnrm")))
+      .select(col(qId), col("cgroup"), probeScore(col(qVec), col("qnrm")))
+      .limit(MaxProbeRows + 1).collect()
+    require(scores.length <= MaxProbeRows,
+      s"annIvfBatch: more than MaxProbeRows=$MaxProbeRows (query, cell) probe scores")
+    val cellType = centroids.schema(groupCol).dataType
+    val probed = scores.toSeq.groupBy(_.get(0)).toSeq.flatMap { case (q, rows) =>
+      rankCells(cellType, rows.map(r => (r.get(1), r.get(2))), nprobe).map(Row(q, _))
+    }
+    val probes = qs.sparkSession.createDataFrame(java.util.Arrays.asList(probed: _*),
+      StructType(Seq(StructField("pq", qs.schema(qId).dataType),
+        StructField("cell", cellType))))
     val scored = assigned
       .join(broadcast(probes), Seq("cell"))
       .join(broadcast(qs), col("pq") === col(qId))
@@ -498,13 +503,15 @@ object VectorSearch {
   private[operators] def probeCells(
       q: QueryVec, centroids: DataFrame, groupCol: String,
       nprobe: Int): Seq[Any] = {
-    val pairs = centroids
-      .select(col(groupCol), round(VectorFns.cosinePrenormed(col("centroid"), q.vec,
-        VectorFns.l2Norm(col("centroid")), q.norm), 6))
-      .collect()
+    val pairs = centroids.select(col(groupCol), probeScore(q.vec, q.norm)).collect()
     rankCells(centroids.schema(groupCol).dataType, pairs.toSeq.map(r => (r.get(0), r.get(1))),
       nprobe)
   }
+
+  /** A codebook row's probe score (pcos), which probeCells and annIvfBatch rank by. */
+  private def probeScore(qVec: Column, qNorm: Column): Column =
+    round(VectorFns.cosinePrenormed(col("centroid"), qVec, VectorFns.l2Norm(col("centroid")),
+      qNorm), 6)
 
   /** The first `nprobe` cells of (cell, pcos) pairs in the order of
     * `orderBy(pcos.desc, cell).limit(nprobe)`: pcos descending with a

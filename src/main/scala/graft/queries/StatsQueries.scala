@@ -540,8 +540,8 @@ object StatsQueries {
        |  WHERE rn = 1)""".stripMargin
 
   /** Lloyd centroid-recompute block: new centroid c(n+1) = per-cell
-    * dimension means of the vectors assigned in as(n) (mirrors
-    * centroidArrays' long-form avg).
+    * dimension means of the vectors assigned in as(n) (the per-position
+    * mean centroidArrays computes, equal up to last-bit rounding).
     */
   private def meanSql(n: Int): String =
     s"""c${n + 1} AS (SELECT a.cell, evv.i, avg(evv.v) AS v

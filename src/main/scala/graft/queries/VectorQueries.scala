@@ -208,7 +208,7 @@ object VectorQueries {
   /** Per-paper similar-papers top-k (reference: vector_store.py:538
     * find_similar_papers — mean chunk embedding per paper, cosine
     * top-k against every OTHER paper). Papers = label groups; the
-    * composition is groupCentroids → knnJoin with centroids on BOTH
+    * composition is centroidArrays → knnJoin with centroids on BOTH
     * sides, so the per-paper selection still goes through the bounded
     * map-side TopKAgg. The self-pair (cosine exactly 1.0) is excluded
     * after a k+1 bounded selection and rank recomputed over the

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Caching
+
 /** Corpus ingestion + persistence — the Spark-native re-expression of
   * the reference's file-based corpus flow
   * (reference: backend/app/core/corpus_builder.py — JSON paper dumps →
@@ -125,16 +127,16 @@ object Corpus {
     * The count + repartition pair is the normal cost of a
     * maintenance job; it never runs on the query path.
     *
-    * The merged frame is MATERIALIZED with an eager localCheckpoint
-    * before the write, severing the plan from the source relation —
-    * so the natural IN-PLACE call (compact `path` back into `path`)
-    * works instead of tripping Spark's overwrite-while-reading
-    * check. Trade-off (the connectedComponents localCheckpoint
-    * rule): checkpoint blocks are non-reliable storage, so an
-    * executor loss between the overwrite's delete and commit can
-    * lose the snapshot. A 100 TB run compacts into a NEW snapshot
-    * dir and swaps the table pointer instead — in-place is the
-    * single-node/maintenance-window convenience.
+    * The merged frame is MATERIALIZED before the write
+    * (Caching.truncateLineage), severing the plan from the source
+    * relation — so the natural IN-PLACE call (compact `path` back into
+    * `path`) works instead of tripping Spark's overwrite-while-reading
+    * check. With a checkpoint dir the copy is reliable files, which
+    * survive an executor loss between the overwrite's delete and
+    * commit; without one it is executor-memory blocks, which do not. A
+    * 100 TB run compacts into a NEW snapshot dir and swaps the table
+    * pointer instead — in-place is the single-node/maintenance-window
+    * convenience.
     */
   def compactLog(
       log: DataFrame, keyCols: Seq[String], versionCol: String,
@@ -142,8 +144,7 @@ object Corpus {
       targetRowsPerFile: Long): Long = {
     require(targetRowsPerFile > 0,
       s"compactLog: targetRowsPerFile must be positive: $targetRowsPerFile")
-    val merged = mergeLatest(log, keyCols, versionCol, deletedCol)
-      .localCheckpoint()
+    val merged = Caching.truncateLineage(mergeLatest(log, keyCols, versionCol, deletedCol))
     val n = merged.count()
     // clamp before .toInt: a tiny target over a lake-scale corpus
     // must degrade to max partitions, not wrap negative

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Caching
 import graft.sources.Corpus
 
 /** Exactly-once streaming upsert sink: merge-on-write into a
@@ -90,16 +91,11 @@ object StreamingSink {
     // (straggler safety — see the object doc). The merged frame is
     // MATERIALIZED before the write — its plan reads `path`, which
     // the write overwrites, and Spark (rightly) refuses
-    // overwrite-while-reading on a live plan. Reliable checkpoint
-    // when the session has a checkpoint dir (the compactLog /
-    // connectedComponents storage rule: survives executor loss
-    // between the overwrite's delete and commit), executor-memory
-    // localCheckpoint otherwise (the local/test convenience).
-    val merged = Corpus.mergeLatest(all, keyCols, versionCol, None)
-    val mat =
-      if (spark.sparkContext.getCheckpointDir.isDefined) merged.checkpoint()
-      else merged.localCheckpoint()
-    Corpus.overwritePartitions(mat, path, Seq("bkt"))
+    // overwrite-while-reading on a live plan. Caching.truncateLineage
+    // is reliable when the session has a checkpoint dir (survives
+    // executor loss between the overwrite's delete and commit).
+    val merged = Caching.truncateLineage(Corpus.mergeLatest(all, keyCols, versionCol, None))
+    Corpus.overwritePartitions(merged, path, Seq("bkt"))
   }
 
   /** The reader's view of the store: latest rows with tombstoned

@@ -21,7 +21,7 @@ class CacheLifecycleSpec extends SparkSpec {
     "dedup_exact", // Dedup via shared shingle cache paths: none — control
     "dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_ngram_prefix",
     "dedup_simhash", "dedup_embcos", "dedup_embcos_mb",
-    "pack_shards", "vs_centroid_sim", "vs_similar_papers",
+    "pack_shards", "vs_similar_papers",
     "deg_network", "deg_hub", "sc_markers", "deg_validate",
     "emb_tfidf_topk", "ev_funnel", "decontam_ngram",
     "dedup_cluster", "rerank_fused",

@@ -135,19 +135,45 @@ class DedupSpec extends SparkSpec {
 
   test("connectedComponents switches to RELIABLE per-round checkpoints " +
     "when the session has a checkpoint dir, with identical labeling") {
+    import graft.operators.Stats
+    import graft.sources.Corpus
+    // the same storage rule (Caching.truncateLineage) holds for
+    // labelPropagation's rounds and for an in-place compactLog: each
+    // gives the rows of its localCheckpoint run and writes files under
+    // a fresh checkpoint dir
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b")
-    def run(): Map[Long, Long] =
+    val log = Seq((1L, 0L, 10L, false), (1L, 1L, 11L, false), (2L, 0L, 20L, false),
+      (2L, 1L, 20L, true), (3L, 0L, 30L, false)).toDF("doc_id", "version", "n", "deleted")
+    def cc(): Map[Long, Long] =
       Dedup.connectedComponents(pairs, "a", "b")
         .select("node", "component").as[(Long, Long)].collect().toMap
-    val viaLocal = run()
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt")
-    spark.sparkContext.setCheckpointDir(dir.toString)
-    try {
-      assert(run() == viaLocal)
-      // the rounds' label RDDs actually landed on stable storage
+    def lpa(): Set[(Long, Long, Long)] =
+      Stats.labelPropagation(pairs, "a", "b").as[(Long, Long, Long)].collect().toSet
+    // compacts a fresh copy of the log IN PLACE: the merge reads the
+    // path it overwrites
+    def compactInPlace(): Set[(Long, Long, Long, Boolean)] = {
+      val path = java.nio.file.Files.createTempDirectory("graft_compact_ckpt").toString
+      log.write.mode("overwrite").parquet(path)
+      val n = Corpus.compactLog(spark.read.parquet(path), Seq("doc_id"), "version",
+        Some("deleted"), path, targetRowsPerFile = 2L)
+      assert(n == 2L)
+      spark.read.parquet(path).as[(Long, Long, Long, Boolean)].collect().toSet
+    }
+    val viaLocal = (cc(), lpa(), compactInPlace())
+    def underFreshDir[T](body: => T): T = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt")
+      spark.sparkContext.setCheckpointDir(dir.toString)
+      val out = body
+      // the frames actually landed on stable storage
       val files = java.nio.file.Files.walk(dir)
         .filter(p => java.nio.file.Files.isRegularFile(p)).count()
       assert(files > 0, s"no reliable checkpoint files under $dir")
+      out
+    }
+    try {
+      assert(underFreshDir(cc()) == viaLocal._1)
+      assert(underFreshDir(lpa()) == viaLocal._2)
+      assert(underFreshDir(compactInPlace()) == viaLocal._3)
     } finally {
       // the fixture session is shared across suites — restore the
       // no-checkpoint-dir default so later specs keep exercising the

@@ -320,7 +320,7 @@ class IvfSpec extends SparkSpec {
 
   test("lloydCentroids equals its window-seeded, HOF-assigned twin") {
     // the twin: row_number-numbered seeds and the aggregate fold,
-    // each round's codebook rebuilt from the same long-form mean
+    // each round's codebook rebuilt from the same centroidArrays mean
     def twin(vectors: DataFrame, k: Int, iters: Int): DataFrame = {
       var cents = vectors.orderBy(col("vec_id")).limit(k)
         .withColumn("cell", (row_number().over(Window.orderBy(col("vec_id"))) - 1).cast("int"))
@@ -341,7 +341,7 @@ class IvfSpec extends SparkSpec {
   test("Pq.train's L2 Lloyd equals its window-seeded, HOF-assigned twin per subspace") {
     // the twin is Pq's former trainer: row_number-numbered seeds over
     // the sliced sub-vectors and the L2 aggregate fold, each round's
-    // codebook rebuilt from the same long-form mean
+    // codebook rebuilt from the same centroidArrays mean
     def twin(vectors: DataFrame, k: Int, iters: Int): DataFrame = {
       var cents = vectors.orderBy(col("vec_id")).limit(k)
         .withColumn("cell", (row_number().over(Window.orderBy(col("vec_id"))) - 1).cast("int"))
@@ -411,5 +411,72 @@ class IvfSpec extends SparkSpec {
       "null element" -> Seq(null, 1.0, 1.0, null))
     bad.foreach { case (name, v) => assert(sorted(train(Seq(v))) == want, name) }
     assert(sorted(train(bad.map(_._2))) == want)
+  }
+
+  /** annIvfBatch's former probe ranking: the |Q|·K (query, cell) scores
+    * of a broadcast cross join, ranked per query by a `row_number`
+    * window over (pcos desc, cell), then the same candidate join and
+    * TopKAgg tail (here a knnJoin over each query's probed cells).
+    */
+  private def annIvfBatchWindow(candidates: DataFrame, queries: DataFrame,
+      centroids: DataFrame, nprobe: Int, k: Int): DataFrame = {
+    val probes = centroids
+      .withColumn("gnrm", VectorFns.l2Norm(col("centroid")))
+      .crossJoin(broadcast(queries.withColumn("qnrm", VectorFns.l2Norm(col("qe")))))
+      .withColumn("pcos", round(VectorFns.cosinePrenormed(
+        col("centroid"), col("qe"), col("gnrm"), col("qnrm")), 6))
+      .withColumn("prn", row_number().over(
+        Window.partitionBy(col("qid")).orderBy(col("pcos").desc, col("cell"))))
+      .where(col("prn") <= nprobe)
+      .select(col("qid"), col("cell"))
+    val assigned = VectorSearch.assignCells(candidates, centroids, "vec_id", "embedding", "cell")
+    probes.collect().toSeq.map(r => (r.getLong(0), r.getInt(1))).groupBy(_._1).toSeq
+      .map { case (q, cells) =>
+        VectorSearch.knnJoin(assigned.where(col("cell").isin(cells.map(_._2): _*)),
+          queries.where(col("qid") === q), "vec_id", "embedding", "qid", "qe", k)
+      }.reduceOption(_ unionByName _)
+      .getOrElse(spark.emptyDataFrame)
+  }
+
+  test("annIvfBatch ranks each query's probes as the row_number window did: " +
+    "a NULL or zero-norm query answers nothing, a pcos tie goes to the " +
+    "smaller cell; a batch over MaxProbeRows is refused") {
+    import spark.implicits._
+    // cell 4 duplicates cell 1, so a query near them ties on pcos; the
+    // window (and rankCells) probe cell 1, which holds the candidates
+    // (assignment ties to the smallest cell too)
+    val book = bookFrame(Seq(0 -> Seq(1.0, 0.0), 1 -> Seq(0.0, 1.0), 4 -> Seq(0.0, 1.0),
+      3 -> Seq(-1.0, 0.0)), IntegerType, identity)
+    val cands = (0 until 40).map { i =>
+      val a = i * math.Pi / 20
+      (i.toLong, Array(math.cos(a).toFloat, math.sin(a).toFloat))
+    }.toDF("vec_id", "embedding")
+    val qs = spark.createDataFrame(java.util.Arrays.asList(
+      Row(1L, Seq(0.1f, 1.0f)), Row(2L, null), Row(3L, Seq(0.0f, 0.0f)),
+      Row(4L, Seq(0.7f, -0.7f)), Row(5L, Seq(-1.0f, 0.2f))),
+      StructType(Seq(StructField("qid", LongType), StructField("qe", ArrayType(FloatType)))))
+    def rows(df: DataFrame) = df.select("qid", "vec_id", "cos_sim", "rnk")
+      .as[(Long, Long, Double, Long)].collect().sorted.toSeq
+    Seq(1, 2).foreach { nprobe =>
+      val got = rows(VectorSearch.annIvfBatch(cands, qs, book, "vec_id", "embedding",
+        "qid", "qe", "cell", nprobe, k = 3))
+      assert(got == rows(annIvfBatchWindow(cands, qs, book, nprobe, k = 3)), s"nprobe $nprobe")
+      assert(got.map(_._1).distinct == Seq(1L, 4L, 5L), s"nprobe $nprobe: $got")
+    }
+    // nprobe = 1: query 1 (at 84.3°) ties cells 1 and 4 and probes
+    // cell 1, which holds the vectors at 54°…135°; the nearest three
+    // are at 81°, 90° and 72°
+    val tied = VectorSearch.annIvfBatch(cands, qs.where(col("qid") === 1L), book,
+      "vec_id", "embedding", "qid", "qe", "cell", 1, k = 3).collect()
+    assert(tied.map(_.getAs[Long]("vec_id")).toSeq == Seq(9L, 10L, 8L),
+      tied.toSeq)
+    // |Q|·K = (MaxProbeRows + 1) · 1 probe scores
+    val many = spark.range(VectorSearch.MaxProbeRows + 1L)
+      .select(col("id").as("qid"), array(lit(1.0), lit(0.0)).as("qe"))
+    val oneCell = bookFrame(Seq(0 -> Seq(1.0, 0.0)), IntegerType, identity)
+    intercept[IllegalArgumentException] {
+      VectorSearch.annIvfBatch(cands, many, oneCell, "vec_id", "embedding", "qid", "qe",
+        "cell", 1, k = 1)
+    }
   }
 }

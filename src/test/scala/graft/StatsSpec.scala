@@ -414,6 +414,20 @@ class StatsSpec extends SparkSpec {
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(again == out)
+    // the same on bridged cliques + a dominant star community + an
+    // isolated pair, where one label can hold most of the nodes; each
+    // community_size is its community's node count
+    val starred = (edges.as[(Long, Long)].collect().toSeq ++ Seq((70L, 71L)) ++
+      (101L to 160L).map(l => (100L, l))).toDF("a", "b")
+    def pull(e: org.apache.spark.sql.DataFrame) =
+      Stats.labelPropagation(e, "a", "b").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
+    val star = pull(starred)
+    assert(star.length == 6 + 2 + 61)
+    assert(pull(starred.repartition(7)) == star)
+    star.groupBy(_._2).foreach { case (c, members) =>
+      assert(members.forall(_._3 == members.length.toLong), s"community $c: $members")
+    }
     // non-integral ids are refused (the argmax negates labels)
     intercept[IllegalArgumentException] {
       Stats.labelPropagation(
@@ -448,61 +462,5 @@ class StatsSpec extends SparkSpec {
       .agg(mode($"label", deterministic = true).as("label"))
       .queryExecution.executedPlan.toString
     assert("Exchange".r.findAllIn(plan).size <= 1, plan)
-  }
-
-  test("labelPropagation size-attach paths are equal: join (the " +
-    "mega-community shape) == window (the default)") {
-    import spark.implicits._
-    // bridged cliques + a dominant star community + an isolated pair:
-    // the join path must reproduce the window path exactly, including
-    // on a graph where one label holds most of the nodes (the regime
-    // the join path exists for; r19 measured the straggler delta at
-    // scale: 8 M-node star, window 25.1 s vs join 20.1 s)
-    val star = (101L to 160L).map(l => (100L, l))
-    val edges = (Seq((1L, 2L), (2L, 3L), (1L, 3L),
-      (4L, 5L), (5L, 6L), (4L, 6L), (3L, 4L), (70L, 71L)) ++ star)
-      .toDF("a", "b")
-    def pull(sizeAttach: String) =
-      Stats.labelPropagation(edges, "a", "b", sizeAttach = sizeAttach)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .sortBy(_._1).toSeq
-    val window = pull("window")
-    val join = pull("join")
-    assert(join == window)
-    // and on a repartitioned input (layout independence holds for
-    // the join path too)
-    val joinRepart = Stats
-      .labelPropagation(edges.repartition(7), "a", "b",
-        sizeAttach = "join")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1).toSeq
-    assert(joinRepart == window)
-    // auto (r20): the pick is DATA-DERIVED from the converged labels'
-    // max community size, output equal either way; the chosen path is
-    // observable as a Window node in the plan (or its absence)
-    def usesWindow(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.optimizedPlan.collect {
-        case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
-      }.nonEmpty
-    val autoSmall =
-      Stats.labelPropagation(edges, "a", "b", sizeAttach = "auto")
-    assert(usesWindow(autoSmall),
-      "62-row max community is panel-sized — auto must pick window")
-    assert(autoSmall.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1).toSeq == window)
-    val autoBig = Stats.labelPropagation(edges, "a", "b",
-      sizeAttach = "auto", autoJoinThreshold = 10L)
-    assert(!usesWindow(autoBig),
-      "star community above the threshold — auto must pick join")
-    assert(autoBig.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1).toSeq == window)
-    // unknown shapes are refused, not silently defaulted
-    intercept[IllegalArgumentException] {
-      Stats.labelPropagation(edges, "a", "b", sizeAttach = "broadcast")
-    }
   }
 }

@@ -40,9 +40,7 @@ class SurfaceAuditSpec extends AnyFunSuite {
     "Stats.closenessCentrality" ->
       "README row: co-expression network, the small-graph centrality branch",
     "Spectral.laplacianEigenvalues" ->
-      "README row: co-expression network, operators.Spectral",
-    "TextAnalysis.percentileGateApprox" ->
-      "approx twin of percentileGate; deletion is an open ROADMAP item 6 candidate")
+      "README row: co-expression network, operators.Spectral")
 
   private val Scanned = Seq("src/main/scala", "graftbench/src", "tools")
 
